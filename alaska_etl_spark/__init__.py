@@ -16,6 +16,11 @@ Layout:
   operators/   dedup family, as-of join, similarity search, text analysis
   plans/       warehouse load protocol + analytics query layer
   streaming/   incremental Structured Streaming path
+
+Subpackages do not re-export: their ``__init__`` files hold only a
+docstring, so importing one submodule loads only what that submodule
+imports. Callers import the submodule, e.g.
+``from alaska_etl_spark.plans.warehouse import Warehouse``.
 """
 
 __version__ = "0.1.0"

@@ -4,17 +4,3 @@ Every scalar operator in the reference (SURVEY §2.9) compiles to native
 ``pyspark.sql.functions`` so the hot path stays inside whole-stage
 codegen.
 """
-
-from alaska_etl_spark.functions.conversions import (  # noqa: F401
-    SENTINEL_GUARD,
-    c_to_f,
-    compose_datetime,
-    fixed_offset_utc,
-    floor_hour,
-    nullify_sentinel,
-)
-from alaska_etl_spark.functions.cleaning import (  # noqa: F401
-    normalize_column_name,
-    normalize_column_names,
-    empty_to_value,
-)

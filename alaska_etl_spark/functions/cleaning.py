@@ -1,15 +1,11 @@
-"""Column-name normalization and sentinel string cleanup (SURVEY §2.3 P4/P8).
+"""Column-name normalization (SURVEY §2.3 P4).
 
-Name normalization runs driver-side on the schema (cheap); value cleanup
-is pure Column expressions.
+Name normalization runs driver-side on the schema (cheap).
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 def normalize_column_name(name: str) -> str:
@@ -24,15 +20,3 @@ def normalize_column_name(name: str) -> str:
     n = re.sub(r"\s+", "_", n.strip())
     n = re.sub(r"_+", "_", n).strip("_")
     return n
-
-
-def normalize_column_names(df: DataFrame) -> DataFrame:
-    return df.toDF(*[normalize_column_name(c) for c in df.columns])
-
-
-def empty_to_value(col: Column | str, value) -> Column:
-    """'' sentinel → replacement (reference nws_dag.py:94:
-    ``{'gust': {'': 0}, 'wind_chill_f': {'': nan}}``). Pass ``None`` to
-    null out empties."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c == "", F.lit(value)).otherwise(c)

@@ -41,166 +41,3 @@
   fingerprint) shared by batch and streaming ingest
 - parallelism: input-width guard for compute-dense narrow pipelines
 """
-
-from alaska_etl_spark.operators.asof import asof_join  # noqa: F401
-from alaska_etl_spark.operators.bpe import (  # noqa: F401
-    bpe_segment,
-    train_bpe,
-)
-from alaska_etl_spark.operators.dedup import (  # noqa: F401
-    blocking_quality,
-    canonical_selection,
-    cdc_chunk_stats,
-    dup_cluster_sizes,
-    lsh_scurve,
-    decontaminate,
-    normalized_dedup_report,
-    dedup_exact,
-    dedup_keep_first,
-    duplicate_report,
-    duplicated_spans,
-    embedding_near_dup_pairs,
-    minhash_near_dup_pairs,
-    minhash_signature,
-    probe_lsh_index,
-    ngram_jaccard_pairs,
-    semantic_dedup,
-    simhash,
-    simhash_near_dup_pairs,
-    write_lsh_index,
-)
-from alaska_etl_spark.operators.embeddings import (  # noqa: F401
-    anisotropy_report,
-    l2_normalize,
-    label_consistency,
-    quantize_int8,
-    truncate_dims,
-)
-from alaska_etl_spark.operators.layout import (  # noqa: F401
-    layout_skipping_audit,
-    zorder_key,
-    zorder_sql,
-    zorder_write,
-)
-from alaska_etl_spark.operators.sessions import (  # noqa: F401
-    concurrency_by_day,
-    rfm_segments,
-    sequence_predictability,
-    last_touch_attribution,
-    session_stats,
-    sessionize,
-)
-from alaska_etl_spark.operators.splits import (  # noqa: F401
-    hash_sample,
-    hash_split,
-    mix_entropy,
-    mix_sources,
-    pack_sequences,
-    split_leakage,
-    top_p_coverage,
-)
-from alaska_etl_spark.operators.gate import gate_documents  # noqa: F401
-from alaska_etl_spark.operators.lm import (  # noqa: F401
-    bigram_lm_scores,
-    domain_relevance_weights,
-    perplexity_gate,
-    score_bigram_lm,
-    train_bigram_lm,
-)
-from alaska_etl_spark.operators.skew import (  # noqa: F401
-    index_build_forecast,
-    join_cardinality_forecast,
-    key_skew_report,
-    salted_aggregate,
-)
-from alaska_etl_spark.operators.parallelism import ensure_min_parallelism  # noqa: F401
-from alaska_etl_spark.operators.ranking import (  # noqa: F401
-    global_ntile,
-    global_row_number,
-    rank_biased_overlap,
-)
-from alaska_etl_spark.operators.classifier import (  # noqa: F401
-    lift_gains,
-    naive_bayes_scores,
-    reliability_diagram,
-    roc_auc,
-)
-from alaska_etl_spark.operators.geo import knn_join  # noqa: F401
-from alaska_etl_spark.operators.graph import (  # noqa: F401
-    bfs_distances,
-    k_core,
-    pagerank,
-    triangle_counts,
-)
-from alaska_etl_spark.operators.linkage import fellegi_sunter_weights  # noqa: F401
-from alaska_etl_spark.operators.pruning import bloom_pruned_semi_join  # noqa: F401
-from alaska_etl_spark.operators.similarity import (  # noqa: F401
-    ann_ndcg,
-    ann_recall,
-    cluster_separation,
-)
-from alaska_etl_spark.operators.simjoin import (  # noqa: F401
-    containment_spans,
-    excise_spans,
-    cosine_similarity_join,
-    jaccard_similarity_join,
-    longest_shared_runs,
-)
-from alaska_etl_spark.operators.sketch_store import (  # noqa: F401
-    merged_distinct_count,
-    merged_quantiles,
-    write_sketch_rollup,
-)
-from alaska_etl_spark.operators.sketches import (  # noqa: F401
-    decimal_quantiles,
-    heavy_hitters,
-    misra_gries_partials_by,
-)
-from alaska_etl_spark.operators.stats import (  # noqa: F401
-    ab_test_report,
-    benford_audit,
-    categorical_mutual_info,
-    contingency_effect_sizes,
-    eta_squared,
-    split_conformal,
-    ks_two_sample,
-    corr_matrix,
-    cuped_adjustment,
-    histogram_profile,
-    poisson_bootstrap_ci,
-    psi_drift,
-    grouped_linreg,
-    winsorize_report,
-)
-from alaska_etl_spark.operators.splits import (  # noqa: F401
-    mixture_report,
-    token_waterfill,
-    stratified_sample,
-    temperature_sample,
-    weighted_sample,
-)
-from alaska_etl_spark.operators.text import (  # noqa: F401
-    bm25_topk,
-    boilerplate_grams,
-    ngram_diversity,
-    repetition_signals,
-    zipf_slope,
-)
-from alaska_etl_spark.operators.urls import (  # noqa: F401
-    blocklist_audit,
-    blocklist_filter,
-    canonical_url,
-    domain_rollup,
-    host_suffix_chain,
-    path_prefix_chain,
-    registrable_domain,
-    url_host,
-)
-from alaska_etl_spark.operators.timeseries import (  # noqa: F401
-    activity_bitmap,
-    ewma,
-    mase_report,
-    mad_anomalies,
-    sliding_distinct,
-    zscore_anomalies,
-)

@@ -96,12 +96,6 @@ def dup_cluster_sizes(
     )
 
 
-def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact full-row (or column-subset) distinct — hash-aggregate with
-    map-side partial aggregation; the Spark form of hash-groupBy dedup."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
-
 # ---------------------------------------------------------------------------
 # shingling / tokenization helpers (shared by the near-dup family)
 # ---------------------------------------------------------------------------
@@ -189,32 +183,6 @@ def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
         b = (state >> 16) & _MASK31
         params.append((a, b))
     return params
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """MinHash signature (array<bigint> of length ``num_hashes``) over a
-    shingle array, entirely in Catalyst: xxhash64 once per shingle, then
-    an array_min per hash function over the pre-hashed values. Empty
-    shingle sets get the max hash.
-
-    Expression form (array HOFs) — fine for bounded arrays; the
-    distributed form used by :func:`minhash_near_dup_pairs` is
-    :func:`minhash_signatures_grouped` (explode + hash-aggregate), which
-    gets map-side partial aggregation and whole-stage codegen."""
-    hashed = F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 31)))
-
-    def _affine(a: int, b: int):
-        # closure, NOT default-arg capture: PySpark maps lambda arity to
-        # the HOF's argument count, so `lambda h, a=a, b=b` would bind as
-        # a 3-argument transform and fail analysis
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE)
-
-    sigs = []
-    for a, b in _hash_params(num_hashes, seed):
-        sigs.append(
-            F.coalesce(F.array_min(F.transform(hashed, _affine(a, b))), F.lit(_MERSENNE))
-        )
-    return F.array(*sigs)
 
 
 def minhash_signatures_grouped(
@@ -987,54 +955,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-
-def simhash(col: Column | str, *, bits: int = 64) -> Column:
-    """64-bit SimHash fingerprint of a text column, pure Catalyst.
-
-    Per token: xxhash64 → ±1 vote per bit; fingerprint bit b is set when
-    the summed vote is positive. Implemented as one F.aggregate
-    accumulating a 64-long vote array, then folded into a single BIGINT
-    (bitwise, so bit 63 wrapping negative is fine).
-    """
-    toks = word_tokens(col)
-    # per-token bit votes unrolled driver-side (bits is a Python int;
-    # a nested HOF lambda capturing the outer token variable won't bind)
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("bigint"), bits),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(F.xxhash64(t), b).bitwiseAND(F.lit(1)) == 1,
-                        F.lit(1).cast("bigint"),
-                    ).otherwise(F.lit(-1).cast("bigint"))
-                    for b in range(bits)
-                ]
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    def _fold(v):
-        # v is the bound votes array (bound ONCE via the single-element
-        # transform below — referencing `votes` 64× would duplicate the
-        # whole aggregate subtree); bit 63 is the long sign bit.
-        terms = [
-            F.when(
-                v.getItem(b) > 0,
-                F.lit(1 << b if b < 63 else -(1 << 63)).cast("bigint"),
-            )
-            .otherwise(F.lit(0).cast("bigint"))
-            for b in range(bits)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out.bitwiseOR(t)
-        return out
-
-    return F.get(F.transform(F.array(votes), _fold), 0)
 
 
 def simhash_fingerprints_grouped(

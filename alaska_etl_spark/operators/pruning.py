@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
+from alaska_etl_spark.plans.warehouse import fs_and_path
+
 __all__ = [
     "bloom_params",
     "build_bloom",
@@ -233,12 +235,8 @@ def bloom_sidecar_read(spark, path: str):
     :func:`bloom_sidecar_write`; returns (packed uint8 array, m_bits,
     n_hashes) or None when the sidecar does not exist. Any OTHER read
     failure raises — the caller decides to rebuild, never silently."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        jvm.java.net.URI.create(path), conf
-    )
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
+    fs, p = fs_and_path(spark, path)
+    if not fs.exists(p):
         return None
     # toPandas (Arrow), not collect: a 10⁷-key filter is ~36 MB of
     # binary — the py4j row path shuttles that through the gateway
@@ -327,11 +325,9 @@ def bloom_sidecar_load(spark, path: str):
         return None
     packed, m_bits, n_hashes = got
     n_delta = 0
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     dpath = f"{path}/delta"
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(dpath), conf)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(dpath)):
+    fs, p = fs_and_path(spark, dpath)
+    if fs.exists(p):
         pos = spark.read.schema(_DELTA_SCHEMA).parquet(dpath).toPandas()
         n_delta = len(pos)
         if n_delta:
@@ -347,11 +343,7 @@ def bloom_sidecar_compact(
     leaves base ⊇ deltas and the deltas still present — the next load
     re-ORs them into the same filter (idempotent), never loses a bit."""
     bloom_sidecar_write(spark, f"{path}/base", packed, m_bits, n_hashes)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    dpath = f"{path}/delta"
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(dpath), conf)
-    p = jvm.org.apache.hadoop.fs.Path(dpath)
+    fs, p = fs_and_path(spark, f"{path}/delta")
     if fs.exists(p):
         fs.delete(p, True)
 

@@ -1,13 +1,1 @@
 """Warehouse load protocol + the analytics query layer."""
-
-from alaska_etl_spark.plans.warehouse import (  # noqa: F401
-    Warehouse,
-    apply_changelog,
-    diff_snapshots,
-    fk_check,
-    scd2_merge,
-)
-from alaska_etl_spark.plans.analytics import (  # noqa: F401
-    forecast_vs_actual,
-    lead_time_error,
-)

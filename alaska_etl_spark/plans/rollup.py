@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from alaska_etl_spark.functions.fixedpoint import div_half_up
+from alaska_etl_spark.plans.warehouse import fs_and_path
 
 DAY_COL = "_day"
 
@@ -98,8 +99,7 @@ def refresh_rollup(
     rollup are never read or written.
     """
     newp = hourly_partials(batch, key_cols=key_cols, ts_col=ts_col, val_col=val_col)
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = fs_and_path(spark, path)
     if not fs.exists(hpath):
         newp.write.mode("overwrite").partitionBy(DAY_COL).parquet(path)
         return

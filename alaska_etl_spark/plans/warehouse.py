@@ -372,15 +372,6 @@ class Warehouse:
 
     # -- maintenance: compaction and key-merge ---------------------------
 
-    def _fs_and_path(self, path: str):
-        return fs_and_path(self.spark, path)
-
-    def _data_bytes(self, path: str) -> int:
-        return data_bytes(self.spark, path)
-
-    def _swap_in(self, tmp: str, live: str) -> None:
-        swap_in(self.spark, tmp, live)
-
     def compact(
         self,
         table: str,
@@ -407,7 +398,7 @@ class Warehouse:
             raise ValueError(f"compaction needs a path format, not {self.fmt!r}")
         spec = self._spec(table)
         live = spec["target"]
-        n_files = max(1, -(-self._data_bytes(live) // target_file_bytes))
+        n_files = max(1, -(-data_bytes(self.spark, live) // target_file_bytes))
         df = self._read_spec(spec)
         tmp_spec = self._spec(f"{table}__compact_tmp")
         if partition_col is not None:
@@ -416,7 +407,7 @@ class Warehouse:
             )
         else:
             self._write_spec(df.coalesce(n_files), tmp_spec, "overwrite")
-        self._swap_in(tmp_spec["target"], live)
+        swap_in(self.spark, tmp_spec["target"], live)
         return n_files
 
     def merge_upsert(
@@ -473,7 +464,7 @@ class Warehouse:
             return
         tmp_spec = self._spec(f"{table}__merge_tmp")
         self._write_spec(merged, tmp_spec, "overwrite")
-        self._swap_in(tmp_spec["target"], spec["target"])
+        swap_in(self.spark, tmp_spec["target"], spec["target"])
 
     # -- SCD2: dimension history ------------------------------------------
 

@@ -147,17 +147,6 @@ COLUMN_DESCRIPTIONS_SCHEMA = StructType(
 )
 
 
-def map_type(units: str | None) -> str:
-    """Unit string → warehouse type name (reference
-    notebooks/1_uscrn_scrape.ipynb:516-525: 'X'→STRING, 'Y'→DATETIME,
-    else FLOAT)."""
-    if units == "X":
-        return "STRING"
-    if units == "YYYY-MM-DD HH:MM:SS" or units == "Y":
-        return "DATETIME"
-    return "FLOAT"
-
-
 _SPARK_TO_WAREHOUSE = {
     "string": "STRING",
     "double": "FLOAT",

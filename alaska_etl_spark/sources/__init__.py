@@ -4,11 +4,3 @@ Each parser takes paths or pre-read DataFrames (never the network) so
 tests are hermetic; fetchers that do network IO live behind
 :mod:`alaska_etl_spark.sources.fetch` and are injected (SURVEY §7.4).
 """
-
-from alaska_etl_spark.sources.uscrn import parse_uscrn_lines, read_uscrn  # noqa: F401
-from alaska_etl_spark.sources.wind import parse_wind_lines, read_wind  # noqa: F401
-from alaska_etl_spark.sources.nws import (  # noqa: F401
-    forecast_long_df,
-    parse_landscape_tables,
-    pivot_forecast,
-)

@@ -89,7 +89,3 @@ def hourly_wind_avg(parsed: DataFrame) -> DataFrame:
         .groupBy("station_location", "wbanno", "utc_datetime", "lst_datetime")
         .agg(F.round(F.avg("wind_1_5"), 3).alias("wind_hr_avg"))
     )
-
-
-def read_wind(spark, paths, locations: DataFrame, **kwargs) -> DataFrame:
-    return parse_wind_lines(spark.read.text(paths), locations, **kwargs)

@@ -1,7 +1,2 @@
-from alaska_etl_spark.streaming.incremental import (
-    stream_hourly_wind,
-    stream_uscrn,
-    stream_wind_readings,
-)
-
-__all__ = ["stream_uscrn", "stream_wind_readings", "stream_hourly_wind"]
+"""Incremental Structured Streaming path (``incremental``): file-source
+streams drained by ``trigger(availableNow)`` into the warehouse sinks."""

@@ -7,7 +7,7 @@ engine's built-ins.
 | watermark = max(date_added_utc) read back   | checkpointed source offsets   |
 |   from the sink (uscrn_dag.py:96-112)       |                               |
 | new-file discovery vs Last modified         | file stream source            |
-|   (uscrn_dag.py:115-131)                    |   (maxFilesPerTrigger)        |
+|   (uscrn_dag.py:115-131)                    |                               |
 | reverse scan until event-time cutoff        | withWatermark("utc_datetime") |
 |   (uscrn_wind_dag.py:152-160)               |                               |
 | 5-min → hourly mean (uscrn_wind:184-189)    | 1h tumbling window aggregate  |
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from alaska_etl_spark.cache import tracked_persist
 from alaska_etl_spark.functions.localrel import local_df
+from alaska_etl_spark.plans.warehouse import apply_changelog, data_bytes, fs_and_path, swap_in
 from alaska_etl_spark.sources.uscrn import parse_uscrn_lines
 from alaska_etl_spark.sources.wind import parse_wind_lines
 
@@ -40,8 +41,6 @@ def stream_uscrn(
     spark: SparkSession,
     path: str,
     locations: DataFrame,
-    *,
-    max_files_per_trigger: int | None = None,
     **parse_kwargs,
 ) -> DataFrame:
     """Streaming variant of sources.uscrn.read_uscrn: a file-source
@@ -50,24 +49,12 @@ def stream_uscrn(
     idempotence belongs to the sink protocol (Warehouse hash anti-join
     in foreachBatch), matching the reference's dedup-at-load placement.
     """
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(path)
+    lines = spark.readStream.format("text").load(path)
     return parse_uscrn_lines(lines, locations, dedup=False, **parse_kwargs)
 
 
-def stream_wind_readings(
-    spark: SparkSession,
-    path: str,
-    locations: DataFrame,
-    *,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(path)
+def stream_wind_readings(spark: SparkSession, path: str, locations: DataFrame) -> DataFrame:
+    lines = spark.readStream.format("text").load(path)
     return parse_wind_lines(lines, locations)
 
 
@@ -287,6 +274,20 @@ def stream_interval_join(
     return joined.drop("_lts", "_rts", *[f"_r_{k}" for k in on])
 
 
+def _drain(writer, checkpoint: str) -> None:
+    """One cron tick: start ``writer`` under ``checkpoint`` with
+    ``trigger(availableNow)``, which processes everything available now
+    in micro-batches and stops, and block until it has. The next call
+    resumes from the checkpointed offsets. Every query this module
+    starts runs through here."""
+    (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_to_warehouse(
     stream_df: DataFrame,
     warehouse,
@@ -323,13 +324,7 @@ def stream_to_warehouse(
             partition_col=partition_col,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_to_rollup(
@@ -364,13 +359,7 @@ def stream_to_rollup(
             key_cols=key_cols, ts_col=ts_col, val_col=val_col,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def run_available_now(
@@ -384,15 +373,12 @@ def run_available_now(
     equivalent of the reference's cron-triggered batch run
     (trigger(availableNow): incremental listing + checkpointed offsets,
     so the next invocation resumes where this one stopped)."""
-    q = (
+    _drain(
         stream_df.writeStream.format("parquet")
         .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        checkpoint,
     )
-    q.awaitTermination()
 
 
 def stream_documents_gate(
@@ -441,13 +427,7 @@ def stream_documents_gate(
         )
         warehouse.load(first, table, key_cols=["fingerprint"])
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def _bloom_init(spark, warehouse, table, bloom_path, capacity, fpp, key_col) -> dict:
@@ -643,13 +623,7 @@ def stream_url_frontier(
         if rejects_table is not None:
             warehouse.load(bad, rejects_table, key_cols=[id_col], store_row_hash=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_domain_quota(
@@ -851,22 +825,7 @@ def stream_domain_quota(
             maybe.unpersist()
             first.unpersist()
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _hdfs_exists(spark, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API — works for any
-    scheme Spark can read (file://, hdfs://, gs://), unlike os.path."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_near_dup_gate(
@@ -930,7 +889,8 @@ def stream_near_dup_gate(
         kept = batch_df.join(
             verdicts.filter(F.col("survivor")).select(F.col(id_col)), [id_col]
         )
-        if _hdfs_exists(spark, f"{index_path}/bands"):
+        fs, bands_p = fs_and_path(spark, f"{index_path}/bands")
+        if fs.exists(bands_p):
             dup_new = (
                 probe_lsh_index(
                     kept,
@@ -976,13 +936,7 @@ def stream_near_dup_gate(
             )
         admitted.unpersist()
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_novelty_gate(
@@ -1050,7 +1004,8 @@ def stream_novelty_gate(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        if _hdfs_exists(spark, ref_path):
+        fs, ref_p = fs_and_path(spark, ref_path)
+        if fs.exists(ref_p):
             ref = spark.read.parquet(ref_path)
         else:
             ref = spark.createDataFrame([], "gram bigint")
@@ -1074,8 +1029,6 @@ def stream_novelty_gate(
                 warehouse.read_staging(table), id_col, text_col, n=n
             ).select("gram").distinct().write.mode("append").parquet(ref_path)
             if compact_after_files is not None:
-                from alaska_etl_spark.plans.warehouse import fs_and_path
-
                 fs, jp = fs_and_path(spark, ref_path)
                 it, n_files = fs.listFiles(jp, True), 0
                 while it.hasNext():
@@ -1085,13 +1038,7 @@ def stream_novelty_gate(
                     compact_gram_reference(spark, ref_path)
         admitted.unpersist()
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def compact_gram_reference(
@@ -1133,8 +1080,6 @@ def compact_gram_reference(
     files, exactly like ``Warehouse.compact``'s partitioned branch.
     Returns ``{"rows_before", "rows_after", "files"}``.
     """
-    from alaska_etl_spark.plans.warehouse import data_bytes, swap_in
-
     df = spark.read.parquet(ref_path)
     cols = df.columns
     rows_before = df.count()
@@ -1219,13 +1164,7 @@ def stream_vocab_drift(
         )
         out.write.mode("append").parquet(metrics_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_apply_changelog(
@@ -1256,8 +1195,6 @@ def stream_apply_changelog(
     Warehouse.compact); a lakehouse table format would replace the
     directory swap with a metadata commit, leaving the plan unchanged.
     """
-    from alaska_etl_spark.plans.warehouse import apply_changelog
-
     data_cols = [c for c in stream_df.columns if c not in (op_col, seq_col)]
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
@@ -1276,19 +1213,13 @@ def stream_apply_changelog(
         tmp = warehouse._spec(f"{table}__cdc_tmp")
         warehouse._write_spec(snap, tmp, "overwrite")
         if warehouse.probe_exists(table):
-            warehouse._swap_in(tmp["target"], warehouse._path(table))
+            swap_in(spark, tmp["target"], warehouse._path(table))
         else:  # first batch: nothing live to move aside
-            fs, tmp_p = warehouse._fs_and_path(tmp["target"])
-            _, live_p = warehouse._fs_and_path(warehouse._path(table))
+            fs, tmp_p = fs_and_path(spark, tmp["target"])
+            _, live_p = fs_and_path(spark, warehouse._path(table))
             fs.rename(tmp_p, live_p)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_perceptron_train(
@@ -1338,7 +1269,8 @@ def stream_perceptron_train(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         w, it = [0] * k, 0
-        if _hdfs_exists(spark, history_path):
+        fs, history_p = fs_and_path(spark, history_path)
+        if fs.exists(history_p):
             hist = spark.read.parquet(history_path)
             if hist.filter(F.col("batch_id") == batch_id).count() > 0:
                 return  # replayed micro-batch: update already applied
@@ -1355,13 +1287,7 @@ def stream_perceptron_train(
             spark, [(it + 1, batch_id, m, *w)], schema
         ).write.mode("append").parquet(history_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_model_monitor(
@@ -1416,7 +1342,8 @@ def stream_model_monitor(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         w, it = None, None
-        if _hdfs_exists(spark, history_path):
+        fs, history_p = fs_and_path(spark, history_path)
+        if fs.exists(history_p):
             last = (
                 spark.read.parquet(history_path)
                 .orderBy(F.col("iter").desc())
@@ -1425,7 +1352,8 @@ def stream_model_monitor(
             if last is not None:
                 w = [last[f"w{j}"] for j in range(k)]
                 it = last["iter"]
-        if _hdfs_exists(spark, metrics_path):
+        fs, metrics_p = fs_and_path(spark, metrics_path)
+        if fs.exists(metrics_p):
             same_model = (
                 F.col("model_iter").isNull()
                 if it is None
@@ -1463,13 +1391,7 @@ def stream_model_monitor(
             "append"
         ).parquet(metrics_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_cusum_monitor(
@@ -1624,13 +1546,7 @@ def stream_warc_gate(
         finally:
             records.unpersist()
 
-    q = (
-        record_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(record_stream.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_admission_quota(
@@ -1844,13 +1760,7 @@ def stream_profile_monitor(
         )
         out.write.mode("append").parquet(metrics_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def _unseen_src_files(
@@ -1889,7 +1799,10 @@ def _unseen_src_files(
             "_src", F.when(blank, F.lit(key)).otherwise(F.col("_src"))
         )
         files = [f for f in files if f] + [key]
-    if not files or not _hdfs_exists(spark, store_path):
+    if not files:
+        return tagged, files
+    fs, store_p = fs_and_path(spark, store_path)
+    if not fs.exists(store_p):
         return tagged, files
     probe = local_df(spark, [(f,) for f in files], "_src string")
     stored = {
@@ -1972,7 +1885,8 @@ def stream_heavy_hitters_monitor(
                 .unionByName(n_rows) \
                 .withColumn("batch_id", F.lit(batch_id).cast("bigint")) \
                 .write.mode("append").parquet(store_path)
-        if not _hdfs_exists(spark, store_path):
+        fs, store_p = fs_and_path(spark, store_path)
+        if not fs.exists(store_p):
             return  # zero-row first batch: nothing stored yet, no metrics
         store = spark.read.parquet(store_path)
         n_total = (
@@ -1997,13 +1911,7 @@ def stream_heavy_hitters_monitor(
             )
         out.write.mode("append").parquet(metrics_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 _COMPACT_SENTINEL = "\x00compact"
@@ -2044,9 +1952,9 @@ def compact_partial_store(
     :func:`compact_gram_reference`). Returns
     ``{"rows_before", "rows_after", "kind"}``."""
     from alaska_etl_spark.operators.sketches import merge_mg_partials
-    from alaska_etl_spark.plans.warehouse import swap_in
 
-    if not _hdfs_exists(spark, store_path):
+    fs, store_p = fs_and_path(spark, store_path)
+    if not fs.exists(store_p):
         return {"rows_before": 0, "rows_after": 0, "kind": "empty"}
     store = spark.read.parquet(store_path)
     rows_before = store.count()
@@ -2144,7 +2052,8 @@ def stream_quantile_monitor(
                 .write.mode("append")
                 .parquet(store_path)
             )
-        if not _hdfs_exists(spark, store_path):
+        fs, store_p = fs_and_path(spark, store_path)
+        if not fs.exists(store_p):
             return  # zero-row first batch
         merged = (
             spark.read.parquet(store_path)
@@ -2181,13 +2090,7 @@ def stream_quantile_monitor(
             out = out.unionAll(o)
         out.write.mode("append").parquet(metrics_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)
 
 
 def stream_late_audit(
@@ -2225,7 +2128,8 @@ def stream_late_audit(
         )
         if not new_files:
             return
-        have = _hdfs_exists(spark, store_path)
+        fs, store_p = fs_and_path(spark, store_path)
+        have = fs.exists(store_p)
         hwm = None
         if have:
             hwm = (
@@ -2260,10 +2164,4 @@ def stream_late_audit(
             "batch_id bigint, n_rows bigint, n_late bigint, hwm timestamp_ntz",
         ).write.mode("append").parquet(metrics_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df.writeStream.foreachBatch(_sink), checkpoint)

@@ -4,6 +4,10 @@ report, idempotence across reruns (the golden-path test of SURVEY §5)."""
 from __future__ import annotations
 
 import datetime as dt
+import json
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,3 +138,22 @@ def test_prepare_training_data_end_to_end(spark):
         ).collect()
     }
     assert again == {(r.doc_id, r.split, r.shard, r.start_offset) for r in rows.values()}
+
+
+def test_pipelines_import_loads_only_its_operators():
+    """Subpackage ``__init__`` files re-export nothing, so importing the
+    cron pipelines loads only the operator modules they use."""
+    code = (
+        "import json, sys, alaska_etl_spark.pipelines; "
+        "print(json.dumps(sorted(m for m in sys.modules "
+        "if m.startswith('alaska_etl_spark.operators.'))))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    loaded = {m.rsplit(".", 1)[1] for m in json.loads(out)}
+    assert loaded <= {"asof", "dedup", "similarity"}, sorted(loaded)
