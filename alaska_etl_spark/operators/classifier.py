@@ -79,10 +79,8 @@ def _margin(w: list[int]) -> Column:
 def train_step(feats: DataFrame, w: list[int]) -> tuple[int, list[int]]:
     """One batch-perceptron step against weights ``w``: returns
     ``(misclassified, update_sums)`` from a single map-side-combined
-    aggregate. Shared by the batch loop (:func:`perceptron_train`) and
-    the streaming continual trainer
-    (:func:`~alaska_etl_spark.streaming.incremental.stream_perceptron_train`)
-    so the two can never drift."""
+    aggregate; one iteration of the batch loop
+    (:func:`perceptron_train`)."""
     miss = _margin(w) <= 0
     agg = feats.agg(
         F.sum(F.when(miss, 1).otherwise(0)).cast("bigint").alias("m"),

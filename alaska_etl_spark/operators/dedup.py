@@ -185,33 +185,6 @@ def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signatures_grouped(
-    shingle_tbl: DataFrame, num_hashes: int = 64, seed: int = 42
-) -> DataFrame:
-    """(_id, _sh array) → (_id, _sig array): the distributed MinHash
-    formulation — explode shingles to (id, hash) rows, one 31-bit
-    xxhash64 per shingle, then a single hash-aggregate with
-    ``num_hashes`` min() columns.
-
-    Why this beats per-row array HOFs: the aggregate is whole-stage
-    codegen'd with map-side partial mins (each partition emits one
-    ``num_hashes``-vector per doc), so at 100 TB the shuffle carries
-    |docs| × num_hashes longs, independent of shingle count."""
-    # explode_outer, NOT explode: for an inner explode Catalyst infers a
-    # size(_sh) > 0 filter and pushes it below any exchange, substituting
-    # the full shingle expression — which re-tokenizes every document a
-    # second time on the pre-shuffle side (measured 6× slower at sf0.1).
-    # Our shingle arrays are never empty, so outer semantics are
-    # identical and the inferred filter never exists.
-    exploded = shingle_tbl.select(
-        "_id", F.explode_outer("_sh").alias("_s")
-    ).select("_id", F.pmod(F.xxhash64("_s"), F.lit(1 << 31)).alias("_h"))
-    return (
-        exploded.groupBy("_id")
-        .agg(F.expr(_signature_sql(num_hashes, seed, "_h")).alias("_sig"))
-    )
-
-
 def _signature_sql(num_hashes: int, seed: int, hash_col: str) -> str:
     """SQL text for the MinHash signature aggregate: ``array(min(...),
     ...)`` with one universal-hash min per slot.
@@ -519,8 +492,7 @@ def _novelty_join(
 def doc_grams(docs: DataFrame, id_col: str, text_col: str, *, n: int = 3) -> DataFrame:
     """(id, gram) rows: each document's DISTINCT word n-gram shingles as
     xxhash64 keys — the persistable gram set a novelty reference is
-    made of (:func:`novelty_vs_grams`, streaming
-    :func:`~alaska_etl_spark.streaming.incremental.stream_novelty_gate`).
+    made of (:func:`novelty_vs_grams`).
     8 bytes per gram; membership is hash-invariant modulo ~1e-8
     collisions (same lane as novelty_rate(hashed=True))."""
     return docs.select(
@@ -967,15 +939,14 @@ def simhash_fingerprints_grouped(
     token hashes have bit b set (2·count > n, identical to the ±1-vote
     sum > 0 of the classic formulation).
 
-    Same scale rationale as :func:`minhash_signatures_grouped`: partial
-    map-side aggregation means the shuffle carries |docs| fixed-width
-    vectors regardless of document length. Documents with zero tokens
-    have no fingerprint (dropped by the explode) — empty-text identity
-    is exact dedup's job, not SimHash's."""
+    Partial map-side aggregation means the shuffle carries |docs|
+    fixed-width vectors regardless of document length. Documents with
+    zero tokens have no fingerprint (dropped by the explode) —
+    empty-text identity is exact dedup's job, not SimHash's."""
     toks = word_tokens(text_col)
-    # explode_outer to suppress the inferred size>0 filter (which would
-    # re-tokenize every doc a second time — see minhash_signatures_grouped);
-    # null tokens from genuinely empty docs are dropped right after.
+    # explode_outer to suppress the inferred size>0 filter, which Catalyst
+    # pushes below the exchange and so re-tokenizes every doc a second
+    # time; null tokens from genuinely empty docs are dropped right after.
     # md5 lane uses a 60-bit hash (md5_hash60) so the value is non-
     # negative and ``>>``/``&`` replay identically in DuckDB; fingerprint
     # bits 60-63 then carry zero votes and stay 0 on both engines.

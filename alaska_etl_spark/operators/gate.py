@@ -1,9 +1,8 @@
 """The document quality gate: the transform every training-data ingest
 runs between "raw crawl" and "warehouse" — quality scoring, repetition
 screening, PII scrubbing, content fingerprinting — as ONE pure
-DataFrame→DataFrame function, so the batch path, the streaming path
-(``streaming.incremental.stream_documents_gate``), and the tests all
-execute the identical plan.
+DataFrame→DataFrame function, so every caller executes the identical
+plan.
 
 Everything stays in whole-stage codegen (quality + redaction are
 expression-only); the single shuffle is ``repetition_signals``' n-gram

@@ -1,7 +1,6 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata, with decode / feature-extract / resize / frame-sample as
-Arrow-batched Pandas operations over ``mapInPandas`` (BASELINE
-north-star op).
+metadata, with decode and frame-sample as Arrow-batched Pandas
+operations over ``mapInPandas`` (BASELINE north-star op).
 
 Design for 100 TB:
 - media bytes live in ONE binary column next to narrow typed metadata,
@@ -104,17 +103,6 @@ def _pil_image_module():
         return None
 
 
-def _av_module():
-    """Video codec loader seam (PyAV), same contract as
-    :func:`_pil_image_module`."""
-    try:
-        import av
-
-        return av
-    except ImportError:
-        return None
-
-
 def _real_image_stats(image_mod, content: bytes | None, k: int) -> list[float]:
     """Decoded-pixel statistics via the (possibly injected) PIL-like
     module: overall mean + per-channel means in [0, 1], cycled to ``k``
@@ -181,81 +169,6 @@ def decode_stats(df: DataFrame, *, n_stats: int = 4, real: bool = False) -> Data
     return ensure_min_parallelism(df, "media_id").mapInPandas(fn, DECODE_SCHEMA)
 
 
-def extract_features(
-    df: DataFrame,
-    *,
-    dim: int = 8,
-    content_col: str = "content",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """content bytes → dense pseudo-embedding array<double> of length
-    ``dim`` (deterministic; the real model-forward replaces
-    ``_byte_stats`` without touching the plan shape). Output feeds the
-    similarity-search operators directly."""
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField("embedding", ArrayType(DoubleType()), False),
-        ]
-    )
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: b[id_col],
-                    "embedding": [_byte_stats(c, dim) for c in b[content_col]],
-                }
-            )
-
-    from alaska_etl_spark.operators.parallelism import ensure_min_parallelism
-
-    return ensure_min_parallelism(df, id_col).mapInPandas(fn, out_schema)
-
-
-def resize_images(
-    df: DataFrame, *, width: int, height: int, real: bool = False
-) -> DataFrame:
-    """Image resize. The fake keeps bytes opaque (identity content) and
-    rewrites the metadata — exercising exactly the schema/partition flow
-    the real resize uses; ``real=True`` decodes, resizes, and re-encodes
-    through the PIL seam (raises at plan time when no codec is
-    installed/injected)."""
-    image_mod = None
-    if real:
-        image_mod = _pil_image_module()
-        if image_mod is None:
-            _require_real_codecs()
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            out = b.copy()
-            if image_mod is not None:
-                import io
-
-                resized = []
-                for c, fmt in zip(b["content"], b["format"]):
-                    if c is None:
-                        resized.append(None)
-                        continue
-                    img = image_mod.open(io.BytesIO(c)).resize((width, height))
-                    buf = io.BytesIO()
-                    img.save(buf, format=(fmt or "png").upper())
-                    resized.append(buf.getvalue())
-                out["content"] = resized
-            out["width"] = width
-            out["height"] = height
-            yield out
-
-    from alaska_etl_spark.operators.parallelism import ensure_min_parallelism
-
-    return ensure_min_parallelism(
-        df.filter(F.col("kind") == "image"), "media_id"
-    ).mapInPandas(fn, df.schema)
-
-
 FRAME_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -273,9 +186,8 @@ def sample_frames(
     frame stats are byte stats salted by frame index; real: actual frame
     grabs). The row explosion happens executor-side inside the batch
     iterator — the driver never sees frames. Real frame grabs are not
-    implemented yet (no video codec to build against — the loader seam
-    is :func:`_av_module`); ``real=True`` always raises rather than
-    silently emitting fake stats."""
+    implemented yet (no video codec to build against); ``real=True``
+    always raises rather than silently emitting fake stats."""
     if real:
         _require_real_codecs()
 

@@ -91,52 +91,6 @@ def misra_gries_candidates(df: DataFrame, col: str, *, k: int) -> DataFrame:
     return df.select(col).mapInPandas(summarize, f"item {item_t}, lb bigint")
 
 
-def misra_gries_partials_by(
-    df: DataFrame, key_col: str, col: str, *, k: int
-) -> DataFrame:
-    """Per-(partition, ``key_col``-group) Misra-Gries summaries as
-    ``(key_col, item, lb)`` rows — the group-keyed sibling of
-    :func:`misra_gries_candidates`. Because MG summaries merge under
-    the PODS'12 rule, the partials for any SUBSET of keys merge into a
-    valid summary of exactly those keys' rows — which is what lets a
-    streaming store dedup replays at the key grain (per source file)
-    instead of per batch: a re-delivered batch that was REBATCHED
-    differently still decomposes into the same per-file units. No
-    repartition by key is required — a key split across partitions
-    just yields several partials that merge."""
-    import pandas as pd
-
-    item_t = df.schema[col].dataType.simpleString()
-    key_t = df.schema[key_col].dataType.simpleString()
-
-    def summarize(batches):
-        by_key: dict = {}
-        for pdf in batches:
-            for kv, sub in pdf.groupby(key_col, dropna=False, sort=False):
-                counters = by_key.setdefault(kv, {})
-                for v, c in sub[col].value_counts(dropna=True).items():
-                    counters[v] = counters.get(v, 0) + int(c)
-                if len(counters) > k:
-                    cut = sorted(counters.values(), reverse=True)[k]
-                    by_key[kv] = {
-                        v: c - cut for v, c in counters.items() if c - cut > 0
-                    }
-        rows = [
-            (kv, v, c)
-            for kv, counters in by_key.items()
-            for v, c in counters.items()
-        ]
-        yield (
-            pd.DataFrame(rows, columns=[key_col, "item", "lb"])
-            if rows
-            else pd.DataFrame({key_col: [], "item": [], "lb": []})
-        )
-
-    return df.select(key_col, col).mapInPandas(
-        summarize, f"{key_col} {key_t}, item {item_t}, lb bigint"
-    )
-
-
 def heavy_hitters(
     df: DataFrame, col: str, *, phi: float, k: int | None = None
 ) -> DataFrame:
@@ -245,26 +199,3 @@ def decimal_quantiles(
     for q in per_prob[1:]:
         out = out.unionAll(q)
     return out
-
-
-def merge_mg_partials(partials: DataFrame, *, k: int) -> DataFrame:
-    """Merge any number of Misra-Gries summaries over ``(item, lb)``
-    rows into one k-counter summary: sum weights per item, subtract the
-    (k+1)-th largest total, drop non-positive — the Agarwal et al.
-    (PODS'12) mergeable-summaries rule, under which the union's
-    φ-heavy-hitter guarantee survives: any item with TRUE count
-    > n/(k+1) over the combined stream keeps a positive counter.
-    Driver-bounded: the only collected value is the trim threshold
-    (one row); everything else is one hash aggregate over the
-    (k × partials)-bounded input."""
-    sums = partials.groupBy("item").agg(F.sum("lb").cast("bigint").alias("_w"))
-    cut_row = (
-        sums.orderBy(F.col("_w").desc(), "item").limit(k + 1).orderBy(F.col("_w").asc())
-        .head(1)
-    )
-    n_items = sums.count()
-    cut = int(cut_row[0]["_w"]) if (cut_row and n_items > k) else 0
-    return (
-        sums.select("item", (F.col("_w") - F.lit(cut)).cast("bigint").alias("lb"))
-        .filter(F.col("lb") > 0)
-    )

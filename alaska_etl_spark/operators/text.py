@@ -578,8 +578,7 @@ def vocab_divergence_from_counts(
 ) -> DataFrame:
     """:func:`vocab_divergence` from a PRE-BUILT (_g, _w, _c) token
     count table — the entry point for callers whose distributions are
-    already counted: a persisted reference vocabulary vs a streaming
-    micro-batch (:func:`~alaska_etl_spark.streaming.incremental.stream_vocab_drift`),
+    already counted: a persisted reference vocabulary vs a new batch,
     two warehouse snapshots, etc. Same emit contract and fixed-point
     protocol as the document-level form (which delegates here)."""
     # NOT persisted (r12, measured): the plan prints cnt's tokenize
@@ -646,8 +645,8 @@ def token_counts(
 ) -> DataFrame:
     """(group, token, count) unigram count table — the persistable
     distribution :func:`vocab_divergence_from_counts` compares (written
-    once as the trusted reference for the streaming drift monitor, or
-    per snapshot for corpus-vs-corpus audits). ``group_col=None`` tags
+    once as a trusted reference, or per snapshot for corpus-vs-corpus
+    audits). ``group_col=None`` tags
     everything 'all'."""
     from alaska_etl_spark.operators.dedup import word_tokens
 
@@ -657,13 +656,6 @@ def token_counts(
         .groupBy("_g", "_w")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
-
-
-def write_vocab_reference(docs: DataFrame, text_col: str, path: str) -> None:
-    """Materialize a trusted (_w, _c) unigram reference distribution for
-    the streaming drift monitor
-    (:func:`~alaska_etl_spark.streaming.incremental.stream_vocab_drift`)."""
-    token_counts(docs, text_col).select("_w", "_c").write.mode("overwrite").parquet(path)
 
 
 def pmi_collocations(

@@ -1,7 +1,6 @@
 """URL canonicalization and domain-grain corpus operators — the first
-things a CommonCrawl-style web ingest does after WARC framing
-(sources/warc.py emits ``target_uri``; X153 normalizes *content* —
-this family normalizes the ADDRESS):
+things a CommonCrawl-style web ingest does after WARC framing (X153
+normalizes *content* — this family normalizes the ADDRESS):
 
 - :func:`canonical_url` — one deterministic canonical form per URL, as
   a pure Column expression: scheme/host lowercased, userinfo dropped,

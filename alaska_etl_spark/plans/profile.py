@@ -64,50 +64,9 @@ from pyspark.sql import functions as F
 from alaska_etl_spark.cache import tracked_persist
 from alaska_etl_spark.functions.localrel import local_df
 
-__all__ = ["table_entries", "profile_tables", "format_validity"]
+__all__ = ["profile_tables", "format_validity"]
 
 _OUT_COLS = ["report", "table_name", "subject", "object", "metric", "value", "value_str"]
-
-
-def table_entries(
-    df: DataFrame, cols: list[str], pairs: list[tuple[str, str]]
-) -> DataFrame:
-    """ONE scan → long entry frame ``(kind, name, va, _ha, _hb)``:
-    per-column value entries (``kind='col'``, string ``va`` plus its
-    xxhash64 in ``_ha``) and per-unordered-pair joint entries
-    (``kind='pair'``, ``name='a|b'``) from a single explode. Public
-    single-table form of the generator ``profile_tables`` uses (the
-    audit itself rides the int-id variant below).
-
-    Pair entries carry xxhash64 IDENTITIES (8-byte longs), not string
-    values: FD metrics are pure counts over groupings, so any injective
-    mapping gives identical numbers, and the string form measured ~2×
-    the shuffle bytes on key-grain pairs (the audit's dominant mass).
-    A 64-bit collision would merge two determinant groups and surface
-    as a mismatch against the value-keyed SQL oracle — the same
-    accepted-and-checked stance as the simjoin gram hashing. Pair-side
-    NULLs hash to the seed constant, preserving NULL-is-a-group
-    semantics; the col-side ``_ha`` is NULL for NULL values (the IND
-    consumer excludes NULL keys per the SQL-FK convention)."""
-    ids = (
-        [(i, "col", c, None) for i, c in enumerate(cols)]
-        + [(len(cols) + j, "pair", a, b) for j, (a, b) in enumerate(pairs)]
-    )
-    entries = _entry_array(ids)
-    need = sorted({c for c in cols} | {c for p in pairs for c in p})
-    long = df.select(*need).select(F.explode(entries).alias("_e")).select("_e.*")
-    names = F.create_map(
-        *[x for i, kind, a, b in ids
-          for x in (F.lit(i), F.lit(a if kind == "col" else f"{a}|{b}"))]
-    )
-    kinds = F.create_map(
-        *[x for i, kind, _, _ in ids for x in (F.lit(i), F.lit(kind))]
-    )
-    return long.select(
-        kinds[F.col("_id")].alias("kind"),
-        names[F.col("_id")].alias("name"),
-        "va", "_ha", "_hb",
-    )
 
 
 def _entry_array(ids: "list[tuple[int, str, str, str | None]]"):

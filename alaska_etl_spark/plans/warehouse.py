@@ -261,35 +261,10 @@ class Warehouse:
         key_cols: list[str],
         partition_col: str | None = None,
         staging_df: DataFrame | None = None,
-        store_row_hash: bool = False,
-        assume_new: bool = False,
     ) -> None:
         """staging → main with ``date_added_utc`` audit column and
         hash-anti-join idempotence (FIXTURES §5 invariant 5: re-running a
-        load must not duplicate rows).
-
-        ``store_row_hash=True`` persists the ``_row_hash`` key digest as
-        a table column, so every LATER append's existing-side read is a
-        column-pruned scan of a precomputed hash instead of
-        re-evaluating sha2 over every landed row — the measured
-        dominant per-batch term of a high-frequency idempotent sink
-        once the main table is large (SCALE.md "Frontier per-batch scan
-        cost": at 10⁷ rows the recompute is whole seconds per batch,
-        growing linearly forever). Once a table carries the column it
-        is maintained on every subsequent append regardless of the
-        flag (schema consistency); tables created without it keep the
-        original recompute path.
-
-        ``assume_new=True`` (r12, the Bloom frontier's fast lane) skips
-        the existing-side anti-join entirely — zero reads of the landed
-        rows. CONTRACT: the caller must hold a proof that no staged key
-        is already landed; the streaming sinks get one from a
-        Bloom-negative membership test on a filter kept as a SUPERSET
-        of the landed keys (operators/pruning.py sidecar invariant —
-        no false negatives, superset maintained by writing the sidecar
-        before the rows). Schema handling (hash column maintenance,
-        audit column) is unchanged; only the row-grain idempotence scan
-        is elided."""
+        load must not duplicate rows)."""
         staged = staging_df if staging_df is not None else self.read_staging(table)
         staged = row_hash(staged, key_cols)
 
@@ -300,23 +275,13 @@ class Warehouse:
         if staged.isEmpty():
             return
 
-        keep_hash = store_row_hash
         if self.table_exists(table):
-            main = self.read(table)
-            if "_row_hash" in main.columns:
-                keep_hash = True  # never fork an existing table's schema
-                existing = main.select("_row_hash")
-            else:
-                keep_hash = False
-                existing = row_hash(main, key_cols).select("_row_hash")
-            if not assume_new:
-                # staging batch is the small side → broadcast it;
-                # main-side scan reads only the hash column (pruned).
-                staged = staged.join(existing, "_row_hash", "left_anti")
+            existing = row_hash(self.read(table), key_cols).select("_row_hash")
+            # staging batch is the small side → broadcast it;
+            # main-side scan reads only the hash column (pruned).
+            staged = staged.join(existing, "_row_hash", "left_anti")
 
-        if not keep_hash:
-            staged = staged.drop("_row_hash")
-        out = staged.withColumn(AUDIT_COL, F.current_timestamp())
+        out = staged.drop("_row_hash").withColumn(AUDIT_COL, F.current_timestamp())
         self._write_spec(out, self._spec(table), "append", partition_col=partition_col)
 
     def load(
@@ -326,18 +291,10 @@ class Warehouse:
         *,
         key_cols: list[str],
         partition_col: str | None = None,
-        store_row_hash: bool = False,
-        assume_new: bool = False,
     ) -> None:
         """Full protocol: staging overwrite then idempotent append."""
         self.write_staging(df, table)
-        self.append_main(
-            table,
-            key_cols=key_cols,
-            partition_col=partition_col,
-            store_row_hash=store_row_hash,
-            assume_new=assume_new,
-        )
+        self.append_main(table, key_cols=key_cols, partition_col=partition_col)
 
     # -- bucketed catalog tables (the co-located-join path, SURVEY §4) ---
 

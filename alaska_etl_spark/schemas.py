@@ -3,9 +3,7 @@
 The reference declares BigQuery ``SchemaField`` lists with REQUIRED/
 NULLABLE modes and per-column descriptions (reference
 airflow/dags/uscrn_dag.py:213-242, nws_dag.py:138-158,
-uscrn_wind_dag.py:209-215). We invert its scrape-then-derive flow: the
-``column_descriptions`` dimension is *generated from* these StructTypes
-(see :func:`column_descriptions_df`), with descriptions carried in
+uscrn_wind_dag.py:209-215). Here the descriptions and units ride in
 StructField metadata.
 
 Type mapping (SURVEY §1.2): BigQuery STRING→StringType, FLOAT→DoubleType,
@@ -16,7 +14,6 @@ INTEGER→LongType, DATETIME (wall clock, stored as local AKST + UTC pairs)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -136,37 +133,3 @@ LOCATIONS_SCHEMA = StructType(
         _f("latitude", DoubleType(), False),
     ]
 )
-
-COLUMN_DESCRIPTIONS_SCHEMA = StructType(
-    [
-        _f("name", StringType(), False),
-        _f("description", StringType(), True),
-        _f("units", StringType(), True),
-        _f("type", StringType(), True),
-    ]
-)
-
-
-_SPARK_TO_WAREHOUSE = {
-    "string": "STRING",
-    "double": "FLOAT",
-    "bigint": "INTEGER",
-    "timestamp_ntz": "DATETIME",
-    "timestamp": "TIMESTAMP",
-}
-
-
-def column_descriptions_df(spark: SparkSession, schema: StructType = USCRN_SCHEMA) -> DataFrame:
-    """Generate the column_descriptions dim from a table schema — the
-    inverse of the reference's scrape-readme-then-derive-schema flow
-    (notebooks/1_uscrn_scrape.ipynb:331-336)."""
-    rows = [
-        (
-            f.name,
-            f.metadata.get("description", ""),
-            f.metadata.get("units", ""),
-            _SPARK_TO_WAREHOUSE.get(f.dataType.simpleString(), "STRING"),
-        )
-        for f in schema.fields
-    ]
-    return spark.createDataFrame(rows, COLUMN_DESCRIPTIONS_SCHEMA)

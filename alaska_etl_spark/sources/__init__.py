@@ -1,4 +1,5 @@
-"""Ingest sources: text/HTML-shaped inputs → typed DataFrames.
+"""Ingest sources: the reference's USCRN fixed-width, subhourly wind
+and NWS (tabular and HTML) inputs → typed DataFrames.
 
 Each parser takes paths or pre-read DataFrames (never the network) so
 tests are hermetic; fetchers that do network IO live behind

@@ -89,53 +89,6 @@ def test_text_label_features_integers(spark):
     assert list(rows[1].asDict())[2:] == list(FEATURE_COLS)
 
 
-def _write_json(path, rows):
-    import json
-
-    with open(path, "w") as f:
-        for doc_id, text, lang in rows:
-            f.write(json.dumps({"doc_id": doc_id, "text": text, "lang": lang}) + "\n")
-
-
-def test_stream_perceptron_matches_sequential_minibatch(spark, tmp_path):
-    from alaska_etl_spark.operators.classifier import train_step
-    from alaska_etl_spark.streaming.incremental import stream_perceptron_train
-
-    b1 = [(1, "the cat and the dog", "en"), (2, "hund und katze tier", "de")]
-    b2 = [(3, "a bird in the tree is that", "en"), (4, "pájaro en el árbol", "es")]
-    src = tmp_path / "src"
-    src.mkdir()
-    hist = str(tmp_path / "weights")
-    schema = "doc_id bigint, text string, lang string"
-    for i, rows in enumerate([b1, b2]):
-        _write_json(src / f"b{i}.json", rows)
-        stream = spark.readStream.schema(schema).json(str(src))
-        stream_perceptron_train(stream, hist, str(tmp_path / "ck"))
-
-    got = {
-        r.iter: (r.misclassified, tuple(r[f"w{j}"] for j in range(5)))
-        for r in spark.read.parquet(hist).collect()
-    }
-    assert set(got) == {1, 2}
-
-    # sequential mini-batch replica through the shared batch step
-    w = [0] * 5
-    want = {}
-    for t, rows in enumerate([b1, b2], start=1):
-        feats = text_label_features(
-            spark.createDataFrame(rows, schema), "doc_id", "text", "lang"
-        )
-        m, g = train_step(feats, w)
-        w = [w[j] + g[j] for j in range(5)]
-        want[t] = (m, tuple(w))
-    assert got == want
-
-    # replay: same data through a FRESH checkpoint appends nothing
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_perceptron_train(stream, hist, str(tmp_path / "ck_replay"))
-    assert spark.read.parquet(hist).count() == 2
-
-
 def test_perceptron_apply_screens_by_margin(spark):
     from alaska_etl_spark.operators.classifier import perceptron_apply
 
@@ -464,65 +417,6 @@ def test_pr_curve_groups_tied_scores(spark):
     assert len(out) == 1
     r = out[0]
     assert (r.tp, r.fp, r.fn) == (2, 1, 0)
-
-
-def test_stream_model_monitor_tracks_deployed_weights(spark, tmp_path):
-    from alaska_etl_spark.functions.fixedpoint import div_half_up_py
-    from alaska_etl_spark.operators.classifier import train_step
-    from alaska_etl_spark.streaming.incremental import (
-        stream_model_monitor,
-        stream_perceptron_train,
-    )
-
-    schema = "doc_id bigint, text string, lang string"
-    b1 = [(1, "the cat and the dog", "en"), (2, "hund und katze tier", "de")]
-    src = tmp_path / "src"
-    src.mkdir()
-    hist, metrics = str(tmp_path / "weights"), str(tmp_path / "metrics")
-
-    # no trained model yet: metrics row with NULL accuracy, not a crash
-    _write_json(src / "b0.json", b1)
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_model_monitor(stream, metrics, str(tmp_path / "ck_m0"), hist)
-    r0 = spark.read.parquet(metrics).collect()
-    assert len(r0) == 1 and r0[0].accuracy is None and r0[0].degraded is None
-    assert r0[0].model_iter is None
-
-    # train one step, then monitor the same batch under the trained model
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_perceptron_train(stream, hist, str(tmp_path / "ck_t"))
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_model_monitor(stream, metrics, str(tmp_path / "ck_m1"), hist)
-    rows = {r.batch_id: r for r in spark.read.parquet(metrics).collect() if r.model_iter is not None}
-    assert rows, "expected a monitored row under the trained model"
-    r = rows[0]
-    # replica: apply the replayed weights to the same batch
-    feats = text_label_features(
-        spark.createDataFrame(b1, schema), "doc_id", "text", "lang"
-    )
-    w = [0] * 5
-    _, g = train_step(feats, w)
-    w = [w[j] + g[j] for j in range(5)]
-    rows_f = feats.collect()
-    tp = fp = tn = fn = 0
-    for fr in rows_f:
-        dot = sum(w[j] * fr[f"f{j}"] for j in range(5))
-        pred, act = dot > 0, fr.y > 0
-        tp += pred and act
-        fp += pred and not act
-        tn += (not pred) and (not act)
-        fn += (not pred) and act
-    assert (r.tp, r.fp, r.tn, r.fn) == (tp, fp, tn, fn)
-    want_acc = div_half_up_py(tp + tn, tp + fp + tn + fn, 10000) / 10000.0
-    assert r.accuracy == want_acc
-    assert r.degraded == (want_acc < 0.5)
-    assert r.model_iter == 1
-
-    # replay through a fresh checkpoint: idempotent (batch_id dedup)
-    n_before = spark.read.parquet(metrics).count()
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_model_monitor(stream, metrics, str(tmp_path / "ck_m2"), hist)
-    assert spark.read.parquet(metrics).count() == n_before
 
 
 def test_hashed_features_counts_and_lane_equivalence(spark):

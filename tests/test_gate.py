@@ -1,16 +1,9 @@
-"""Document quality gate (operators/gate.py) and its streaming form:
-batch/stream parity, PII scrubbed from survivors, cross-batch
-fingerprint dedup with zero streaming state."""
+"""Document quality gate (operators/gate.py): quality and repetition
+screens, PII scrubbed from survivors, fingerprint over scrubbed text."""
 
 from __future__ import annotations
 
-import json
-
-import pytest
-from pyspark.sql import functions as F
-
 from alaska_etl_spark.operators.gate import gate_documents
-from alaska_etl_spark.plans.warehouse import Warehouse
 
 GOOD = (
     "The quarterly report shows steady improvement across all regional "
@@ -47,388 +40,3 @@ def test_gate_fingerprint_is_over_scrubbed_text(spark):
     fps = {r.fingerprint for r in gate_documents(df).collect()}
     assert len(fps) == 1
 
-
-def _write_doc_file(path, rows):
-    with open(path, "w") as f:
-        for doc_id, text in rows:
-            f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-
-def test_stream_gate_matches_batch_and_dedups_across_batches(spark, tmp_path):
-    from alaska_etl_spark.streaming.incremental import stream_documents_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-
-    _write_doc_file(src / "b1.json", [(1, GOOD), (2, SPAM)])
-    schema = "doc_id bigint, text string"
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_documents_gate(stream, wh, "docs", ckpt)
-    assert {r.doc_id for r in wh.read("docs").collect()} == {1}
-
-    # second file: one new doc, one exact duplicate of doc 1's content
-    _write_doc_file(src / "b2.json", [(3, PII), (4, GOOD)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_documents_gate(stream, wh, "docs", ckpt)
-    landed = {r.doc_id for r in wh.read("docs").collect()}
-    assert landed == {1, 3}  # doc 4 deduped against doc 1 cross-batch
-
-    # batch parity for the surviving set (same gate, same plan)
-    batch = gate_documents(
-        _docs(spark, [(1, GOOD), (2, SPAM), (3, PII), (4, GOOD)])
-    )
-    batch_first = {
-        r.fingerprint: r.doc_id
-        for r in batch.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id")).collect()
-    }
-    assert set(batch_first.values()) == landed
-
-
-def test_stream_gate_within_batch_keeps_smallest_id(spark, tmp_path):
-    from alaska_etl_spark.streaming.incremental import stream_documents_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    _write_doc_file(src / "b1.json", [(9, GOOD), (2, GOOD), (5, GOOD)])
-    stream = spark.readStream.schema("doc_id bigint, text string").json(str(src))
-    stream_documents_gate(stream, wh, "docs", str(tmp_path / "ckpt"))
-    assert [r.doc_id for r in wh.read("docs").collect()] == [2]
-
-
-# --- streaming NEAR-dup gate (persisted LSH index as the only state) --------
-
-_PAGE = (
-    "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "
-    "nu xi omicron pi rho sigma tau upsilon phi chi psi omega end"
-)
-_PAGE_EDIT = _PAGE.replace("sigma", "sigmb")  # near-dup: one token changed
-_FRESH = (
-    "completely unrelated page about harbor tide schedules and ferry "
-    "crossing times for the southern island routes in early spring season"
-)
-
-
-def test_stream_near_dup_gate_dedups_within_and_across_batches(spark, tmp_path):
-    from alaska_etl_spark.streaming.incremental import stream_near_dup_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    idx = str(tmp_path / "lsh_idx")
-    schema = "doc_id bigint, text string"
-
-    # batch 1: original + its in-batch near-dup + a fresh page
-    _write_doc_file(src / "b1.json", [(1, _PAGE), (2, _PAGE_EDIT), (3, _FRESH)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_near_dup_gate(stream, wh, "docs", str(tmp_path / "ck1"), idx)
-    assert {r.doc_id for r in wh.read("docs").collect()} == {1, 3}
-
-    # batch 2: re-crawl of the page (near-dups doc 1 via the INDEX,
-    # though doc 1's text is long gone from the stream) + one new page
-    _write_doc_file(
-        src / "b2.json",
-        [
-            (10, _PAGE_EDIT),
-            (
-                11,
-                "weather balloon telemetry archive covering stratospheric "
-                "pressure readings logged by the interior research array",
-            ),
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_near_dup_gate(stream, wh, "docs", str(tmp_path / "ck1"), idx)
-    assert {r.doc_id for r in wh.read("docs").collect()} == {1, 3, 11}
-
-
-def test_stream_near_dup_gate_replay_is_idempotent(spark, tmp_path):
-    from alaska_etl_spark.operators.dedup import probe_lsh_index
-    from alaska_etl_spark.streaming.incremental import stream_near_dup_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    idx = str(tmp_path / "lsh_idx")
-    schema = "doc_id bigint, text string"
-    _write_doc_file(src / "b1.json", [(1, _PAGE), (3, _FRESH)])
-
-    # deliver the SAME batch twice via two fresh checkpoints — the
-    # at-least-once replay a crash between sink and commit produces
-    for ck in ("ck_a", "ck_b"):
-        stream = spark.readStream.schema(schema).json(str(src))
-        stream_near_dup_gate(stream, wh, "docs", str(tmp_path / ck), idx)
-
-    assert sorted(r.doc_id for r in wh.read("docs").collect()) == [1, 3]
-    # index holds each doc once: probing an edit of _PAGE yields ONE row
-    probe_batch = spark.createDataFrame([(99, _PAGE_EDIT)], schema)
-    hits = probe_lsh_index(probe_batch, "doc_id", "text", idx).collect()
-    assert [(r.new_id, r.corpus_id) for r in hits] == [(99, 1)]
-
-def test_stream_near_dup_gate_index_grows_past_first_batch(spark, tmp_path):
-    """Regression: the index append must survive the MAIN load's cache
-    invalidation — batch 2's admitted doc has to be probeable by batch 3
-    (before the staging-read fix, the index froze at batch 1)."""
-    from alaska_etl_spark.streaming.incremental import stream_near_dup_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    idx = str(tmp_path / "lsh_idx")
-    schema = "doc_id bigint, text string"
-
-    _write_doc_file(src / "b1.json", [(1, _PAGE)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_near_dup_gate(stream, wh, "docs", str(tmp_path / "ck"), idx)
-
-    _write_doc_file(src / "b2.json", [(3, _FRESH)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_near_dup_gate(stream, wh, "docs", str(tmp_path / "ck"), idx)
-
-    # a near-dup of the BATCH-2 admission: rejected only if batch 2's
-    # index append actually landed
-    _write_doc_file(src / "b3.json", [(5, _FRESH.replace("ferry", "ferrx"))])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_near_dup_gate(stream, wh, "docs", str(tmp_path / "ck"), idx)
-
-    assert sorted(r.doc_id for r in wh.read("docs").collect()) == [1, 3]
-
-
-# --- streaming NOVELTY gate (persisted gram set as the only state) ----------
-
-_MOSAIC = _PAGE.split()  # tokens of the admitted page, for stitching
-
-
-def test_stream_novelty_gate_admits_novel_rejects_mosaic(spark, tmp_path):
-    from alaska_etl_spark.streaming.incremental import stream_novelty_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ref = str(tmp_path / "ref_grams")
-    schema = "doc_id bigint, text string"
-
-    # batch 1: empty reference -> both distinct pages fully novel;
-    # in-batch exact duplicate of doc 1 collapses to the smallest id
-    _write_doc_file(src / "b1.json", [(1, _PAGE), (2, _PAGE), (3, _FRESH)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_novelty_gate(stream, wh, "docs", str(tmp_path / "ck1"), ref)
-    assert {r.doc_id for r in wh.read("docs").collect()} == {1, 3}
-
-    # batch 2: a MOSAIC stitched from halves of the two admitted pages
-    # — near-dup to neither single document, but almost every 3-gram is
-    # already in the reference -> rejected; a genuinely new page passes
-    half1 = " ".join(_MOSAIC[: len(_MOSAIC) // 2])
-    half2 = " ".join(_FRESH.split()[len(_FRESH.split()) // 2 :])
-    mosaic = half1 + " " + half2
-    new_page = (
-        "glacier monitoring network status bulletin for the eastern "
-        "icefield stations with seasonal mass balance survey results"
-    )
-    _write_doc_file(src / "b2.json", [(10, mosaic), (11, new_page)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_novelty_gate(stream, wh, "docs", str(tmp_path / "ck1"), ref)
-    assert {r.doc_id for r in wh.read("docs").collect()} == {1, 3, 11}
-
-
-def test_stream_novelty_gate_zero_gram_docs_rejected(spark, tmp_path):
-    from alaska_etl_spark.streaming.incremental import stream_novelty_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    schema = "doc_id bigint, text string"
-    _write_doc_file(src / "b1.json", [(1, ""), (2, "   "), (3, _FRESH)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_novelty_gate(
-        stream, wh, "docs", str(tmp_path / "ck"), str(tmp_path / "ref")
-    )
-    assert {r.doc_id for r in wh.read("docs").collect()} == {3}
-
-
-def test_stream_novelty_gate_replay_is_idempotent(spark, tmp_path):
-    from alaska_etl_spark.streaming.incremental import stream_novelty_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ref = str(tmp_path / "ref_grams")
-    schema = "doc_id bigint, text string"
-    _write_doc_file(src / "b1.json", [(1, _PAGE), (3, _FRESH)])
-
-    # the SAME batch through two fresh checkpoints (at-least-once replay)
-    for ck in ("ck_a", "ck_b"):
-        stream = spark.readStream.schema(schema).json(str(src))
-        stream_novelty_gate(stream, wh, "docs", str(tmp_path / ck), ref)
-
-    assert sorted(r.doc_id for r in wh.read("docs").collect()) == [1, 3]
-    # reference holds each gram ONCE (replay appended nothing)
-    grams = spark.read.parquet(ref)
-    assert grams.count() == grams.distinct().count()
-
-
-def test_stream_novelty_gate_matches_batch_novelty(spark, tmp_path):
-    """The gate's admission decisions equal batch novelty_rate against
-    the admitted-so-far corpus (stream/batch parity)."""
-    from alaska_etl_spark.operators.dedup import novelty_rate
-    from alaska_etl_spark.streaming.incremental import stream_novelty_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ref = str(tmp_path / "ref_grams")
-    schema = "doc_id bigint, text string"
-    _write_doc_file(src / "b1.json", [(1, _PAGE), (3, _FRESH)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_novelty_gate(stream, wh, "docs", str(tmp_path / "ck"), ref)
-
-    probe_rows = [(20, _PAGE_EDIT), (21, "entirely different orchard harvest notes")]
-    _write_doc_file(src / "b2.json", probe_rows)
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_novelty_gate(stream, wh, "docs", str(tmp_path / "ck"), ref)
-
-    admitted_corpus = _docs(spark, [(1, _PAGE), (3, _FRESH)])
-    batch_scores = {
-        r.doc_id: r.novelty
-        for r in novelty_rate(
-            _docs(spark, probe_rows), admitted_corpus, "doc_id", "text"
-        ).collect()
-    }
-    got = {r.doc_id for r in wh.read("docs").collect()} - {1, 3}
-    want = {d for d, nov in batch_scores.items() if nov >= 0.5}
-    assert got == want and 21 in got
-
-
-def test_compact_gram_reference_collapses_duplicates(spark, tmp_path):
-    """Cross-batch duplicate gram rows accrete by design (an admitted
-    doc may share up to 1-min_novelty of its grams with the reference);
-    compaction collapses them with NO behavior change."""
-    from alaska_etl_spark.streaming.incremental import (
-        compact_gram_reference,
-        stream_novelty_gate,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ref = str(tmp_path / "ref_grams")
-    schema = "doc_id bigint, text string"
-    _write_doc_file(src / "b1.json", [(1, _PAGE)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_novelty_gate(stream, wh, "docs", str(tmp_path / "ck"), ref)
-
-    # batch 2: 12 already-seen tokens + 14 new ones -> novelty 14/24,
-    # admitted; its 10 seen-half grams re-append rows the reference holds
-    toks = _PAGE.split()
-    stitched = " ".join(toks[:12]) + (
-        " glacier melt telemetry feeds aggregated nightly for the coastal "
-        "stations during the spring transition window"
-    )
-    _write_doc_file(src / "b2.json", [(2, stitched)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_novelty_gate(stream, wh, "docs", str(tmp_path / "ck"), ref)
-    assert {r.doc_id for r in wh.read("docs").collect()} == {1, 2}
-
-    grams = spark.read.parquet(ref)
-    before, uniq = grams.count(), grams.distinct().count()
-    assert before > uniq  # duplicates actually accreted
-
-    stats = compact_gram_reference(spark, ref)
-    assert stats == {"rows_before": before, "rows_after": uniq, "files": 1}
-    assert spark.read.parquet(ref).count() == uniq
-
-    # behavior preserved across the swap: a mosaic of admitted content
-    # is still rejected, a genuinely new page still passes
-    mosaic = " ".join(toks[13:]) + " " + " ".join(stitched.split()[14:])
-    new_page = (
-        "market closing summary for the northern exchange with volume "
-        "weighted averages across the afternoon trading session"
-    )
-    _write_doc_file(src / "b3.json", [(10, mosaic), (11, new_page)])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_novelty_gate(stream, wh, "docs", str(tmp_path / "ck"), ref)
-    assert {r.doc_id for r in wh.read("docs").collect()} == {1, 2, 11}
-
-
-def test_compact_works_on_lsh_bands_index(spark, tmp_path):
-    """The same utility compacts the near-dup gate's band index — rows
-    are already unique there (replay anti-join), so compaction is pure
-    file-merge: row set unchanged, batch-accreted file sets collapsed,
-    probe behavior preserved."""
-    import os
-
-    from alaska_etl_spark.streaming.incremental import (
-        compact_gram_reference,
-        stream_near_dup_gate,
-    )
-    from alaska_etl_spark.operators.dedup import probe_lsh_index
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    idx = str(tmp_path / "lsh_idx")
-    schema = "doc_id bigint, text string"
-    for i, (doc_id, text) in enumerate([(1, _PAGE), (3, _FRESH)]):
-        _write_doc_file(src / f"b{i}.json", [(doc_id, text)])
-        stream = spark.readStream.schema(schema).json(str(src))
-        stream_near_dup_gate(stream, wh, "docs", str(tmp_path / "ck"), idx)
-
-    def _parquet_files(root):
-        return [
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(root)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-
-    bands = f"{idx}/bands"
-    files_before = len(_parquet_files(bands))
-    rows_before = spark.read.parquet(bands).count()
-    stats = compact_gram_reference(spark, bands, partition_by=["band"])
-    assert stats["rows_before"] == stats["rows_after"] == rows_before
-    # layout preserved: still band=<v> directories, fewer files in each
-    assert any(d.startswith("band=") for d in os.listdir(bands))
-    assert len(_parquet_files(bands)) < files_before
-    # probe still finds the batch-2 admission through the compacted index
-    probe = spark.createDataFrame(
-        [(99, _FRESH.replace("ferry", "ferrx"))], schema
-    )
-    hits = probe_lsh_index(probe, "doc_id", "text", idx).collect()
-    assert [(r.new_id, r.corpus_id) for r in hits] == [(99, 3)]
-
-
-def test_novelty_gate_inline_compaction(spark, tmp_path):
-    """compact_after_files=0 forces compaction after every batch: the
-    reference stays globally distinct and single-file, and admissions
-    are unchanged vs the uncompacted run."""
-    from alaska_etl_spark.streaming.incremental import stream_novelty_gate
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ref = str(tmp_path / "ref_grams")
-    schema = "doc_id bigint, text string"
-    toks = _PAGE.split()
-    stitched = " ".join(toks[:12]) + (
-        " glacier melt telemetry feeds aggregated nightly for the coastal "
-        "stations during the spring transition window"
-    )
-    for i, rows in enumerate([[(1, _PAGE)], [(2, stitched)]]):
-        _write_doc_file(src / f"b{i}.json", rows)
-        stream = spark.readStream.schema(schema).json(str(src))
-        stream_novelty_gate(
-            stream, wh, "docs", str(tmp_path / "ck"), ref,
-            compact_after_files=0,
-        )
-
-    assert {r.doc_id for r in wh.read("docs").collect()} == {1, 2}
-    grams = spark.read.parquet(ref)
-    assert grams.count() == grams.distinct().count()  # no duplicate rows
-    import os
-
-    files = [
-        f for dp, _, fs in os.walk(ref) for f in fs if f.endswith(".parquet")
-    ]
-    assert len(files) == 1

@@ -9,9 +9,7 @@ from pyspark.sql import functions as F
 from alaska_etl_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     decode_stats,
-    extract_features,
     media_from_documents,
-    resize_images,
     sample_frames,
 )
 
@@ -40,22 +38,6 @@ def test_decode_stats_shape_and_determinism(spark, media):
     assert a[4].n_bytes == 0 and a[4].stats == [0.0, 0.0, 0.0, 0.0]
 
 
-def test_extract_features_feeds_similarity(spark, media):
-    from alaska_etl_spark.operators.similarity import cosine_topk
-
-    emb = extract_features(media, dim=8)
-    assert emb.schema["embedding"].dataType.simpleString() == "array<double>"
-    out = cosine_topk(emb, emb.filter("media_id = 0"), id_col="media_id", k=2)
-    assert out.count() == 2  # pipeline composes without schema glue
-
-
-def test_resize_rewrites_metadata_only(spark, media):
-    out = {r.media_id: r for r in resize_images(media, width=64, height=64).collect()}
-    assert set(out) == {0, 1, 4}  # images only
-    assert all(r.width == 64 and r.height == 64 for r in out.values())
-    assert out[0].content == b"\x89PNGfakebytes"  # stub keeps bytes opaque
-
-
 def test_sample_frames_explosion(spark, media):
     frames = sample_frames(media, every_ms=1000).collect()
     assert {r.media_id for r in frames} == {2}
@@ -72,8 +54,6 @@ def test_real_codec_gate(spark, media, monkeypatch):
     monkeypatch.setattr(mm, "_pil_image_module", lambda: None)
     with pytest.raises(NotImplementedError, match="codec"):
         decode_stats(media, real=True)
-    with pytest.raises(NotImplementedError, match="codec"):
-        resize_images(media, width=1, height=1, real=True)
     with pytest.raises(NotImplementedError, match="codec"):
         sample_frames(media, real=True)
 
@@ -108,16 +88,6 @@ class FakePIL:
             arr = np.frombuffer(self._body, dtype=np.uint8).reshape(h, w, 3)
             return arr.astype(dtype) if dtype is not None else arr
 
-        def resize(self, size):
-            w, h = size
-            need = w * h * 3
-            body = (self._body * (need // max(len(self._body), 1) + 1))[:need]
-            return FakePIL._Img(f"{w},{h}:".encode() + body)
-
-        def save(self, buf, format=None):
-            w, h = self.size
-            buf.write(f"{w},{h}:".encode() + self._body)
-
     @staticmethod
     def open(bio):
         return FakePIL._Img(bio.read())
@@ -145,17 +115,6 @@ def test_real_decode_via_injected_codec(spark, monkeypatch):
     assert out[1] == [0.0, 0.0, 0.0, 0.0]  # all-0 pixels
     fake = {r.media_id: r.stats for r in mm.decode_stats(media, n_stats=4).collect()}
     assert out[3] == fake[3]  # audio: byte-stats fallback
-
-
-def test_real_resize_via_injected_codec(spark, monkeypatch):
-    from alaska_etl_spark.operators import multimodal as mm
-
-    monkeypatch.setattr(mm, "_pil_image_module", lambda: FakePIL)
-    rows = [(0, "image", _img_bytes(4, 2, 9), "png", 4, 2, 3, None, None)]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    [r] = mm.resize_images(media, width=2, height=1, real=True).collect()
-    assert (r.width, r.height) == (2, 1)
-    assert bytes(r.content) == _img_bytes(2, 1, 9)  # re-encoded at new size
 
 
 def test_media_from_documents_adapter(spark):

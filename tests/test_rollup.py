@@ -126,40 +126,3 @@ def test_existing_rollup_read_is_partition_pruned(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     assert f"{DAY_COL}#" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_stream_to_rollup_available_now(spark, tmp_path):
-    """Streaming maintenance: two file drops drained through
-    foreachBatch refresh must finalize identically to the one-shot
-    rollup over all rows — including the second drop's late row into an
-    hour the first drop already wrote."""
-    import json
-
-    from alaska_etl_spark.streaming.incremental import stream_to_rollup
-
-    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
-    src.mkdir()
-    path = str(tmp_path / "rollup")
-
-    def drop(name, rows):
-        (src / name).write_text(
-            "\n".join(
-                json.dumps({"user_id": u, "ts": t.replace("T", " "), "value": v})
-                for u, t, v in rows
-            )
-            + "\n"
-        )
-
-    def drain():
-        stream = spark.readStream.schema(SCHEMA).json(str(src))
-        stream_to_rollup(
-            stream, path, str(ckpt),
-            key_cols=["user_id"], ts_col="ts", val_col="value",
-        )
-
-    drop("b1.json", ROWS[0:4])
-    drain()
-    drop("b2.json", ROWS[4:])  # second drop opens Jan-3 buckets late
-    drain()
-    got = _canon(finalize(spark.read.parquet(path)))
-    assert got == _canon(_full(spark, ROWS))

@@ -10,7 +10,6 @@ from alaska_etl_spark.sources.wind import hourly_wind_avg, parse_wind_lines
 from alaska_etl_spark.streaming.incremental import (
     run_available_now,
     stream_hourly_wind,
-    stream_sessionize,
     stream_uscrn,
     stream_wind_readings,
 )
@@ -88,26 +87,6 @@ def test_windowed_hourly_matches_batch(spark, locations, tmp_path):
     assert streamed[("26494", dt.datetime(2023, 1, 15, 12, 0))] == 3.0
 
 
-def test_stream_dedup_keyed(spark, tmp_path):
-    """Duplicate keys within the watermark horizon are dropped; first
-    arrival survives."""
-    from alaska_etl_spark.streaming.incremental import stream_dedup_keyed
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-    (src / "e1.json").write_text(
-        '{"k": "a", "ts": "2023-06-01 10:00:00", "v": 1}\n'
-        '{"k": "a", "ts": "2023-06-01 10:05:00", "v": 2}\n'
-        '{"k": "b", "ts": "2023-06-01 10:01:00", "v": 3}\n'
-    )
-    stream = spark.readStream.schema("k string, ts timestamp, v bigint").json(str(src))
-    run_available_now(
-        stream_dedup_keyed(stream, key_cols=["k"], ts_col="ts"), str(out), str(ckpt)
-    )
-    got = {r.k: r.v for r in spark.read.parquet(str(out)).collect()}
-    assert got == {"a": 1, "b": 3}
-
-
 def test_stream_to_warehouse_exactly_once(spark, locations, tmp_path):
     """foreachBatch + hash-anti-join sink: duplicates across batches do
     not double-insert, and a full REPLAY (checkpoint wiped) is a no-op —
@@ -162,814 +141,3 @@ def test_stream_to_warehouse_dedups_within_batch(spark, locations, tmp_path):
         wh, "uscrn", str(ckpt), key_cols=["wbanno", "utc_datetime"],
     )
     assert wh.read("uscrn").count() == 1
-
-
-def test_stream_running_stats_state_survives_batches(spark, tmp_path):
-    """applyInPandasWithState keeps per-key cumulative state across
-    micro-batches via the checkpointed state store: the second drain's
-    emission continues from the first drain's totals."""
-    from alaska_etl_spark.streaming.incremental import stream_running_stats
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        '{"k": "a", "ts": "2023-06-01 10:00:00", "v": 1.5}\n'
-        '{"k": "a", "ts": "2023-06-01 10:05:00", "v": 2.5}\n'
-        '{"k": "b", "ts": "2023-06-01 10:01:00", "v": 10.0}\n'
-    )
-    stream = spark.readStream.schema("k string, ts timestamp, v double").json(str(src))
-    stats = lambda: stream_running_stats(  # noqa: E731
-        stream, key_cols=["k"], ts_col="ts", value_col="v"
-    )
-    run_available_now(stats(), str(out), str(ckpt))
-
-    (src / "b2.json").write_text('{"k": "a", "ts": "2023-06-01 11:00:00", "v": 4.0}\n')
-    run_available_now(stats(), str(out), str(ckpt))
-
-    rows = spark.read.parquet(str(out)).collect()
-    by_key = {}
-    for r in rows:  # keep the row with the highest n_events per key
-        if r.k not in by_key or r.n_events > by_key[r.k].n_events:
-            by_key[r.k] = r
-    assert by_key["a"].n_events == 3 and by_key["a"].total == 8.0  # cross-batch
-    assert by_key["b"].n_events == 1 and by_key["b"].total == 10.0
-    assert not by_key["a"].is_final
-    # first drain emitted the batch-1 cumulative row for 'a' too
-    assert any(r.k == "a" and r.n_events == 2 for r in rows)
-
-
-def test_stream_sessionize_matches_batch(spark, tmp_path):
-    """session_window sessions == batch gap-sessionization for closed
-    sessions: same session_start and n_events; the streaming session_end
-    is last-event + gap by definition."""
-    from alaska_etl_spark.operators.sessions import session_stats
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-    base = dt.datetime(2023, 6, 1, 10, 0)
-    evs = [
-        ("u1", base), ("u1", base + dt.timedelta(minutes=10)),
-        ("u1", base + dt.timedelta(minutes=90)),   # new session (80min gap)
-        ("u2", base + dt.timedelta(minutes=5)),
-    ]
-    (src / "e1.json").write_text(
-        "\n".join(f'{{"user_id": "{u}", "ts": "{t:%Y-%m-%d %H:%M:%S}"}}' for u, t in evs)
-    )
-    stream = spark.readStream.schema("user_id string, ts timestamp").json(str(src))
-    run_available_now(
-        stream_sessionize(stream, key_cols=["user_id"], ts_col="ts", gap="30 minutes"),
-        str(out), str(ckpt),
-    )
-    # advance the watermark far enough to close every session above
-    (src / "e2.json").write_text('{"user_id": "zz", "ts": "2023-06-02 00:00:00"}')
-    run_available_now(
-        stream_sessionize(stream, key_cols=["user_id"], ts_col="ts", gap="30 minutes"),
-        str(out), str(ckpt),
-    )
-    streamed = {
-        (r.user_id, r.session_start): r.n_events
-        for r in spark.read.parquet(str(out)).collect()
-    }
-
-    bdf = spark.createDataFrame(evs, "user_id string, ts timestamp_ntz")
-    batch = {
-        (r.user_id, r.session_start): r.n_events
-        for r in session_stats(bdf, key_cols=["user_id"], ts_col="ts", gap="30 minutes").collect()
-    }
-    assert batch.items() <= streamed.items()  # every closed batch session present
-    assert streamed[("u1", base)] == 2
-    assert streamed[("u1", base + dt.timedelta(minutes=90))] == 1
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream forecast ⋈ actual within ±1 hour: the streaming
-    interval join over file sources must produce exactly the rows the
-    batch join produces, and unmatched rows must not appear (inner)."""
-    from alaska_etl_spark.streaming.incremental import stream_interval_join
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    fc = [("PAJN", base + dt.timedelta(hours=h), 10.0 + h) for h in range(6)]
-    ac = [
-        ("PAJN", base + dt.timedelta(hours=h, minutes=30), 11.0 + h) for h in range(4)
-    ] + [("PANC", base, 5.0)]  # different key: never matches
-    fdf = spark.createDataFrame(fc, "loc string, fts timestamp, predicted double")
-    adf = spark.createDataFrame(ac, "loc string, ats timestamp, actual double")
-    fdf.write.parquet(f"{tmp_path}/fc")
-    adf.write.parquet(f"{tmp_path}/ac")
-
-    fstream = spark.readStream.schema(fdf.schema).parquet(f"{tmp_path}/fc")
-    astream = spark.readStream.schema(adf.schema).parquet(f"{tmp_path}/ac")
-    joined = stream_interval_join(
-        fstream, astream, on=["loc"], left_ts="fts", right_ts="ats",
-        watermark_delay="10 minutes", tolerance="1 hour",
-    )
-    run_available_now(joined, f"{tmp_path}/out", f"{tmp_path}/ckpt")
-    got = {
-        (r.loc, r.fts, r.ats) for r in spark.read.parquet(f"{tmp_path}/out").collect()
-    }
-
-    batch = stream_interval_join(
-        fdf, adf, on=["loc"], left_ts="fts", right_ts="ats", tolerance="1 hour"
-    )
-    want = {(r.loc, r.fts, r.ats) for r in batch.collect()}
-    assert got == want
-    assert len(want) > 0
-    assert all(loc == "PAJN" for loc, *_ in want)
-    # every matched pair is within the hour
-    assert all(abs((f - a).total_seconds()) <= 3600 for _, f, a in want)
-
-
-def test_stream_apply_changelog_maintains_snapshot(spark, tmp_path):
-    """CDC feed consumed as a stream maintains the snapshot across
-    micro-batches: insert/update/delete in one batch, then a later
-    batch updating + re-inserting — final state equals the whole-feed
-    batch apply; a full replay (checkpoint wiped) is a no-op."""
-    import shutil
-
-    from alaska_etl_spark.plans.warehouse import Warehouse, apply_changelog
-    from alaska_etl_spark.streaming.incremental import stream_apply_changelog
-
-    src, ckpt = tmp_path / "feed", tmp_path / "ckpt"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    schema = "k BIGINT, v STRING, op STRING, seq BIGINT"
-
-    def drain():
-        feed = (
-            spark.readStream.schema(schema)
-            .option("header", "true")
-            .csv(str(src))
-        )
-        stream_apply_changelog(feed, wh, "snap", str(ckpt), key_cols=["k"])
-
-    (src / "b1.csv").write_text(
-        "k,v,op,seq\n1,a,I,1\n2,b,I,2\n1,a2,U,3\n3,c,I,4\n2,,D,5\n"
-    )
-    drain()
-    got1 = {(r.k, r.v) for r in wh.read("snap").select("k", "v").collect()}
-    assert got1 == {(1, "a2"), (3, "c")}
-
-    (src / "b2.csv").write_text("k,v,op,seq\n3,c2,U,6\n2,b2,I,7\n1,,D,8\n")
-    drain()
-    got2 = {(r.k, r.v) for r in wh.read("snap").select("k", "v").collect()}
-    assert got2 == {(3, "c2"), (2, "b2")}
-
-    # equals the single-shot batch apply of the concatenated feed
-    base = spark.createDataFrame([], "k BIGINT, v STRING")
-    whole = spark.read.schema(schema).option("header", "true").csv(str(src))
-    want = {
-        (r.k, r.v)
-        for r in apply_changelog(base, whole, ["k"]).collect()
-    }
-    assert got2 == want
-
-    # wipe checkpoint: the entire feed replays onto the live snapshot — no-op
-    shutil.rmtree(ckpt)
-    drain()
-    got3 = {(r.k, r.v) for r in wh.read("snap").select("k", "v").collect()}
-    assert got3 == got2
-
-
-# --- vocabulary drift monitor (static reference, qf8's JS protocol) ---------
-
-
-def test_stream_vocab_drift_flags_drifted_batches(spark, tmp_path):
-    import json
-    import math
-
-    from alaska_etl_spark.operators.text import write_vocab_reference
-    from alaska_etl_spark.streaming.incremental import stream_vocab_drift
-
-    ref_corpus = spark.createDataFrame(
-        [(i, "alpha beta gamma delta " * 5) for i in range(20)],
-        "doc_id bigint, text string",
-    )
-    ref = str(tmp_path / "vocab_ref")
-    write_vocab_reference(ref_corpus, "text", ref)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    with open(src / "b1.json", "w") as f:  # same distribution -> ~0
-        for i in range(5):
-            f.write(json.dumps({"doc_id": i, "text": "alpha beta gamma delta"}) + "\n")
-    metrics = str(tmp_path / "metrics")
-    stream = spark.readStream.schema("doc_id bigint, text string").json(str(src))
-    stream_vocab_drift(stream, metrics, str(tmp_path / "ck"), ref)
-
-    with open(src / "b2.json", "w") as f:  # disjoint vocabulary -> ln 2
-        for i in range(5):
-            f.write(json.dumps({"doc_id": 100 + i, "text": "zig zag zug zork"}) + "\n")
-    stream = spark.readStream.schema("doc_id bigint, text string").json(str(src))
-    stream_vocab_drift(stream, metrics, str(tmp_path / "ck"), ref)
-
-    rows = {r.batch_id: r for r in spark.read.parquet(metrics).collect()}
-    assert len(rows) == 2
-    first, second = rows[min(rows)], rows[max(rows)]
-    assert first.js_nats == 0.0 and not first.drifted
-    assert second.js_nats == round(math.log(2), 6) and second.drifted
-    assert second.shared_vocab == 0 and second.tokens_batch == 20
-
-
-def test_stream_vocab_drift_empty_batch_emits_null_row(spark, tmp_path):
-    import json
-
-    from alaska_etl_spark.operators.text import write_vocab_reference
-    from alaska_etl_spark.streaming.incremental import stream_vocab_drift
-
-    ref_corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma")], "doc_id bigint, text string"
-    )
-    ref = str(tmp_path / "vocab_ref")
-    write_vocab_reference(ref_corpus, "text", ref)
-    src = tmp_path / "src"
-    src.mkdir()
-    with open(src / "b1.json", "w") as f:  # whitespace-only text: zero tokens
-        f.write(json.dumps({"doc_id": 1, "text": "   "}) + "\n")
-    metrics = str(tmp_path / "metrics")
-    stream = spark.readStream.schema("doc_id bigint, text string").json(str(src))
-    stream_vocab_drift(stream, metrics, str(tmp_path / "ck"), ref)
-    (r,) = spark.read.parquet(metrics).collect()
-    assert r.js_nats is None and r.drifted is None and r.shared_vocab == 0
-
-
-def test_stream_cusum_monitor_matches_batch_recursion(spark, tmp_path):
-    """The streaming closed form with carried state equals the textbook
-    per-observation recursion, regardless of how the stream is split
-    into micro-batches."""
-    from alaska_etl_spark.streaming.incremental import (
-        run_available_now,
-        stream_cusum_monitor,
-    )
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-    vals = [5.0, 5.0, 9.0, 12.0, 11.0, 2.0, 1.0, 5.0, 14.0, 15.0]
-    lines1 = [
-        f'{{"k": "a", "ts": "2023-06-01 10:{i:02d}:00", "v": {v}}}'
-        for i, v in enumerate(vals[:4])
-    ]
-    lines2 = [
-        f'{{"k": "a", "ts": "2023-06-01 10:{i:02d}:00", "v": {v}}}'
-        for i, v in enumerate(vals[4:], start=4)
-    ]
-    (src / "b1.json").write_text("\n".join(lines1) + "\n")
-    stream = lambda: stream_cusum_monitor(  # noqa: E731
-        spark.readStream.schema("k string, ts timestamp, v double").json(str(src)),
-        key_cols=["k"],
-        ts_col="ts",
-        value_col="v",
-        target_cents=500,
-        threshold_cents=400,
-        slack_cents=50,
-    )
-    run_available_now(stream(), str(out), str(ckpt))
-    (src / "b2.json").write_text("\n".join(lines2) + "\n")
-    run_available_now(stream(), str(out), str(ckpt))
-
-    # reference: per-observation recursion over the full series
-    su = sd = ou = od = 0
-    prev_u = prev_d = False
-    for v in vals:
-        c = round(v * 100)
-        su = max(0, su + c - 500 - 50)
-        sd = max(0, sd + 500 - c - 50)
-        if su > 400 and not prev_u:
-            ou += 1
-        if sd > 400 and not prev_d:
-            od += 1
-        prev_u, prev_d = su > 400, sd > 400
-    rows = spark.read.parquet(str(out)).collect()
-    final = max((r for r in rows if r.k == "a"), key=lambda r: r.n_events)
-    assert final.n_events == len(vals)
-    assert (final.s_up, final.s_dn) == (su, sd)
-    assert (final.onsets_up, final.onsets_dn) == (ou, od)
-    assert (final.alarm_up, final.alarm_dn) == (su > 400, sd > 400)
-
-
-def test_stream_cusum_monitor_flat_series_no_alarms(spark, tmp_path):
-    from alaska_etl_spark.streaming.incremental import (
-        run_available_now,
-        stream_cusum_monitor,
-    )
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(
-            f'{{"k": "a", "ts": "2023-06-01 10:{i:02d}:00", "v": 5.0}}'
-            for i in range(6)
-        )
-        + "\n"
-    )
-    q = stream_cusum_monitor(
-        spark.readStream.schema("k string, ts timestamp, v double").json(str(src)),
-        key_cols=["k"],
-        ts_col="ts",
-        value_col="v",
-        target_cents=500,
-        threshold_cents=100,
-    )
-    run_available_now(q, str(out), str(ckpt))
-    r = spark.read.parquet(str(out)).collect()[0]
-    assert (r.s_up, r.s_dn, r.onsets_up, r.onsets_dn) == (0, 0, 0, 0)
-    assert not r.alarm_up and not r.alarm_dn
-
-
-def test_stream_cusum_monitor_preserves_key_types(spark, tmp_path):
-    """Non-string key columns keep their input type in the output
-    schema (was hardcoded `string` — ADVICE r6)."""
-    from alaska_etl_spark.streaming.incremental import (
-        run_available_now,
-        stream_cusum_monitor,
-    )
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(
-            f'{{"uid": 7, "ts": "2023-06-01 10:{i:02d}:00", "v": 9.0}}'
-            for i in range(4)
-        )
-        + "\n"
-    )
-    q = stream_cusum_monitor(
-        spark.readStream.schema("uid bigint, ts timestamp, v double").json(
-            str(src)
-        ),
-        key_cols=["uid"],
-        ts_col="ts",
-        value_col="v",
-        target_cents=500,
-        threshold_cents=400,
-    )
-    run_available_now(q, str(out), str(ckpt))
-    got = spark.read.parquet(str(out))
-    assert dict(got.dtypes)["uid"] == "bigint"
-    r = got.collect()[0]
-    assert r.uid == 7 and r.n_events == 4
-
-
-def test_stream_admission_quota_caps_per_key_window(spark, tmp_path):
-    """Per-(key, window) admits never exceed the quota regardless of
-    batch split; order of admission is (ts, id); window rollover
-    resets the budget; late rows into closed windows are rejected."""
-    from alaska_etl_spark.streaming.incremental import (
-        run_available_now,
-        stream_admission_quota,
-    )
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-
-    def lines(rows):
-        return "\n".join(
-            f'{{"src": "{s}", "ts": "2023-06-01 {h:02d}:{m:02d}:00", "id": {i}}}'
-            for s, h, m, i in rows
-        ) + "\n"
-
-    # batch 1: source a floods hour 10 (4 events, quota 2); source b
-    # sends 1
-    (src / "b1.json").write_text(
-        lines([("a", 10, 0, 1), ("a", 10, 1, 2), ("a", 10, 2, 3),
-               ("a", 10, 3, 4), ("b", 10, 0, 9)])
-    )
-    stream = lambda: stream_admission_quota(  # noqa: E731
-        spark.readStream.schema("src string, ts timestamp, id bigint").json(str(src)),
-        key_cols=["src"],
-        ts_col="ts",
-        id_col="id",
-        quota=2,
-        window_seconds=3600,
-    )
-    run_available_now(stream(), str(out), str(ckpt))
-    rows = {r.id: r.admitted for r in spark.read.parquet(str(out)).collect()}
-    assert rows == {1: True, 2: True, 3: False, 4: False, 9: True}
-
-    # batch 2: same window continues for a (still over quota), then the
-    # next hour opens a fresh budget; one late row into hour 10 arrives
-    # after hour 11 started for key b
-    (src / "b2.json").write_text(
-        lines([("a", 10, 30, 5), ("a", 11, 0, 6), ("a", 11, 1, 7),
-               ("b", 11, 0, 10), ("b", 10, 59, 11)])
-    )
-    run_available_now(stream(), str(out), str(ckpt))
-    rows = {r.id: r.admitted for r in spark.read.parquet(str(out)).collect()}
-    assert rows[5] is False          # hour-10 budget for a already spent
-    assert rows[6] is True and rows[7] is True   # fresh hour-11 budget
-    # b: within batch 2, sort by ts processes id 11 (10:59) before id 10
-    # (11:00) — id 11 continues hour 10 (1 used + 1 = 2 ≤ quota), id 10
-    # opens hour 11
-    assert rows[11] is True and rows[10] is True
-
-    # batch 3: b sends a LATE hour-10 row after hour 11 became current →
-    # rejected outright (closed window), and the invariant holds
-    (src / "b3.json").write_text(lines([("b", 10, 58, 12)]))
-    run_available_now(stream(), str(out), str(ckpt))
-    rows = {r.id: r.admitted for r in spark.read.parquet(str(out)).collect()}
-    assert rows[12] is False
-    # global invariant: ≤ quota admits per (key, hour)
-    import collections
-
-    per_kw = collections.Counter()
-    for r in spark.read.parquet(str(out)).collect():
-        if r.admitted:
-            per_kw[(r.src, r.ts.hour)] += 1
-    assert all(v <= 2 for v in per_kw.values())
-
-
-def test_stream_profile_monitor_null_and_domain_alerts(spark, tmp_path):
-    """Conforming batches stay quiet; a batch with an unseen category
-    and elevated nulls raises both alerts; the reference never chases
-    the drift."""
-    from alaska_etl_spark.streaming.incremental import (
-        stream_profile_monitor,
-        write_profile_reference,
-    )
-
-    # validated reference: two categoricals, no nulls
-    ref_df = spark.createDataFrame(
-        [("open", "low"), ("closed", "high"), ("open", "high")] * 4,
-        "status string, prio string",
-    )
-    ref = str(tmp_path / "ref")
-    write_profile_reference(ref_df, ["status", "prio"], ref)
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-
-    def lines(rows):
-        import json as _json
-
-        return "\n".join(_json.dumps(dict(zip(("status", "prio"), r))) for r in rows) + "\n"
-
-    stream = lambda: stream_profile_monitor(  # noqa: E731
-        spark.readStream.schema("status string, prio string").json(str(src)),
-        str(out),
-        str(ckpt),
-        ref,
-        cols=["status", "prio"],
-        null_bp_tolerance=500,
-    )
-
-    (src / "b1.json").write_text(lines([("open", "low"), ("closed", "high")] * 5))
-    stream()
-    m = {(r.batch_id, r.column_name): r for r in spark.read.parquet(str(out)).collect()}
-    b1s = m[(0, "status")]
-    assert b1s.n_rows == 10 and b1s.n_null == 0
-    assert b1s.null_alert is False and b1s.domain_alert is False
-
-    # batch 2: a NEW status value and half-null prio
-    (src / "b2.json").write_text(
-        lines([("reopened", "low"), ("open", None), ("closed", None), ("open", "low")])
-    )
-    stream()
-    m = {(r.batch_id, r.column_name): r for r in spark.read.parquet(str(out)).collect()}
-    b2s, b2p = m[(1, "status")], m[(1, "prio")]
-    assert b2s.domain_alert is True and b2s.n_unseen_values == 1  # 'reopened'
-    assert b2p.null_alert is True and b2p.n_null == 2
-    assert b2p.domain_alert is False
-
-    # batch 3: conforming again — the reference did not absorb 'reopened'
-    (src / "b3.json").write_text(lines([("reopened", "low")]))
-    stream()
-    m = {(r.batch_id, r.column_name): r for r in spark.read.parquet(str(out)).collect()}
-    assert m[(2, "status")].domain_alert is True  # still unseen: static baseline
-
-
-def test_stream_heavy_hitters_store_growth_bounded(spark, tmp_path):
-    """VERDICT r7 #6: drive ~50 micro-batches through the heavy-hitters
-    monitor and pin the state-growth contract — the partial store stays
-    O(files·(k+1)) rows (k counters + one total row per source file,
-    times at most a few partition-partials), and the per-batch sink
-    work does not go superlinear (the replay-safety path re-reads the
-    store each batch; with k-bounded partials that read is
-    O(batches·k) rows, and the compaction lever in the docstring is the
-    answer when batches number in the millions). Timing is asserted
-    loosely (last-10 mean ≤ 3× first-10 mean) to catch a blowup without
-    flaking on load."""
-    from alaska_etl_spark.streaming.incremental import stream_heavy_hitters_monitor
-
-    src = tmp_path / "src"
-    src.mkdir()
-    store, metrics, ckpt = (
-        str(tmp_path / "store"), str(tmp_path / "metrics"), str(tmp_path / "ckpt"),
-    )
-    n_batches, k, wave = 50, 8, 10
-    import time as _time
-
-    # five waves of ten one-file micro-batches (maxFilesPerTrigger=1
-    # under availableNow): each wave's wall clock covers ten sink
-    # invocations at ever-larger store sizes, so a superlinear store
-    # re-read shows up as wave-over-wave growth.
-    wave_walls = []
-    for w in range(n_batches // wave):
-        for b in range(w * wave, (w + 1) * wave):
-            (src / f"b{b:03d}.json").write_text(
-                "\n".join('{"v": "hot"}' for _ in range(5))
-                + "\n"
-                + "\n".join(f'{{"v": "u{b}_{i}"}}' for i in range(10))
-                + "\n"
-            )
-        t0 = _time.perf_counter()
-        stream_heavy_hitters_monitor(
-            spark.readStream.schema("v string")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src)),
-            store, metrics, ckpt, col="v", k=k,
-        )
-        wave_walls.append(_time.perf_counter() - t0)
-    store_rows = spark.read.parquet(store).count()
-    assert store_rows <= n_batches * (k + 1) * 2, store_rows
-    m = spark.read.parquet(metrics).collect()
-    top = {r.item: (r.lb, r.n_total) for r in m if r.n_total == 15 * n_batches}
-    assert "hot" in top, "hot (250 > 750/9) must survive 50-batch merging"
-    assert top["hot"][0] <= 5 * n_batches
-    assert wave_walls[-1] <= max(3 * wave_walls[1], wave_walls[1] + 5.0), wave_walls
-
-
-def test_stream_heavy_hitters_guarantee_and_replay(spark, tmp_path):
-    """The merged summary keeps every value with true count > n/(k+1)
-    across batch splits, and a checkpoint-loss replay cannot
-    double-count (batch-keyed partials)."""
-    from alaska_etl_spark.streaming.incremental import stream_heavy_hitters_monitor
-
-    src = tmp_path / "src"
-    src.mkdir()
-    store, metrics, ckpt = (
-        str(tmp_path / "store"), str(tmp_path / "metrics"), str(tmp_path / "ckpt"),
-    )
-
-    def write(name, values):
-        (src / name).write_text("\n".join(f'{{"v": "{x}"}}' for x in values) + "\n")
-
-    stream = lambda: stream_heavy_hitters_monitor(  # noqa: E731
-        spark.readStream.schema("v string").json(str(src)),
-        store, metrics, ckpt, col="v", k=4,
-    )
-
-    # hot value split across two batches; background values unique-ish
-    write("b1.json", ["hot"] * 30 + [f"x{i}" for i in range(20)])
-    stream()
-    write("b2.json", ["hot"] * 30 + [f"y{i}" for i in range(20)])
-    stream()
-
-    m = spark.read.parquet(metrics).collect()
-    last = max(r.batch_id for r in m)
-    top = {r.item: (r.lb, r.n_total) for r in m if r.batch_id == last}
-    # n=100, k=4 → any value with count > 20 must be present; hot has 60
-    assert "hot" in top
-    lb, n_total = top["hot"]
-    assert n_total == 100
-    assert lb <= 60  # MG weight is a lower bound
-    assert lb > 100 / 5  # and for 'hot' it certifies heaviness here
-
-    # replay after checkpoint loss: store partials must not duplicate
-    import shutil
-
-    n_store = spark.read.parquet(store).count()
-    shutil.rmtree(ckpt)
-    stream()
-    assert spark.read.parquet(store).count() == n_store
-    m2 = spark.read.parquet(metrics).collect()
-    top2 = {r.item for r in m2 if r.batch_id == max(r.batch_id for r in m2)}
-    assert "hot" in top2
-
-    # recreated checkpoint + NEW data (ADVICE r7): batch ids restart at
-    # 0 and collide with stored partials from DIFFERENT content — the
-    # content signature must store (and count) them, not skip them as
-    # replays. The two original files replay as batches 0-1 (matched by
-    # signature, deduped) and the new file lands as batch 2 under this
-    # checkpoint — ids 0/1/2 all collide with already-stored ids.
-    import shutil as _sh
-
-    _sh.rmtree(ckpt)
-    write("b3.json", ["hot2"] * 40)
-    stream()
-    # this run's batch_id restarts at 0, so "latest" can't be read off
-    # max(batch_id) — identify the run by its n_total instead: exactly
-    # one emission must see the full 140-row stream (100 old + 40 new,
-    # new file counted ONCE), and 'hot2' (40 > 140/5) must be in it.
-    m3 = spark.read.parquet(metrics).collect()
-    totals = {r.n_total for r in m3}
-    assert 140 in totals, f"hot2 file must be counted exactly once: {totals}"
-    assert not {t for t in totals if t > 140}, "nothing may double-count"
-    top3 = {r.item for r in m3 if r.n_total == 140}
-    assert "hot2" in top3 and "hot" in top3
-
-
-def test_stream_quantile_monitor_exact_and_replay_safe(spark, tmp_path):
-    """Exact whole-stream quantiles from per-file value-count partials:
-    batches merge exactly, a checkpoint-loss replay adds nothing, and
-    NEW data under recycled batch ids is counted once (the per-file
-    store contract shared with the heavy-hitters monitor)."""
-    import shutil
-
-    from alaska_etl_spark.streaming.incremental import stream_quantile_monitor
-
-    src = tmp_path / "src"
-    src.mkdir()
-    store, metrics, ckpt = (
-        str(tmp_path / "store"), str(tmp_path / "metrics"), str(tmp_path / "ckpt"),
-    )
-
-    def write(name, values):
-        (src / name).write_text(
-            "\n".join(f'{{"v": {x}}}' for x in values) + "\n"
-        )
-
-    stream = lambda: stream_quantile_monitor(  # noqa: E731
-        spark.readStream.schema("v double").json(str(src)),
-        store, metrics, ckpt, col="v", probs=(0.5, 0.9), scale=100,
-    )
-    write("b1.json", [float(x) for x in range(1, 51)])    # 1..50
-    stream()
-    write("b2.json", [float(x) for x in range(51, 101)])  # 51..100
-    stream()
-    m = spark.read.parquet(metrics).collect()
-    last = {r.prob: r for r in m if r.n_total == 100}
-    # type-1 lower quantiles over 1..100: p50 -> 50, p90 -> 90
-    assert last[0.5].value == 50.0 and last[0.9].value == 90.0
-
-    n_store = spark.read.parquet(store).count()
-    shutil.rmtree(ckpt)
-    stream()  # replay (possibly rebatched): nothing new stored
-    assert spark.read.parquet(store).count() == n_store
-
-    write("b3.json", [1000.0] * 25)  # recycled ids + new data
-    shutil.rmtree(ckpt)
-    stream()
-    m3 = spark.read.parquet(metrics).collect()
-    tail = {r.prob: r for r in m3 if r.n_total == 125}
-    assert tail, "new file must be counted exactly once"
-    assert tail[0.9].value == 1000.0  # 25 x 1000 shifts p90
-    assert tail[0.5].value == 63.0    # ceil(0.5*125)=63rd of 1..100,1000x25
-
-
-def test_stream_late_audit_counts_would_be_dropped_rows(spark, tmp_path):
-    """Rows older than (high-watermark − delay) are counted as late;
-    the first batch has no prior watermark so nothing is late; replay
-    after checkpoint loss adds nothing (per-file store)."""
-    import shutil
-
-    from alaska_etl_spark.streaming.incremental import stream_late_audit
-
-    src = tmp_path / "src"
-    src.mkdir()
-    store, metrics, ckpt = (
-        str(tmp_path / "store"), str(tmp_path / "metrics"), str(tmp_path / "ckpt"),
-    )
-
-    def write(name, stamps):
-        (src / name).write_text(
-            "\n".join(f'{{"ts": "{t}"}}' for t in stamps) + "\n"
-        )
-
-    stream = lambda: stream_late_audit(  # noqa: E731
-        spark.readStream.schema("ts timestamp").json(str(src)),
-        store, metrics, ckpt, ts_col="ts", delay_seconds=3600,
-    )
-    write("b1.json", ["2024-01-01 10:00:00", "2024-01-01 12:00:00"])
-    stream()
-    # hwm is now 12:00; delay 1h → cutoff 11:00. One row at 10:30 is
-    # fine... 10:30 < 11:00 → LATE; 11:30 is not.
-    write("b2.json", ["2024-01-01 10:30:00", "2024-01-01 11:30:00"])
-    stream()
-    m = {r.batch_id: r for r in spark.read.parquet(metrics).collect()}
-    first = min(m)
-    assert m[first].n_late == 0 and m[first].n_rows == 2
-    last = max(m)
-    assert m[last].n_rows == 2 and m[last].n_late == 1
-    assert m[last].hwm is not None
-
-    n_store = spark.read.parquet(store).count()
-    shutil.rmtree(ckpt)
-    stream()  # full replay: both files already stored → no-op
-    assert spark.read.parquet(store).count() == n_store
-
-
-def test_unseen_src_files_mixed_batch_routes_blank_rows(spark, tmp_path):
-    """ADVICE r8: in a MIXED batch (some rows carrying a real
-    input_file_name, some blank), the blank rows must ride the content
-    signature key — the old all-or-nothing fallback stored '' once as a
-    file key and silently skipped every later non-file row."""
-    from alaska_etl_spark.streaming.incremental import _unseen_src_files
-
-    store = str(tmp_path / "store")
-    # store already knows file 'a' (and nothing else)
-    spark.createDataFrame([("a",)], "_src string").write.parquet(store)
-
-    mixed = spark.createDataFrame(
-        [("a", "v1"), ("", "v2"), ("", "v3")], "_src string, v string"
-    )
-    tagged, new = _unseen_src_files(spark, mixed, store, 7, "v")
-    # 'a' is seen; the blank rows became one signature key, and it is NEW
-    assert len(new) == 1 and new[0].startswith("batch:7:")
-    keys = {r["_src"] for r in tagged.select("_src").distinct().collect()}
-    assert keys == {"a", new[0]}  # '' never survives as a key
-
-    # append the signature key to the store; an exact replay of the
-    # same mixed batch is then fully seen
-    spark.createDataFrame([(new[0],)], "_src string").write.mode("append").parquet(store)
-    _, new2 = _unseen_src_files(spark, mixed, store, 7, "v")
-    assert new2 == []
-
-    # a LATER non-file batch with different content gets a DIFFERENT
-    # signature key (not swallowed by the stored one)
-    other = spark.createDataFrame(
-        [("", "z1"), ("", "z2")], "_src string, v string"
-    )
-    _, new3 = _unseen_src_files(spark, other, store, 8, "v")
-    assert len(new3) == 1 and new3[0] != new[0]
-
-
-def test_compact_partial_store_preserves_monitor_output(spark, tmp_path):
-    """VERDICT r8 #6: compacting the heavy-hitters partial store to its
-    merged summary + seen-file markers changes NOTHING the monitor
-    emits — same top items and exact n_total — and replay dedup still
-    holds (a checkpoint-loss replay of pre-compaction files appends no
-    new partials)."""
-    import shutil
-
-    from alaska_etl_spark.streaming.incremental import (
-        compact_partial_store,
-        stream_heavy_hitters_monitor,
-    )
-
-    def drive(src, store, metrics, ckpt):
-        stream_heavy_hitters_monitor(
-            spark.readStream.schema("v string").json(str(src)),
-            store, metrics, ckpt, col="v", k=4,
-        )
-
-    def write(src, name, values):
-        (src / name).write_text("\n".join(f'{{"v": "{x}"}}' for x in values) + "\n")
-
-    def last_metrics(metrics):
-        m = spark.read.parquet(metrics).collect()
-        last = max(r.batch_id for r in m)
-        return {(r.item, r.lb, r.n_total) for r in m if r.batch_id == last}
-
-    pre = [
-        (f"b{j}.json", ["hot"] * 30 + [f"w{j}_{i}" for i in range(20)])
-        for j in range(5)
-    ]
-    b3 = ["hot"] * 10 + ["warm"] * 25 + [f"z{i}" for i in range(10)]
-
-    # lane A: no compaction
-    srcA = tmp_path / "srcA"; srcA.mkdir()
-    stA, meA, ckA = (str(tmp_path / n) for n in ("stA", "meA", "ckA"))
-    # lane B: compact between file 2 and file 3
-    srcB = tmp_path / "srcB"; srcB.mkdir()
-    stB, meB, ckB = (str(tmp_path / n) for n in ("stB", "meB", "ckB"))
-
-    for name, vals in pre:
-        write(srcA, name, vals); drive(srcA, stA, meA, ckA)
-        write(srcB, name, vals); drive(srcB, stB, meB, ckB)
-
-    info = compact_partial_store(spark, stB, k=4)
-    assert info["kind"] == "heavy_hitters"
-    assert info["rows_after"] < info["rows_before"]
-
-    write(srcA, "new.json", b3); drive(srcA, stA, meA, ckA)
-    write(srcB, "new.json", b3); drive(srcB, stB, meB, ckB)
-
-    # the monitor's output is identical with and without compaction
-    assert last_metrics(meA) == last_metrics(meB)
-    # exact stream length: 5 pre-files x 50 + 45
-    assert all(t[2] == 295 for t in last_metrics(meB))
-
-    # replay safety: checkpoint loss + full re-delivery appends nothing
-    n_store = spark.read.parquet(stB).count()
-    shutil.rmtree(ckB)
-    drive(srcB, stB, meB, ckB)
-    assert spark.read.parquet(stB).count() == n_store
-
-
-def test_compact_partial_store_quantiles(spark, tmp_path):
-    """Quantile-store compaction: merged value counts under the
-    sentinel + seen markers reproduce the exact quantiles."""
-    from alaska_etl_spark.streaming.incremental import (
-        compact_partial_store,
-        stream_quantile_monitor,
-    )
-
-    src = tmp_path / "src"; src.mkdir()
-    store, metrics, ckpt = (str(tmp_path / n) for n in ("st", "me", "ck"))
-
-    def drive():
-        stream_quantile_monitor(
-            spark.readStream.schema("v double").json(str(src)),
-            store, metrics, ckpt, col="v", probs=(0.5,), scale=100,
-        )
-
-    (src / "a.json").write_text("\n".join(f'{{"v": {i}.0}}' for i in range(1, 101)) + "\n")
-    drive()
-    info = compact_partial_store(spark, store, k=None)
-    assert info["kind"] == "quantiles"
-    (src / "b.json").write_text("\n".join('{"v": 200.0}' for _ in range(100)) + "\n")
-    drive()
-    m = spark.read.parquet(metrics).collect()
-    last = max(r.batch_id for r in m)
-    got = {(r.prob, r.value, r.n_total) for r in m if r.batch_id == last}
-    # 200 values total: median (type-1 lower, ceil(0.5*200)=100th) = 100.0
-    assert got == {(0.5, 100.0, 200)}

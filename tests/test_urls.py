@@ -5,8 +5,6 @@ rollup/blocklist operators on a hand-computed corpus."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from alaska_etl_spark.operators.urls import (
     blocklist_audit,
     blocklist_filter,
@@ -200,57 +198,6 @@ def test_blocklist_audit_and_filter(spark):
     assert kept == [4, 5, 6]
 
 
-def _write_url_file(path, rows):
-    import json
-
-    with open(path, "w") as f:
-        for doc_id, url in rows:
-            f.write(json.dumps({"doc_id": doc_id, "url": url}) + "\n")
-
-
-def test_stream_url_frontier_dedups_blocks_and_routes(spark, tmp_path):
-    # r10: crawl-frontier gate — canonical dedup across batches with
-    # zero streaming state, blocklist filter, malformed-URL routing.
-    from alaska_etl_spark.plans.warehouse import Warehouse
-    from alaska_etl_spark.streaming.incremental import stream_url_frontier
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-    rules = spark.createDataFrame([("r1", "blocked.com")], "rule string, domain string")
-    schema = "doc_id bigint, url string"
-
-    _write_url_file(
-        src / "b1.json",
-        [
-            (5, "https://A.com/p?utm_x=1"),       # canon https://a.com/p
-            (2, "https://a.com:443/p"),           # same canonical, smaller id
-            (3, "http://sub.blocked.com/x"),      # blocklisted
-            (4, "not a url"),                     # -> rejects
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_url_frontier(
-        stream, wh, "frontier", ckpt, rules=rules, rejects_table="bad_urls"
-    )
-    landed = {r.doc_id for r in wh.read("frontier").collect()}
-    assert landed == {2}  # within-batch keep-first on canonical
-    assert {r.doc_id for r in wh.read("bad_urls").collect()} == {4}
-
-    # batch 2: a re-crawl variant of the same resource + one new URL
-    _write_url_file(
-        src / "b2.json",
-        [(9, "HTTPS://a.com/p#frag"), (10, "https://b.org/q")],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_url_frontier(
-        stream, wh, "frontier", ckpt, rules=rules, rejects_table="bad_urls"
-    )
-    landed = {r.doc_id for r in wh.read("frontier").collect()}
-    assert landed == {2, 10}  # doc 9 deduped against doc 2 CROSS-batch
-
-
 def test_path_prefix_chain_and_mixed_kind_audit(spark):
     # r10 X174: path_prefix rules anchor at the exact host and match at
     # / boundaries only; domain rules still match subdomains.
@@ -283,116 +230,6 @@ def test_path_prefix_chain_and_mixed_kind_audit(spark):
     assert audit["_total"]["n_pages"] == 2
     kept = sorted(r["id"] for r in blocklist_filter(docs, "id", "url", rules).collect())
     assert kept == [2, 3, 4]
-
-
-def test_stream_domain_quota_caps_across_batches(spark, tmp_path):
-    # r10 X175: per-domain lifetime cap with the warehouse as the only
-    # ledger — deterministic fill order (smallest id), canonical dedup
-    # still applies, quota survives across batches.
-    from alaska_etl_spark.plans.warehouse import Warehouse
-    from alaska_etl_spark.streaming.incremental import stream_domain_quota
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id bigint, url string"
-
-    _write_url_file(
-        src / "b1.json",
-        [
-            (7, "https://a.com/p1"),
-            (3, "https://www.a.com/p2"),   # same registrable domain
-            (5, "https://A.com/p1#x"),     # canonical dup of doc 7
-            (9, "https://a.com/p3"),
-            (1, "https://b.org/q1"),
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_domain_quota(stream, wh, "quota", ckpt, max_per_domain=2)
-    landed = {r.doc_id for r in wh.read("quota").collect()}
-    # a.com candidates after canonical dedup: ids {3, 5, 9} (7 collapses
-    # into 5 — keep-first takes the smaller id); cap 2 fills
-    # smallest-first -> {3, 5}; b.org admits 1
-    assert landed == {1, 3, 5}
-
-    # batch 2: a.com is full; b.org has headroom for one more
-    _write_url_file(
-        src / "b2.json",
-        [(2, "https://cdn.a.com/p9"), (4, "https://b.org/q2"), (6, "https://b.org/q3")],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_domain_quota(stream, wh, "quota", ckpt, max_per_domain=2)
-    landed = {r.doc_id for r in wh.read("quota").collect()}
-    assert landed == {1, 3, 5, 4}  # a.com rejected, b.org admits id 4 only
-
-
-def test_stream_domain_quota_incremental_ledger(spark, tmp_path):
-    # r11 X176: ledger_table mode — headroom comes from the
-    # incrementally-maintained (domain, _batch_id, n_admitted) ledger,
-    # never a row-grain main-table aggregate; admitted sets must be
-    # IDENTICAL to the zero-state form, and the ledger must reconcile
-    # exactly with the landed table.
-    from alaska_etl_spark.plans.warehouse import Warehouse
-    from alaska_etl_spark.streaming.incremental import stream_domain_quota
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id bigint, url string"
-
-    _write_url_file(
-        src / "b1.json",
-        [
-            (7, "https://a.com/p1"),
-            (3, "https://www.a.com/p2"),
-            (5, "https://A.com/p1#x"),   # canonical dup of doc 7
-            (9, "https://a.com/p3"),
-            (1, "https://b.org/q1"),
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_domain_quota(
-        stream, wh, "quota", ckpt, max_per_domain=2, ledger_table="quota_ledger"
-    )
-    assert {r.doc_id for r in wh.read("quota").collect()} == {1, 3, 5}
-
-    # batch 2: a.com full per the LEDGER; a re-crawl of a landed URL
-    # (id 8 = id 5's resource) must not eat b.org-style headroom either
-    _write_url_file(
-        src / "b2.json",
-        [
-            (2, "https://cdn.a.com/p9"),
-            (8, "https://a.com/p1"),        # landed canonical: anti-joined away
-            (4, "https://b.org/q2"),
-            (6, "https://b.org/q3"),
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_domain_quota(
-        stream, wh, "quota", ckpt, max_per_domain=2, ledger_table="quota_ledger"
-    )
-    assert {r.doc_id for r in wh.read("quota").collect()} == {1, 3, 5, 4}
-
-    # ledger reconciles with the landed table exactly
-    led = {
-        (r.domain, r._batch_id): r.n_admitted
-        for r in wh.read("quota_ledger").collect()
-    }
-    assert led[("a.com", 0)] == 2 and led[("b.org", 0)] == 1
-    assert led[("b.org", 1)] == 1 and ("a.com", 1) not in led
-    landed_counts = {
-        r.domain: r.n
-        for r in wh.read("quota")
-        .groupBy("domain")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    ledger_counts = {}
-    for (d, _b), n in led.items():
-        ledger_counts[d] = ledger_counts.get(d, 0) + n
-    assert ledger_counts == landed_counts
 
 
 def test_parse_robots_groups_and_agent_resolution(spark):
@@ -563,216 +400,6 @@ def test_robots_directives_sitemap_and_crawl_delay(spark):
     assert run("*") == sitemaps | {("a.com", "crawl-delay", "10")}
 
 
-def test_stream_url_frontier_robots_gated(spark, tmp_path):
-    # r11 X181 streaming composition: robots_rules drops DISALLOWED
-    # URLs at admission (they are fetchable-later, not bad rows — the
-    # rejects table stays malformed-only); allow-overrides, canonical
-    # dedup and blocklist still compose.
-    from alaska_etl_spark.operators.urls import parse_robots
-    from alaska_etl_spark.plans.warehouse import Warehouse
-    from alaska_etl_spark.streaming.incremental import stream_url_frontier
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id bigint, url string"
-    robots = spark.createDataFrame(
-        [("a.com", "User-agent: *\nDisallow: /private\nAllow: /private/ok")],
-        "host string, body string",
-    )
-    rr = parse_robots(robots, "host", "body", agent="trainbot")
-
-    _write_url_file(
-        src / "b1.json",
-        [
-            (1, "https://a.com/public/x"),
-            (2, "https://a.com/private/x"),      # robots-denied: dropped
-            (3, "https://a.com/private/ok/y"),   # allow overrides
-            (4, "not a url"),                     # malformed: rejected
-            (5, "https://A.com/public/x#f"),     # canonical dup of 1
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_url_frontier(
-        stream, wh, "frontier", ckpt, robots_rules=rr, rejects_table="bad"
-    )
-    assert {r.doc_id for r in wh.read("frontier").collect()} == {1, 3}
-    assert {r.doc_id for r in wh.read("bad").collect()} == {4}
-
-
-def test_stream_domain_quota_ledger_replay_idempotent(spark, tmp_path):
-    # r11 X176: a FULL REPLAY (checkpoint wiped, same source files, so
-    # every batch re-runs with recycled batch ids) must leave the
-    # landed table AND the ledger bit-identical — the keyed appends
-    # dedup the rows, the (domain, _batch_id) key dedups the counts,
-    # and headroom arithmetic sees nothing new.
-    import shutil
-
-    from alaska_etl_spark.plans.warehouse import Warehouse
-    from alaska_etl_spark.streaming.incremental import stream_domain_quota
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id bigint, url string"
-    _write_url_file(
-        src / "b1.json",
-        [(7, "https://a.com/p1"), (3, "https://a.com/p2"), (1, "https://b.org/q1")],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_domain_quota(
-        stream, wh, "quota", ckpt, max_per_domain=2, ledger_table="led"
-    )
-    _write_url_file(src / "b2.json", [(9, "https://a.com/p3"), (4, "https://b.org/q2")])
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_domain_quota(
-        stream, wh, "quota", ckpt, max_per_domain=2, ledger_table="led"
-    )
-    before_rows = sorted(
-        (r.doc_id, r.domain, r.canonical_url) for r in wh.read("quota").collect()
-    )
-    before_led = sorted(
-        (r.domain, r._batch_id, r.n_admitted) for r in wh.read("led").collect()
-    )
-    # full replay: wipe the checkpoint, stream the SAME files again
-    shutil.rmtree(ckpt)
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_domain_quota(
-        stream, wh, "quota", ckpt, max_per_domain=2, ledger_table="led"
-    )
-    after_rows = sorted(
-        (r.doc_id, r.domain, r.canonical_url) for r in wh.read("quota").collect()
-    )
-    after_led = sorted(
-        (r.domain, r._batch_id, r.n_admitted) for r in wh.read("led").collect()
-    )
-    assert after_rows == before_rows
-    assert after_led == before_led
-
-
-def test_stream_domain_quota_bloom_matches_zero_state(spark, tmp_path):
-    # r12 (VERDICT r11 Missing #2): the Bloom seen-set lane must admit
-    # EXACTLY the zero-state form's rows — across batches, with
-    # canonical dups, cross-batch re-crawls, and the ledger carrying
-    # headroom (the zero-landed-reads configuration).
-    from alaska_etl_spark.operators.pruning import bloom_sidecar_load
-    from alaska_etl_spark.plans.warehouse import Warehouse
-    from alaska_etl_spark.streaming.incremental import stream_domain_quota
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-    bloom = str(tmp_path / "bloom")
-    schema = "doc_id bigint, url string"
-
-    _write_url_file(
-        src / "b1.json",
-        [
-            (7, "https://a.com/p1"),
-            (3, "https://www.a.com/p2"),
-            (5, "https://A.com/p1#x"),   # canonical dup of doc 7
-            (9, "https://a.com/p3"),
-            (1, "https://b.org/q1"),
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_domain_quota(
-        stream, wh, "quota", ckpt, max_per_domain=2,
-        ledger_table="quota_ledger", bloom_path=bloom,
-    )
-    assert {r.doc_id for r in wh.read("quota").collect()} == {1, 3, 5}
-    assert bloom_sidecar_load(spark, bloom) is not None  # sidecar landed
-
-    # batch 2: re-crawl of a landed canonical (maybe lane must catch
-    # it), a full domain, and fresh b.org headroom
-    _write_url_file(
-        src / "b2.json",
-        [
-            (2, "https://cdn.a.com/p9"),
-            (8, "https://a.com/p1"),     # landed canonical: blocked
-            (4, "https://b.org/q2"),
-            (6, "https://b.org/q3"),
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_domain_quota(
-        stream, wh, "quota", ckpt, max_per_domain=2,
-        ledger_table="quota_ledger", bloom_path=bloom,
-    )
-    assert {r.doc_id for r in wh.read("quota").collect()} == {1, 3, 5, 4}
-
-
-def test_stream_url_frontier_bloom_superset_and_recovery(spark, tmp_path):
-    # The sidecar's two safety properties: (a) SUPERSET keys that never
-    # landed (crash between sidecar and rows) still admit via the
-    # maybe-lane exact check; (b) a deleted sidecar rebuilds from the
-    # landed keys and re-crawls stay blocked.
-    import shutil
-
-    from alaska_etl_spark.operators.pruning import (
-        bloom_add,
-        bloom_sidecar_load,
-        bloom_sidecar_write,
-    )
-    from alaska_etl_spark.plans.warehouse import Warehouse
-    from alaska_etl_spark.streaming.incremental import stream_url_frontier
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    bloom = str(tmp_path / "bloom")
-    schema = "doc_id bigint, url string"
-
-    _write_url_file(
-        src / "b1.json",
-        [(1, "https://a.com/p1"), (2, "https://b.org/q1")],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_url_frontier(
-        stream, wh, "frontier", str(tmp_path / "c1"), bloom_path=bloom
-    )
-    assert {r.doc_id for r in wh.read("frontier").collect()} == {1, 2}
-
-    # (a) crash-sim: put a NOT-landed key into the filter (the state a
-    # crash between sidecar write and row land leaves behind)
-    packed, m_bits, n_hashes, _nd = bloom_sidecar_load(spark, bloom)
-    ghost = spark.createDataFrame(
-        [("https://c.net/ghost",)], "canonical_url string"
-    )
-    packed = bloom_add(ghost, "canonical_url", packed, m_bits=m_bits, n_hashes=n_hashes)
-    bloom_sidecar_write(spark, f"{bloom}/base", packed, m_bits, n_hashes)
-    _write_url_file(
-        src / "b2.json",
-        [
-            (3, "https://c.net/ghost"),   # bloom-positive, NOT landed
-            (4, "https://a.com/p1"),      # true re-crawl: blocked
-            (5, "https://d.io/new"),      # definitely new
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_url_frontier(
-        stream, wh, "frontier", str(tmp_path / "c2"), bloom_path=bloom
-    )
-    assert {r.doc_id for r in wh.read("frontier").collect()} == {1, 2, 3, 5}
-
-    # (b) recovery: sidecar gone -> rebuilt from landed keys; the
-    # re-crawl of every landed URL must still be blocked
-    shutil.rmtree(bloom)
-    _write_url_file(
-        src / "b3.json",
-        [(6, "https://d.io/new"), (7, "https://e.edu/fresh")],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_url_frontier(
-        stream, wh, "frontier", str(tmp_path / "c3"), bloom_path=bloom
-    )
-    assert {r.doc_id for r in wh.read("frontier").collect()} == {1, 2, 3, 5, 7}
-    assert bloom_sidecar_load(spark, bloom) is not None  # rebuilt
-
-
 def test_psl_registrable_domain(spark):
     # r12: full PSL semantics — plain/wildcard/exception rules, the
     # default * fallback, and the host-IS-a-public-suffix NULL.
@@ -811,43 +438,3 @@ def test_psl_registrable_domain(spark):
     assert all(
         r["public_suffix"] is None and r["registrable_domain"] is None for r in out
     )
-
-
-def test_bloom_delta_compaction(spark, tmp_path, monkeypatch):
-    # r12: the delta log folds into the base at the compaction
-    # threshold (base-then-delete — OR-idempotent at any crash point),
-    # and the filter keeps blocking re-crawls across the fold.
-    import alaska_etl_spark.operators.pruning as pruning
-    from alaska_etl_spark.operators.pruning import bloom_sidecar_load
-    from alaska_etl_spark.plans.warehouse import Warehouse
-    from alaska_etl_spark.streaming.incremental import stream_url_frontier
-
-    monkeypatch.setattr(pruning, "BLOOM_COMPACT_POSITIONS", 10)  # force it
-    src = tmp_path / "src"
-    src.mkdir()
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    bloom = str(tmp_path / "bloom")
-    schema = "doc_id bigint, url string"
-
-    _write_url_file(
-        src / "b1.json", [(1, "https://a.com/p1"), (2, "https://b.org/q1")]
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_url_frontier(
-        stream, wh, "frontier", str(tmp_path / "c1"), bloom_path=bloom
-    )
-    # 2 urls x 20 hashes > 10 positions -> compacted: delta gone
-    import os
-
-    assert not os.path.exists(f"{bloom}/delta")
-    _packed, _m, _k, n_delta = bloom_sidecar_load(spark, bloom)
-    assert n_delta == 0
-    # post-compaction the filter still blocks the re-crawl
-    _write_url_file(
-        src / "b2.json", [(3, "https://a.com/p1"), (4, "https://c.net/r1")]
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    stream_url_frontier(
-        stream, wh, "frontier", str(tmp_path / "c2"), bloom_path=bloom
-    )
-    assert {r.doc_id for r in wh.read("frontier").collect()} == {1, 2, 4}

@@ -32,6 +32,7 @@ def test_append_creates_main_with_audit(spark, wh):
     assert main.count() == 1
     assert AUDIT_COL in main.columns
     assert main.collect()[0][AUDIT_COL] is not None
+    assert "_row_hash" not in main.columns  # the key digest is never stored
 
 
 def test_reload_is_idempotent(spark, wh):
@@ -367,35 +368,6 @@ def test_apply_changelog_empty_feed_is_identity(spark):
     assert sorted((r.k, r.v) for r in apply_changelog(base, feed, ["k"]).collect()) == [
         (1, "a"), (2, "b"),
     ]
-
-
-def test_append_main_store_row_hash(spark, tmp_path):
-    # r11 X179: store_row_hash persists the key digest so later appends'
-    # existing-side read is a column-pruned scan (no sha2 recompute over
-    # the landed table); idempotence is unchanged; once a table carries
-    # the column it is maintained regardless of the flag; flag-off
-    # tables never gain it.
-    from alaska_etl_spark.plans.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, v string")
-    wh.load(df1, "t", key_cols=["id"], store_row_hash=True)
-    cols = wh.read("t").columns
-    assert "_row_hash" in cols
-    # idempotent re-load: no duplicates, hash column maintained
-    wh.load(df1, "t", key_cols=["id"], store_row_hash=True)
-    assert wh.read("t").count() == 2
-    # a later load WITHOUT the flag must not fork the schema
-    df2 = spark.createDataFrame([(3, "c")], "id bigint, v string")
-    wh.load(df2, "t", key_cols=["id"])
-    out = wh.read("t")
-    assert out.count() == 3 and "_row_hash" in out.columns
-    assert out.filter("_row_hash IS NULL").count() == 0
-    # flag-off table: original schema, idempotence via recompute
-    wh.load(df1, "u", key_cols=["id"])
-    assert "_row_hash" not in wh.read("u").columns
-    wh.load(df1, "u", key_cols=["id"])
-    assert wh.read("u").count() == 2
 
 
 def test_probe_exists_path_and_table_kinds(spark, tmp_path, monkeypatch):

@@ -53,6 +53,9 @@ def main() -> None:
             )
         except Exception as e:  # a broken query must be visible, not skipped
             plan = f"EXPLAIN FAILED: {e}"
+        # string literals holding a NUL (sentinels like "\x00docs")
+        # print it raw; escape it so the dump stays a text file
+        plan = plan.replace("\x00", "\\x00")
         path = os.path.join(out_dir, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(f"-- {name} @ {SF_DIR} ({args.tag})\n{plan}\n")
