@@ -14,18 +14,30 @@ make the append *idempotent*: rows are keyed by a content hash
 column, 2_nws_update.ipynb:1114, attempted exactly this) and
 anti-joined against the existing main table before appending.
 
-Scale: main tables are written partitioned (by ``utc_date`` for the
-weather star) so the anti-join's main-side scan prunes to the partitions
-the staging batch can touch — the incremental batch is small, so Spark
-broadcasts the *staging* side of the anti-join; main is never shuffled.
+Scale: a load costs O(batch), not O(main). One ``Observation`` on the
+staging write yields the batch's row count and its distinct partition
+values, and every read carries a known schema, so the append runs no
+schema-inference or emptiness job of its own. Main tables are written
+partitioned (by ``utc_date`` for the weather star), and the anti-join's
+main side reads only the partition directories the batch touches; its
+key hashes are the side Spark broadcasts, and main is never shuffled.
+A batch whose partitions are all new (every backfill batch) skips the
+anti-join altogether.
+
+Precondition of that pruning: ``partition_col`` is a function of
+``key_cols`` (and a table is always loaded with the same
+``partition_col``), so a re-delivered row lands in the partition its
+first copy did. Every caller meets it — the weather tables partition on
+``to_date(utc_datetime)`` and ``utc_datetime`` is in every key.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 AUDIT_COL = "date_added_utc"
 
@@ -68,6 +80,13 @@ def row_hash(df: DataFrame, key_cols: list[str]) -> DataFrame:
             256,
         ),
     )
+
+
+def _partition_value(col: str) -> Column:
+    """``col`` as the text its partition directory is named by: Spark's
+    string cast, with NULL mapped to ``""`` (both name the default
+    partition)."""
+    return F.coalesce(F.col(col).cast("string"), F.lit(""))
 
 
 #: formats addressed by filesystem path (local, gs://, s3a://, hdfs://);
@@ -172,9 +191,13 @@ class Warehouse:
     def _path(self, table: str) -> str:
         return self._spec(table)["target"]
 
-    def _read_spec(self, spec: dict) -> DataFrame:
+    def _read_spec(self, spec: dict, schema: StructType | None = None) -> DataFrame:
+        """Read ``spec``. A path read given ``schema`` runs no inference
+        job; a named table carries its own schema."""
         reader = self.spark.read.format(spec["format"]).options(**spec["options"])
         if spec["kind"] == "path":
+            if schema is not None:
+                reader = reader.schema(schema)
             return reader.load(spec["target"])
         return reader.option("table", spec["target"]).load()
 
@@ -187,22 +210,13 @@ class Warehouse:
         else:
             writer.option("table", spec["target"]).save()
 
-    def table_exists(self, table: str) -> bool:
-        try:
-            self._read_spec(self._spec(table)).schema
-            return True
-        except Exception:
-            return False
-
     def probe_exists(self, table: str) -> bool:
         """Existence probe that DISTINGUISHES missing from transient
-        error — unlike ``table_exists``'s broad try/except, a
-        filesystem or connector failure RAISES here instead of reading
-        as "absent". Streaming sinks must use this probe: an "absent"
-        verdict resets their ledgers / seen-sets to empty, and only a
-        genuinely-missing table may do that — a transient failure
-        misread as absent would re-admit up to a full quota per domain
-        (the silent-reset bug the explicit probe exists to prevent).
+        error: a filesystem or connector failure RAISES here instead of
+        reading as "absent". Every writer decides create-vs-append with
+        it, because an "absent" verdict skips the dedup against main —
+        a transient failure misread as absent would re-append a batch
+        that already landed.
 
         Path sinks ask the Hadoop FileSystem directly (works for any
         scheme Spark reads: file://, hdfs://, gs://). Table sinks
@@ -249,8 +263,9 @@ class Warehouse:
         self._write_spec(df, spec, "overwrite")
         return spec["target"]
 
-    def read_staging(self, table: str) -> DataFrame:
-        return self._read_spec(self._spec(f"{table}_staging"))
+    def read_staging(self, table: str, schema: StructType) -> DataFrame:
+        """The staging area, read with the staged frame's ``schema``."""
+        return self._read_spec(self._spec(f"{table}_staging"), schema)
 
     # -- K4/K5: audit-timestamped append, create-if-missing --------------
 
@@ -258,31 +273,70 @@ class Warehouse:
         self,
         table: str,
         *,
+        staged: DataFrame,
+        rows: int,
+        parts: list[str],
         key_cols: list[str],
         partition_col: str | None = None,
-        staging_df: DataFrame | None = None,
     ) -> None:
-        """staging → main with ``date_added_utc`` audit column and
+        """``staged`` → main with ``date_added_utc`` audit column and
         hash-anti-join idempotence (FIXTURES §5 invariant 5: re-running a
-        load must not duplicate rows)."""
-        staged = staging_df if staging_df is not None else self.read_staging(table)
-        staged = row_hash(staged, key_cols)
+        load must not duplicate rows). ``rows`` and ``parts`` are the
+        batch's row count and distinct :func:`_partition_value` texts,
+        as :meth:`load` observes them on the staging write.
 
-        # Empty batches are a no-op: a 0-row partitioned parquet write
-        # produces no data files (an unreadable "table"), and appending
-        # nothing needs no audit row. The main table appears on the
-        # first non-empty load.
-        if staged.isEmpty():
+        Empty batches are a no-op: a 0-row partitioned parquet write
+        produces no data files (an unreadable "table"), and appending
+        nothing needs no audit row. The main table appears on the first
+        non-empty load."""
+        if rows == 0:
             return
-
-        if self.table_exists(table):
-            existing = row_hash(self.read(table), key_cols).select("_row_hash")
-            # staging batch is the small side → broadcast it;
-            # main-side scan reads only the hash column (pruned).
+        spec = self._spec(table)
+        existing = None
+        if self.probe_exists(table):
+            existing = self._touched(spec, staged.schema, parts, partition_col)
+        staged = row_hash(staged, key_cols)
+        if existing is not None:
+            # the touched partitions' key hashes are the broadcast side
+            existing = row_hash(existing, key_cols).select("_row_hash")
             staged = staged.join(existing, "_row_hash", "left_anti")
-
         out = staged.drop("_row_hash").withColumn(AUDIT_COL, F.current_timestamp())
-        self._write_spec(out, self._spec(table), "append", partition_col=partition_col)
+        self._write_spec(out, spec, "append", partition_col=partition_col)
+
+    def _touched(
+        self, spec: dict, schema: StructType, parts: list[str], partition_col: str | None
+    ) -> DataFrame | None:
+        """The rows of main a batch over ``parts`` can collide with, or
+        None when none of its partitions exists yet. Sound because
+        ``partition_col`` is a function of the key (module docstring).
+
+        Path tables read just the existing ``partition_col=<v>``
+        directories under ``basePath``; named tables, which have no
+        directories, filter on ``partition_col``. The read schema is
+        the staged frame's plus the audit column, so no footer is
+        inferred and a positional format lines up; parquet and orc
+        still read only the key columns."""
+        schema = StructType([*schema.fields, StructField(AUDIT_COL, TimestampType())])
+        if partition_col is None:
+            return self._read_spec(spec, schema)
+        if spec["kind"] != "path":
+            return self._read_spec(spec).filter(_partition_value(partition_col).isin(parts))
+        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        dirs = []
+        for v in parts:
+            d = os.path.join(spec["target"], utils.getPartitionPathString(partition_col, v))
+            fs, p = fs_and_path(self.spark, d)
+            if fs.exists(p):
+                dirs.append(d)
+        if not dirs:
+            return None
+        return (
+            self.spark.read.format(spec["format"])
+            .options(**spec["options"])
+            .option("basePath", spec["target"])
+            .schema(schema)
+            .load(dirs)
+        )
 
     def load(
         self,
@@ -292,9 +346,23 @@ class Warehouse:
         key_cols: list[str],
         partition_col: str | None = None,
     ) -> None:
-        """Full protocol: staging overwrite then idempotent append."""
-        self.write_staging(df, table)
-        self.append_main(table, key_cols=key_cols, partition_col=partition_col)
+        """Full protocol: staging overwrite then idempotent append. The
+        staging write observes the batch's row count and partition
+        values, so the append needs no pass of its own to learn them."""
+        obs = Observation()
+        facts = [F.count(F.lit(1)).alias("rows")]
+        if partition_col:
+            facts.append(F.collect_set(_partition_value(partition_col)).alias("parts"))
+        self.write_staging(df.observe(obs, *facts), table)
+        got = obs.get
+        self.append_main(
+            table,
+            staged=self.read_staging(table, df.schema),
+            rows=got["rows"],
+            parts=list(got.get("parts", [])),
+            key_cols=key_cols,
+            partition_col=partition_col,
+        )
 
     # -- bucketed catalog tables (the co-located-join path, SURVEY §4) ---
 
@@ -392,7 +460,7 @@ class Warehouse:
         """
         staged = row_hash(df, key_cols)
         incoming = staged.withColumn(AUDIT_COL, F.current_timestamp())
-        if not self.table_exists(table):
+        if not self.probe_exists(table):
             self._write_spec(
                 incoming.drop("_row_hash"), self._spec(table), "append", partition_col
             )
@@ -457,7 +525,7 @@ class Warehouse:
             .withColumn("effective_to", F.lit(None).cast("timestamp"))
             .withColumn("is_current", F.lit(True))
         )
-        if not self.table_exists(table):
+        if not self.probe_exists(table):
             self._write_spec(
                 incoming.withColumn("_scd_state", F.lit("current")),
                 spec,

@@ -6,8 +6,8 @@ whitespace into 38 fields, and builds a pandas frame (reference
 airflow/dags/uscrn_dag.py:133-206). Here the whole thing is one lazy
 Spark plan over ``spark.read.text``:
 
-    text scan → substring-prefix semi-filter → split → per-field cast
-    → sentinel null / C→F convert → datetime compose → broadcast dim join
+    text scan → broadcast dim join on the line prefix → split →
+    per-field cast → sentinel null / C→F convert → datetime compose
     → deterministic dedup
 
 Everything is built-in Catalyst expressions (whole-stage codegen); at
@@ -53,17 +53,19 @@ def parse_uscrn_lines(
 
     ``lines`` must have a string column ``value_col`` (one raw 38-field
     line per row — the shape of ``spark.read.text``). ``locations`` is
-    the 23-row station dim; it is broadcast for both the line-prefix
-    membership filter (S5) and the name join (J1).
+    the 23-row station dim, keyed by ``wbanno``; it is broadcast once,
+    and one inner join is both the line-prefix membership filter (S5)
+    and the name join (J1).
     """
     toks = F.split(F.trim(F.col(value_col)), r"\s+")
 
-    # line-prefix filter (reference uscrn_dag.py:137-146): broadcast
-    # left-semi join against the dim instead of a driver-side `in` set —
-    # same semantics, no collected allowlist, no shuffle.
+    # line-prefix filter (reference uscrn_dag.py:137-146) and J1 fact↔dim
+    # join in one broadcast inner join on the prefix. wbanno is unique in
+    # the dim, so each kept line gains exactly its station_location (the
+    # raw line's lon/lat stay) — no collected allowlist, no shuffle.
     df = (
         lines.withColumn("wbanno", F.substring(F.trim(F.col(value_col)), 1, 5))
-        .join(F.broadcast(locations.select("wbanno")), "wbanno", "left_semi")
+        .join(F.broadcast(locations.select("wbanno", "station_location")), "wbanno")
         .withColumn("_toks", toks)
         .filter(F.size("_toks") == len(USCRN_RAW_FIELDS))
     )
@@ -80,30 +82,16 @@ def parse_uscrn_lines(
         else:
             c = c.cast("double")
         cols.append(c.alias(name))
-    df = df.select("wbanno", *cols)
+    df = df.select("wbanno", "station_location", *cols).withColumns({
+        **{c: c_to_f(c) if convert_to_f else nullify_sentinel(c) for c in _TEMP_COLS},
+        **{c: nullify_sentinel(c) for c in _MEASURE_COLS},
+        "utc_datetime": compose_datetime("utc_date", "utc_time"),
+        "lst_datetime": compose_datetime("lst_date", "lst_time"),
+    })
 
-    for c in _TEMP_COLS:
-        df = df.withColumn(c, c_to_f(c) if convert_to_f else nullify_sentinel(c))
-    for c in _MEASURE_COLS:
-        df = df.withColumn(c, nullify_sentinel(c))
-
-    df = (
-        df.withColumn("utc_datetime", compose_datetime("utc_date", "utc_time"))
-        .withColumn("lst_datetime", compose_datetime("lst_date", "lst_time"))
-        .drop("utc_date", "utc_time", "lst_date", "lst_time")
-    )
-
-    # regex anti-projection of soil columns (reference uscrn_dag.py:184)
-    df = df.select([c for c in df.columns if "soil" not in c])
-
-    # J1: broadcast fact↔dim join for station_location + coordinates from
-    # the dim (the raw line's lon/lat stay, dim provides the name).
-    df = df.join(
-        F.broadcast(locations.select("wbanno", "station_location")),
-        "wbanno",
-        "left",
-    )
-
+    # the output projection also drops the raw date/time parts and the
+    # soil columns (the reference's regex anti-projection,
+    # uscrn_dag.py:184)
     order = [
         "station_location", "wbanno", "crx_vn", "utc_datetime", "lst_datetime",
         "longitude", "latitude", "t_calc", "t_hr_avg", "t_max", "t_min",

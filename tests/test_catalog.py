@@ -51,7 +51,7 @@ def test_empty_ingest_is_safe(spark, tmp_path, locations):
     empty = spark.createDataFrame([], "value string")
     metrics = run_uscrn(spark, wh, empty, locations)
     assert metrics["n_rows"] == 0
-    assert not wh.table_exists("uscrn")
+    assert not wh.probe_exists("uscrn")
 
     run_uscrn(spark, wh, spark.createDataFrame([(uscrn_line(),)], "value string"), locations)
     assert wh.read("uscrn").count() == 1

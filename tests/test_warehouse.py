@@ -22,8 +22,9 @@ def _batch(spark, rows):
 
 def test_staging_overwrite(spark, wh):
     wh.write_staging(_batch(spark, [(1, "a", "p1")]), "t")
-    wh.write_staging(_batch(spark, [(2, "b", "p1"), (3, "c", "p1")]), "t")
-    assert wh.read_staging("t").count() == 2
+    b = _batch(spark, [(2, "b", "p1"), (3, "c", "p1")])
+    wh.write_staging(b, "t")
+    assert wh.read_staging("t", b.schema).count() == 2
 
 
 def test_append_creates_main_with_audit(spark, wh):
@@ -35,12 +36,14 @@ def test_append_creates_main_with_audit(spark, wh):
     assert "_row_hash" not in main.columns  # the key digest is never stored
 
 
-def test_reload_is_idempotent(spark, wh):
+@pytest.mark.parametrize("partition_col", [None, "part"])
+def test_reload_is_idempotent(spark, wh, partition_col):
     """Invariant 5: re-running the same load must not duplicate rows —
-    the fix for the reference's double-load bug (nws_dag.py:175+187)."""
+    the fix for the reference's double-load bug (nws_dag.py:175+187).
+    Partitioned, the re-delivered rows sit in a touched partition."""
     b = _batch(spark, [(1, "a", "p1"), (2, "b", "p1")])
-    wh.load(b, "t", key_cols=["k"])
-    wh.load(b, "t", key_cols=["k"])
+    wh.load(b, "t", key_cols=["k"], partition_col=partition_col)
+    wh.load(b, "t", key_cols=["k"], partition_col=partition_col)
     assert wh.read("t").count() == 2
 
 
@@ -62,6 +65,81 @@ def test_partitioned_write(spark, wh, tmp_path):
     assert (tmp_path / "t" / "part=p1").exists()
     assert (tmp_path / "t" / "part=p2").exists()
     assert wh.read("t").count() == 2
+
+
+def test_append_reads_only_touched_partitions(spark, wh, tmp_path):
+    """The existing side of the anti-join reads only the partitions the
+    batch touches: a corrupt data file in an untouched partition is
+    never opened, and the load lands exactly its new rows."""
+    wh.load(
+        _batch(spark, [(1, "a", "p1"), (2, "b", "p2"), (3, "c", "p3")]),
+        "t",
+        key_cols=["k"],
+        partition_col="part",
+    )
+    [victim] = _files(tmp_path, "t/part=p1")
+    with open(victim, "wb") as f:
+        f.write(b"not a data file" * 64)
+
+    wh.load(
+        _batch(spark, [(2, "b", "p2"), (4, "d", "p2"), (5, "e", "p4")]),
+        "t",
+        key_cols=["k"],
+        partition_col="part",
+    )
+    rest = (
+        spark.read.format(wh.fmt)
+        .schema(f"k bigint, v string, {AUDIT_COL} timestamp, part string")
+        .load(f"{tmp_path}/t")
+        .filter("part != 'p1'")
+    )
+    assert sorted((r.k, r.part) for r in rest.collect()) == [
+        (2, "p2"), (3, "p3"), (4, "p2"), (5, "p4"),
+    ]
+
+
+class _JobCounting(Warehouse):
+    """Records how many Spark jobs each ``append_main`` call runs, read
+    from its own job group through ``statusTracker``."""
+
+    group = "test-append-main"
+
+    def append_main(self, table, **kwargs):
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", self.group)
+        before = set(sc.statusTracker().getJobIdsForGroup(self.group))
+        try:
+            super().append_main(table, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        self.jobs = len(set(sc.statusTracker().getJobIdsForGroup(self.group)) - before)
+
+
+def test_append_jobs_do_not_grow_with_main(spark, tmp_path):
+    """A load's append runs a fixed number of jobs, whatever the size of
+    main: no schema inference, no emptiness probe, and an anti-join
+    only when a touched partition already exists."""
+    wh = _JobCounting(spark, str(tmp_path))
+    counts = {}
+    for n_parts in (10, 60):
+        t = f"t{n_parts}"
+        rows = [(i, "v", f"p{i:02d}") for i in range(n_parts)]
+        wh.load(_batch(spark, rows), t, key_cols=["k"], partition_col="part")
+        wh.load(_batch(spark, [(1000, "n", "new")]), t, key_cols=["k"], partition_col="part")
+        new_only = wh.jobs
+        wh.load(
+            _batch(spark, [(3, "v", "p03"), (1001, "n", "p03"), (1002, "n", "new2")]),
+            t,
+            key_cols=["k"],
+            partition_col="part",
+        )
+        counts[n_parts] = (new_only, wh.jobs)
+        assert wh.read(t).count() == n_parts + 3
+    new_only, touched = counts[10]
+    assert new_only == 1  # only new partitions: just the write, no anti-join
+    assert touched <= 2  # broadcast the touched hashes, then write
+    assert counts[60] == counts[10]
 
 
 def test_assert_schema_reports_all_violations(spark):

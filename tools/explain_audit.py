@@ -50,6 +50,9 @@ def main() -> None:
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
+        # string literals holding a NUL (sentinels like "\x00docs")
+        # print it raw; escape it so the dump stays a text file
+        plan = plan.replace("\x00", "\\x00")
         out.append(f"## {name}\n\n```\n{plan.rstrip()}\n```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAINS.md"), "w") as f:
         f.write("\n".join(out))
