@@ -11,15 +11,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from alaska_etl_spark.schemas import STAR_SCHEMAS
+
+TESTDATA_TABLES = list(STAR_SCHEMAS)
 
 
 def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Temp views over the driver's parquet tables (TESTDATA.md).
-    Goes through plans.queries._t so the events table's TIMESTAMP(NANOS)
-    column lands as timestamp_ntz here exactly as in the query layer."""
+    """Temp views over the driver's parquet tables (TESTDATA.md), read
+    through plans.queries._t so they carry the same declared schemas as
+    the query layer."""
     from alaska_etl_spark.plans.queries import _t
 
     for t in TESTDATA_TABLES:

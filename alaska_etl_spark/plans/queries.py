@@ -35,6 +35,7 @@ from alaska_etl_spark.operators.dedup import (
     simhash_near_dup_pairs,
 )
 from alaska_etl_spark.operators.similarity import cosine_topk, ivf_topk
+from alaska_etl_spark.schemas import STAR_SCHEMAS
 
 
 def _mat(sql: str, *names: str) -> str:
@@ -57,27 +58,9 @@ def _mat(sql: str, *names: str) -> str:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read a testdata table. The events table stores TIMESTAMP(NANOS)
-    parquet, which Spark only reads as raw int64 nanos
-    (spark.sql.legacy.parquet.nanosAsLong); we convert to micros
-    timestamp_ntz by *truncation* — integer `div`, matching DuckDB's
-    nanos→micros narrowing, so oracle timestamps compare equal."""
-    if name == "events":
-        # session.get_spark sets this at build time; a foreign session
-        # (the round driver's plain one) needs the runtime fallback or
-        # the TIMESTAMP(NANOS) file is unreadable. Guarded so our own
-        # sessions are never mutated mid-query.
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        if spark.conf.get(conf_key, "false") != "true":
-            spark.conf.set(conf_key, "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts",
-                F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-            )
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Read a star table with its declared schema: no schema-inference
+    job. An unknown ``name`` raises ``KeyError``."""
+    return spark.read.schema(STAR_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _cents(col):

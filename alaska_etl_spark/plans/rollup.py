@@ -103,7 +103,7 @@ def refresh_rollup(
     if not fs.exists(hpath):
         newp.write.mode("overwrite").partitionBy(DAY_COL).parquet(path)
         return
-    existing = spark.read.parquet(path)
+    existing = spark.read.schema(newp.schema).parquet(path)
     days = [r[0] for r in newp.select(DAY_COL).distinct().collect()]
     touched = existing.filter(F.col(DAY_COL).isin(days))
     merged = merge_partials(touched, newp, key_cols=key_cols)

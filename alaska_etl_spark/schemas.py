@@ -1,4 +1,12 @@
-"""Explicit schemas for the warehouse star (SURVEY §1.3, FIXTURES §4).
+"""Explicit schemas for the weather warehouse star (SURVEY §1.3,
+FIXTURES §4) and for the ten tables of the query-registry star.
+
+Registry star (``STAR_SCHEMAS``): region, nation, customer, supplier,
+part, orders, lineitem, events, documents and embeddings, each stored
+as ``<sf_dir>/<name>.parquet`` (TESTDATA.md; ``perfbench.gen.write_star``
+writes the same layout). The types are what Spark infers from those
+files, declared so that a registry read runs no schema-inference job;
+tests/test_schemas.py pins them against the files.
 
 The reference declares BigQuery ``SchemaField`` lists with REQUIRED/
 NULLABLE modes and per-column descriptions (reference
@@ -15,7 +23,10 @@ INTEGER→LongType, DATETIME (wall clock, stored as local AKST + UTC pairs)
 from __future__ import annotations
 
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
+    FloatType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -133,3 +144,52 @@ LOCATIONS_SCHEMA = StructType(
         _f("latitude", DoubleType(), False),
     ]
 )
+
+
+# -- registry star: the query registry's input tables (TESTDATA.md) ---------
+
+_STAR_TYPES = {
+    "int": IntegerType(),
+    "bigint": LongType(),
+    "double": DoubleType(),
+    "string": StringType(),
+    "timestamp_ntz": TimestampNTZType(),
+    "array<float>": ArrayType(FloatType()),
+}
+
+
+def _star(cols: str) -> StructType:
+    """``"name type, ..."`` -> StructType, every field nullable (as
+    Spark reads any parquet column)."""
+    return StructType(
+        [StructField(n, _STAR_TYPES[t]) for n, t in (c.split() for c in cols.split(","))]
+    )
+
+
+STAR_SCHEMAS: dict[str, StructType] = {
+    "region": _star("r_regionkey int, r_name string"),
+    "nation": _star("n_nationkey int, n_name string, n_regionkey int"),
+    "customer": _star(
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, c_mktsegment string"
+    ),
+    "supplier": _star("s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double"),
+    "part": _star(
+        "p_partkey bigint, p_name string, p_brand string, p_type string, p_size int,"
+        " p_retailprice double"
+    ),
+    "orders": _star(
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_totalprice double,"
+        " o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": _star(
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int,"
+        " l_quantity double, l_extendedprice double, l_discount double, l_tax double,"
+        " l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
+    ),
+    "events": _star(
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, value double,"
+        " props string"
+    ),
+    "documents": _star("doc_id bigint, text string, lang string, source string, n_chars bigint"),
+    "embeddings": _star("vec_id bigint, embedding array<float>, label int"),
+}

@@ -105,12 +105,6 @@ def get_spark(
         # local mode: the driver JVM IS the executor; Spark's 1g default
         # OOMs a 32-thread sf0.1 sweep (found by the full-registry gate)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # TIMESTAMP(NANOS) parquet (the events table) is unreadable by
-        # Spark unless surfaced as raw int64 nanos; set it at session
-        # build so query functions stay side-effect-free (plans/queries
-        # only falls back to a runtime set on foreign sessions, e.g. the
-        # round driver's plain one).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

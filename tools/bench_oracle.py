@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+from alaska_etl_spark.schemas import STAR_SCHEMAS
 
 
 def main() -> None:
@@ -48,7 +48,7 @@ def main() -> None:
     require_idle("ORACLE_DETAIL.json", loadavg[0], force)
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in STAR_SCHEMAS:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )

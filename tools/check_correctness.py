@@ -25,12 +25,17 @@ from __future__ import annotations
 import datetime as _dt
 import decimal as _decimal
 import math
+import os
 import sys
 
 import numpy as np
 import pandas as pd
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from alaska_etl_spark.schemas import STAR_SCHEMAS  # noqa: E402
+
+TABLES = list(STAR_SCHEMAS)
 
 
 def canon(v):
@@ -106,7 +111,6 @@ def main():
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
     from alaska_etl_spark.session import get_spark
 
