@@ -13,11 +13,19 @@ all of that is replaced by Tungsten spill-aware execution configured here.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from alaska_etl_spark import _cds
+
+#: What class-data sharing did for the gateway JVM this process launched
+#: last (None before the first launch): ``active``, ``built``,
+#: ``rejected`` or ``skipped:<reason>``; see ``alaska_etl_spark._cds``.
+#: A ``get_spark`` call that reuses a running JVM leaves it unchanged.
+cds_state: str | None = None
 
 
 def get_spark(
@@ -28,11 +36,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
+    A call that launches the gateway JVM starts it from a class-data
+    archive that it builds on first use (``alaska_etl_spark._cds``), and
+    records the outcome in ``cds_state``.
+
     Defaults chosen for scale:
       - AQE on: coalesces post-shuffle partitions at small SF, splits
         skewed shuffle partitions at large SF — the same plan text works
         at sf0.001 and at 100 TB.
-      - 64 MiB broadcast threshold: all star dims (region/nation/
+      - 32 MiB broadcast threshold: all star dims (region/nation/
         supplier/customer at small SF, locations/column_descriptions in
         the weather star) become broadcast-hash joins; the big
         fact-to-fact joins fall through to sort-merge on their keys.
@@ -87,7 +99,7 @@ def get_spark(
             "spark.sql.files.minPartitionNum",
             os.environ.get(
                 "SPARK_GRAFT_MIN_PARTITIONS",
-                str(2 * int(os.environ.get("SPARK_GRAFT_CPUS", "32"))),
+                str(2 * int(cpus)),
             ),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -107,7 +119,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.ui.enabled", "false")
         # PySpark 4's DataFrame debugging wraps EVERY DataFrame/Column
@@ -129,12 +141,14 @@ def get_spark(
         builder = builder.master(master)
     elif not SparkSession.getActiveSession():
         builder = builder.master(f"local[{cpus}]")
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
-
-
-import contextlib
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return builder.getOrCreate()
+    global cds_state
+    spark, cds_state = _cds.launch(builder, extra_conf)
+    return spark
 
 
 @contextlib.contextmanager

@@ -68,9 +68,20 @@ def _pinned(df):
     return n
 
 
-@pytest.mark.parametrize("table", TESTDATA_TABLES)
-def test_plan_scan_partitions_matches_spark_on_testdata(spark, table):
-    _pinned(_t(spark, SF_DIR, table))
+#: every testdata scale; sf0.01 cases keep their bare table-name ids
+SCALES = {sf: os.path.join(os.path.dirname(SF_DIR), sf) for sf in ("sf0.001", "sf0.01", "sf0.1")}
+
+
+@pytest.mark.parametrize(
+    "sf, table",
+    [
+        pytest.param(sf, table, id=table if sf == "sf0.01" else f"{sf}-{table}")
+        for sf in SCALES
+        for table in TESTDATA_TABLES
+    ],
+)
+def test_plan_scan_partitions_matches_spark_on_testdata(spark, sf, table):
+    _pinned(_t(spark, SCALES[sf], table))
 
 
 def test_plan_scan_partitions_many_tiny_files(spark, tmp_path):
