@@ -70,11 +70,3 @@ def floor_hour(col: Column | str) -> Column:
 #: deliberately ignoring DST (nws_dag.py:102-103). Parity kept; civil-time
 #: callers can convert with from_utc_timestamp('America/Anchorage').
 AKST_OFFSET_HOURS = 9
-
-
-def fixed_offset_utc(lst_col: Column | str, hours: int = AKST_OFFSET_HOURS) -> Column:
-    """local wall clock + fixed offset → UTC wall clock (reference
-    nws_dag.py:102-103; known divergence from civil Alaska time is
-    documented, SURVEY §7.4)."""
-    c = F.col(lst_col) if isinstance(lst_col, str) else lst_col
-    return c + F.expr(f"INTERVAL {hours} HOURS")

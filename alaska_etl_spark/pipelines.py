@@ -111,11 +111,15 @@ def run_nws(
     """Scraped landscape tables → nws snapshot table (reference nws_dag
     §3.2). ``year`` is explicit — never wall clock (SURVEY §7.4).
 
+    The snapshot is built on the driver (``pivot_forecast``) and enters
+    Spark as one typed single-partition relation (``forecast_long_df``),
+    so the load's plan has no shuffle and no Python-worker scan before
+    the staging write.
+
     Snapshot semantics: the key includes last_update_nws, so re-loading
     the same snapshot is a no-op while a NEW snapshot of the same
     forecast hours appends (history kept, reference §1.1)."""
-    long_df = forecast_long_df(spark, tables)
-    snap = pivot_forecast(long_df, year=year)
+    snap = forecast_long_df(spark, pivot_forecast(tables, year=year))
     warehouse.load(
         _with_partition(snap),
         "nws",

@@ -111,7 +111,7 @@ USCRN_WIND_SCHEMA = StructType(
 
 NWS_SCHEMA = StructType(
     [
-        _f("location", StringType(), False, "Forecast location (station name)"),
+        _f("location", StringType(), True, "Forecast location (station name)"),
         _f("utc_datetime", TimestampNTZType(), False, "Forecast-valid hour, UTC wall clock"),
         _f("lst_datetime", TimestampNTZType(), False, "Forecast-valid hour, local (AKST fixed offset)"),
         _f("temperature_f", LongType(), True, "Forecast temperature", "Fahrenheit"),

@@ -8,28 +8,39 @@ The reference transposes dict-side (``transpose_as_dict``) and
 forward-fills the sparse Date row with an in-place list walk
 (utils/utils.py:144-149). Here:
 
-- the *parser* (:func:`parse_landscape_tables`) is deliberately plain
-  driver Python — it turns scraped cell lists into long-format tuples
-  ``(location, last_update, seq, attr, value)`` with an explicit ingest
-  sequence, because forward fill needs an order Spark will not invent
-  (SURVEY §7.4);
-- everything after is one Spark plan: pivot (groupBy+pivot with explicit
-  attribute values → single pass), window forward-fill, year-aware
-  datetime composition (year is an injected parameter, fixing the
-  reference's ``datetime.now().year`` Dec→Jan rollover bug,
-  nws_dag.py:97-100), fixed-offset UTC, typed casts, deterministic dedup.
+- :func:`pivot_forecast` is one driver-side pass over the scraped
+  cells, which already arrive in forecast-hour order: pivot, Date
+  forward fill, year-aware datetimes (year is an injected parameter,
+  fixing the reference's ``datetime.now().year`` Dec→Jan rollover bug,
+  nws_dag.py:97-100), fixed-offset UTC, sentinel fills, typed casts and
+  the keep-earliest dedup. A scrape is 3,312 rows, so a Spark plan for
+  this costs more in shuffles and Python-worker scans than the work;
+- :func:`forecast_long_df` hands the typed rows to Spark as one
+  single-partition relation built from a ``pyarrow.Table``, in the
+  declared :data:`~alaska_etl_spark.schemas.NWS_SCHEMA`.
+
+Casts follow Spark's ANSI string casts, which the earlier Spark plan
+ran: a cell that cast rejected raises ``ValueError`` here, never lands
+as NULL. The one deliberate difference is stricter: Java's hexadecimal
+floats (``0x1p3``) raise.
 """
 
 from __future__ import annotations
 
+import contextlib
+import datetime as dt
+import re
 from typing import Any, Iterable
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from alaska_etl_spark.functions.cleaning import normalize_column_name
-from alaska_etl_spark.functions.conversions import fixed_offset_utc
-from alaska_etl_spark.operators.dedup import dedup_keep_first
+from alaska_etl_spark.functions.conversions import AKST_OFFSET_HOURS
+from alaska_etl_spark.plans.warehouse import AUDIT_COL
+from alaska_etl_spark.schemas import NWS_SCHEMA
 
 #: landscape attribute rows, scrape order (FIXTURES §3)
 NWS_ATTRS = [
@@ -51,14 +62,67 @@ NWS_ATTRS = [
     "Sleet",
     "Fog",
 ]
+_ATTRS = frozenset(NWS_ATTRS)
 
-_INT_COLS = ["temperature_f", "dewpoint_f", "wind_chill_f", "surface_wind_mph", "gust", "sky_cover_pct"]
-_FLOAT_COLS = ["precipitation_potential_pct", "relative_humidity_pct"]
-_FLAG_COLS = ["rain", "thunder", "snow", "freezing_rain", "sleet", "fog"]
+#: what :func:`forecast_long_df` hands to Spark: ``NWS_SCHEMA`` without
+#: the audit column the append adds, and without field metadata, so the
+#: landed files keep their schema.
+FORECAST_SCHEMA = StructType(
+    [StructField(f.name, f.dataType, f.nullable) for f in NWS_SCHEMA if f.name != AUDIT_COL]
+)
+_ARROW_SCHEMA = to_arrow_schema(FORECAST_SCHEMA)
+
+# Spark's string -> number casts trim these first: bytes <= 0x20 (and
+# DEL for integers), then accept exactly these spellings.
+_LONG_TRIM = "".join(map(chr, range(0x21))) + "\x7f"
+_DOUBLE_TRIM = _LONG_TRIM[:-1]
+_LONG = re.compile(r"[+-]?[0-9]+")
+_DOUBLE = re.compile(r"[+-]?(?:NaN|Infinity|(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?[fFdD]?)")
+_DOUBLE_WORDS = {"inf", "+inf", "infinity", "+infinity", "-inf", "-infinity", "nan"}
+# 'M/d/yyyy H:mm' as Spark parses it: unpadded or padded fields, a
+# four-digit year, two-digit minutes
+_STAMP = re.compile(r"([0-9]+)/([0-9]+)/([0-9]{4}) ([0-9]+):([0-9]{2})")
 
 
-def parse_landscape_tables(tables: Iterable[dict[str, Any]]) -> list[tuple]:
-    """Scraped landscape tables → long tuples.
+def _to_long(cell: str, bits: int = 64) -> int:
+    t = cell.strip(_LONG_TRIM)
+    if _LONG.fullmatch(t) and -(2 ** (bits - 1)) <= int(t) < 2 ** (bits - 1):
+        return int(t)
+    raise ValueError(f"cannot cast {cell!r} to a {bits}-bit integer")
+
+
+def _to_double(cell: str) -> float:
+    t = cell.strip(_DOUBLE_TRIM)
+    if _DOUBLE.fullmatch(t):
+        return float(t.rstrip("fFdD"))
+    if t.lower() in _DOUBLE_WORDS:
+        return float(t)
+    raise ValueError(f"cannot cast {cell!r} to a double")
+
+
+def _timestamp(text: str) -> dt.datetime:
+    m = _STAMP.fullmatch(text)
+    if m:
+        month, day, year, hour, minute = map(int, m.groups())
+        with contextlib.suppress(ValueError, OverflowError):
+            return dt.datetime(year, month, day, hour, minute)
+    raise ValueError(f"cannot parse {text!r} as 'M/d/yyyy H:mm'")
+
+
+_CASTS = {LongType(): _to_long, DoubleType(): _to_double}
+_ATTR_OF = {normalize_column_name(a): a for a in NWS_ATTRS}
+#: (attribute row, cast or None for raw strings, value of a blank cell)
+#: per value column, in schema order from ``temperature_f`` to ``fog``
+_VALUES = [
+    (_ATTR_OF[f.name], _CASTS.get(f.dataType), 0 if f.name == "gust" else None)
+    for f in FORECAST_SCHEMA.fields[3:-1]
+]
+_UTC_OFFSET = dt.timedelta(hours=AKST_OFFSET_HOURS)
+
+
+def pivot_forecast(tables: Iterable[dict[str, Any]], *, year: int) -> list[tuple]:
+    """Scraped landscape tables → one typed tuple per (location,
+    forecast hour), in :data:`FORECAST_SCHEMA` order.
 
     Each input dict: ``{"location": str, "last_update": str
     ('M/D/YYYY H:mm' page timestamp), "pages": [ {"rows":
@@ -71,108 +135,85 @@ def parse_landscape_tables(tables: Iterable[dict[str, Any]]) -> list[tuple]:
     emits) which overrides the table-level one for that page's rows —
     mirroring the reference's per-soup stamping.
 
-    Output tuples: (location, last_update, seq, attr, value) where seq
-    is the global forecast-hour position across pages — the explicit
-    order the forward fill and dedup windows run over.
+    A table's forecast-hour positions run on across its pages; a page is
+    as wide as its longest row, unknown attribute rows included. Per
+    (location, last_update), in that order:
+
+    - Date is forward-filled over its blank cells (ASCII spaces trimmed);
+    - ``year`` is the year of the first date; a later month smaller
+      than the first one is in ``year + 1`` (the rollover the
+      reference's wall-clock year could not do, SURVEY §7.4);
+    - utc = local + 9 h, fixed offset (no DST);
+    - a blank Gust is 0 and any other blank number NULL (P8, reference
+      nws_dag.py:94); flags and Wind Dir stay raw strings;
+    - when a cell repeats an attribute at one position, the first wins.
+
+    Overlapping AheadHour pages repeat boundary hours (reference
+    nws_dag.py:106-111): per (location, utc, local hour) the earliest
+    position wins, and the first table given on a tie.
     """
-    out: list[tuple] = []
+    # (location, last_update) -> position -> attribute -> cell
+    snaps: dict[tuple, dict[int, dict[str, str]]] = {}
     for tbl in tables:
-        loc = tbl["location"]
-        tbl_update = tbl["last_update"]
+        loc, tbl_update = tbl["location"], tbl["last_update"]
         seq_base = 0
         for page in tbl["pages"]:
-            last_update = page.get("last_update", tbl_update)
+            hours = snaps.setdefault((loc, page.get("last_update", tbl_update)), {})
             width = 0
-            for row in page["rows"]:
-                attr, values = row[0], row[1:]
-                width = max(width, len(values))
-                for i, v in enumerate(values):
-                    out.append((loc, last_update, seq_base + i, attr, v))
+            for attr, *cells in page["rows"]:
+                width = max(width, len(cells))
+                for seq, cell in enumerate(cells, seq_base):
+                    hour = hours.setdefault(seq, {})
+                    if attr in _ATTRS:
+                        hour.setdefault(attr, cell)
             seq_base += width
-    return out
+
+    kept: dict[tuple, tuple[int, tuple]] = {}
+    for (loc, stamp), hours in snaps.items():
+        if not hours:
+            continue
+        issued = None if stamp is None else _timestamp(stamp)
+        date = first_month = None
+        for seq in sorted(hours):
+            cells = hours[seq]
+            date = (cells.get("Date") or "").strip(" ") or date
+            if date is None:
+                raise ValueError(f"{loc} {stamp}: no Date before position {seq}")
+            month = _to_long(date.split("/")[0], 32)
+            if first_month is None:
+                first_month = month
+            hour = cells.get("Hour (AKST)")
+            if hour is None:
+                raise ValueError(f"{loc} {stamp}: no Hour (AKST) at position {seq}")
+            row_year = year + (month < first_month)
+            lst = _timestamp(f"{date}/{row_year} {_to_long(hour, 32)}:00")
+            values = []
+            for attr, cast, blank in _VALUES:
+                cell = cells.get(attr)
+                if cast is not None and cell is not None:
+                    cell = cell.strip(" ")
+                    cell = cast(cell) if cell else blank
+                values.append(cell)
+            key = (loc, lst)
+            if key not in kept or seq < kept[key][0]:
+                kept[key] = (seq, (loc, lst + _UTC_OFFSET, lst, *values, issued))
+    return [row for _, row in kept.values()]
 
 
-def forecast_long_df(spark, tables: Iterable[dict[str, Any]]) -> DataFrame:
-    return spark.createDataFrame(
-        parse_landscape_tables(tables),
-        "location string, last_update string, seq long, attr string, value string",
-    )
+def forecast_long_df(spark, rows: list[tuple]) -> DataFrame:
+    """:func:`pivot_forecast` rows → one single-partition Spark relation
+    in :data:`FORECAST_SCHEMA`, handed over as one ``pyarrow.Table``.
 
+    Spark sees a local relation: no Python-worker scan and no shuffle
+    before the staging write, and one partition, so an append writes
+    one file per ``utc_date``. The typing stays in
+    :func:`pivot_forecast`: Catalyst folds any projection over a local
+    relation on the driver, interpreted, at optimize time.
 
-def pivot_forecast(long_df: DataFrame, *, year: int) -> DataFrame:
-    """Long attribute rows → one typed row per (location, snapshot,
-    forecast hour). ``year`` is the calendar year of each snapshot's
-    *first* forecast day; later days that wrap past Dec 31 get
-    ``year + 1`` (rollover handled by comparing month to the window's
-    first month — the reference's wall-clock year injection could not,
-    SURVEY §7.4)."""
-    wide = (
-        long_df.groupBy("location", "last_update", "seq")
-        .pivot("attr", NWS_ATTRS)
-        .agg(F.first("value"))
-    )
-    wide = wide.toDF(*[normalize_column_name(c) for c in wide.columns])
-
-    seq_w = Window.partitionBy("location", "last_update").orderBy("seq")
-
-    # W1 forward fill of the sparse Date header row over the explicit seq
-    wide = wide.withColumn(
-        "date",
-        F.last(F.nullif(F.trim("date"), F.lit("")), ignorenulls=True).over(
-            seq_w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-
-    month = F.split("date", "/").getItem(0).cast("int")
-    first_month = F.first(month).over(seq_w.rowsBetween(Window.unboundedPreceding, 0))
-    row_year = F.lit(year) + F.when(month < first_month, 1).otherwise(0)
-
-    wide = (
-        wide.withColumn(
-            "lst_datetime",
-            F.to_timestamp_ntz(
-                F.concat_ws(
-                    " ",
-                    F.concat_ws("/", F.col("date"), row_year.cast("string")),
-                    F.concat(F.col("hour_akst").cast("int").cast("string"), F.lit(":00")),
-                ),
-                F.lit("M/d/yyyy H:mm"),
-            ),
-        )
-        .withColumn("utc_datetime", fixed_offset_utc("lst_datetime"))
-        .withColumn(
-            "last_update_nws",
-            F.to_timestamp_ntz("last_update", F.lit("M/d/yyyy H:mm")),
-        )
-    )
-
-    # P8 sentinel fills (reference nws_dag.py:94): '' gust → 0; '' elsewhere → NULL
-    wide = wide.withColumn("gust", F.when(F.trim("gust") == "", "0").otherwise(F.col("gust")))
-    for c in _INT_COLS:
-        wide = wide.withColumn(c, F.nullif(F.trim(c), F.lit("")).cast("bigint"))
-    for c in _FLOAT_COLS:
-        wide = wide.withColumn(c, F.nullif(F.trim(c), F.lit("")).cast("double"))
-    # '--' & co. stay as strings on the outlook flag columns (SURVEY §1.2)
-
-    out = wide.select(
-        "location",
-        "utc_datetime",
-        "lst_datetime",
-        *_INT_COLS[:4],
-        "wind_dir",
-        "gust",
-        "sky_cover_pct",
-        *_FLOAT_COLS,
-        *_FLAG_COLS,
-        "last_update_nws",
-        "seq",
-    )
-
-    # A5 deterministic dedup: overlapping AheadHour pages repeat boundary
-    # hours (reference nws_dag.py:106-111); keep the earliest seq.
-    out = dedup_keep_first(
-        out,
-        keys=["location", "utc_datetime", "lst_datetime"],
-        order_by=["seq"],
-    ).drop("seq")
-    return out
+    The name is the earlier long-row builder's: perfbench's layer hooks
+    patch ``pipelines.forecast_long_df`` and ``pipelines.pivot_forecast``
+    by attribute, until spans move into the program (ROADMAP item 4).
+    """
+    columns = list(zip(*rows)) or [[] for _ in FORECAST_SCHEMA]
+    table = pa.Table.from_arrays(columns, schema=_ARROW_SCHEMA)
+    return spark.createDataFrame(table, FORECAST_SCHEMA).coalesce(1)

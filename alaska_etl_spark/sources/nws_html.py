@@ -12,11 +12,12 @@ airflow/dags/nws_dag.py:62-77).
 This module re-creates those semantics on the standard library only
 (``html.parser`` — BS4 is not a dependency of this engine), driver-side
 by design: one page is ~50 KB and a full Alaska scrape is 23 locations
-× 3 pages; the *output* is what Spark processes (sources/nws.py turns
-it into the pivot/forward-fill/dedup plan). At ingest scale the grid
-composer takes any injected ``fetch`` (sources/fetch.py) so pages can
-also be fetched executor-side via a urls-DataFrame + mapInPandas if a
-deployment ever scrapes thousands of points.
+× 3 pages; the *output* is what Spark receives (sources/nws.py types
+it in one driver-side pass and hands it over as one Arrow relation).
+At ingest scale the grid composer takes any injected ``fetch``
+(sources/fetch.py) so pages can also be fetched executor-side via a
+urls-DataFrame + mapInPandas if a deployment ever scrapes thousands of
+points.
 
 Structural mirroring of BS4 used by the reference and re-created here:
 
@@ -258,9 +259,9 @@ def fetch_forecast_tables(
     """S9: build and run the fetch grid — for every (location, lat, lon)
     fetch the AheadHour ∈ {0, 48, 96} digital pages (144 h of forecasts)
     and parse each into the ``tables`` contract that
-    :func:`alaska_etl_spark.sources.nws.forecast_long_df` consumes
-    (reference get_forecast_dict, nws_dag.py:62-77: the same loop with
-    ``url + f"&AheadHour={hr}"``).
+    :func:`alaska_etl_spark.sources.nws.pivot_forecast` consumes, as
+    ``pipelines.run_nws`` does (reference get_forecast_dict,
+    nws_dag.py:62-77: the same loop with ``url + f"&AheadHour={hr}"``).
 
     Each page's own ``Last Update:`` timestamp becomes that page's
     ``last_update`` ('M/D/YYYY H:mm') — the reference stamps per page

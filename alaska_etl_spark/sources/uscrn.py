@@ -56,6 +56,12 @@ def parse_uscrn_lines(
     the 23-row station dim, keyed by ``wbanno``; it is broadcast once,
     and one inner join is both the line-prefix membership filter (S5)
     and the name join (J1).
+
+    The broadcast scans ``locations`` once per load. A dim built with
+    ``spark.createDataFrame(<list>)`` makes that a Python-worker scan, a
+    job of its own on every load. Pass a JVM-backed dim instead:
+    :func:`~alaska_etl_spark.functions.localrel.local_df` or a parquet
+    read.
     """
     toks = F.split(F.trim(F.col(value_col)), r"\s+")
 

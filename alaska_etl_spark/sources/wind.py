@@ -35,7 +35,13 @@ def parse_wind_lines(
     watermark=None,
 ) -> DataFrame:
     """Raw subhourly lines → typed 5-min readings with a ``bad_row``
-    marker column (kept in-band so one scan serves both outputs)."""
+    marker column (kept in-band so one scan serves both outputs).
+
+    ``locations`` is broadcast once per load; as for
+    :func:`~alaska_etl_spark.sources.uscrn.parse_uscrn_lines`, a dim from
+    ``spark.createDataFrame(<list>)`` makes that a Python-worker scan on
+    every load, so pass one from
+    :func:`~alaska_etl_spark.functions.localrel.local_df` or parquet."""
     toks = F.split(F.trim(F.col(value_col)), r"\s+")
     df = (
         lines.withColumn("_toks", toks)

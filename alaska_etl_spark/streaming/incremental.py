@@ -45,6 +45,12 @@ def stream_uscrn(
     (a global dropDuplicates would hold unbounded state); cross-batch
     idempotence belongs to the sink protocol (Warehouse hash anti-join
     in foreachBatch), matching the reference's dedup-at-load placement.
+
+    ``locations`` is re-broadcast every micro-batch: give a JVM-backed
+    dim (:func:`~alaska_etl_spark.functions.localrel.local_df` or
+    parquet), not ``spark.createDataFrame(<list>)``, whose scan runs
+    through Python workers (see
+    :func:`~alaska_etl_spark.sources.uscrn.parse_uscrn_lines`).
     """
     lines = spark.readStream.format("text").load(path)
     return parse_uscrn_lines(lines, locations, dedup=False, **parse_kwargs)

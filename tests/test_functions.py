@@ -11,7 +11,6 @@ from alaska_etl_spark.functions.cleaning import normalize_column_name
 from alaska_etl_spark.functions.conversions import (
     c_to_f,
     compose_datetime,
-    fixed_offset_utc,
     floor_hour,
     nullify_sentinel,
 )
@@ -49,13 +48,6 @@ def test_compose_datetime(spark):
 def test_floor_hour(spark):
     got = _one(
         spark, "ts timestamp_ntz", (dt.datetime(2023, 1, 15, 12, 35, 7),), floor_hour("ts")
-    )
-    assert got == dt.datetime(2023, 1, 15, 12, 0)
-
-
-def test_fixed_offset_utc(spark):
-    got = _one(
-        spark, "ts timestamp_ntz", (dt.datetime(2023, 1, 15, 3, 0),), fixed_offset_utc("ts")
     )
     assert got == dt.datetime(2023, 1, 15, 12, 0)
 

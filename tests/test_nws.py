@@ -40,7 +40,7 @@ def _table(location="Fairbanks_11_NE", last_update="12/30/2023 14:00", hours=Non
 def test_pivot_and_forward_fill(spark):
     """Sparse Date carries forward over the explicit seq order."""
     tbl = _table(hours=[("12/30", "22"), ("", "23"), ("12/31", "0"), ("", "1")])
-    out = pivot_forecast(forecast_long_df(spark, [tbl]), year=2023)
+    out = forecast_long_df(spark, pivot_forecast([tbl], year=2023))
     rows = {r.lst_datetime: r for r in out.collect()}
     assert dt.datetime(2023, 12, 30, 22, 0) in rows
     assert dt.datetime(2023, 12, 30, 23, 0) in rows  # date forward-filled
@@ -52,7 +52,7 @@ def test_year_rollover(spark):
     """Dec 31 → Jan 1 gets year+1 (the reference's wall-clock year bug,
     SURVEY §7.4; FIXTURES §3 'Must include a Dec 31 → Jan 1 boundary')."""
     tbl = _table(hours=[("12/31", "22"), ("", "23"), ("1/1", "0"), ("", "1")])
-    out = pivot_forecast(forecast_long_df(spark, [tbl]), year=2023)
+    out = forecast_long_df(spark, pivot_forecast([tbl], year=2023))
     stamps = sorted(r.lst_datetime for r in out.collect())
     assert stamps[0] == dt.datetime(2023, 12, 31, 22, 0)
     assert stamps[-1] == dt.datetime(2024, 1, 1, 1, 0)
@@ -61,13 +61,13 @@ def test_year_rollover(spark):
 def test_utc_is_lst_plus_9(spark):
     """Invariant 3: utc = lst + 9h fixed offset (no DST)."""
     tbl = _table(hours=[("12/30", "22")])
-    row = pivot_forecast(forecast_long_df(spark, [tbl]), year=2023).collect()[0]
+    row = forecast_long_df(spark, pivot_forecast([tbl], year=2023)).collect()[0]
     assert row.utc_datetime - row.lst_datetime == dt.timedelta(hours=9)
 
 
 def test_gust_empty_is_zero_wind_chill_empty_is_null(spark):
     """P8: '' gust → 0; '' elsewhere → NULL; '--' flags stay strings."""
-    row = pivot_forecast(forecast_long_df(spark, [_table(hours=[("12/30", "22")])]), year=2023).collect()[0]
+    row = forecast_long_df(spark, pivot_forecast([_table(hours=[("12/30", "22")])], year=2023)).collect()[0]
     assert row.gust == 0
     assert row.wind_chill_f is None
     assert row.snow == "SChc"
@@ -82,13 +82,42 @@ def test_dedup_across_pages(spark):
     page2 = _table(hours=[("12/30", "23"), ("", "0")])["pages"][0]
     page2["rows"][2] = ["Temperature (°F)", "99", "98"]
     tbl["pages"].append(page2)
-    out = pivot_forecast(forecast_long_df(spark, [tbl]), year=2023)
+    out = forecast_long_df(spark, pivot_forecast([tbl], year=2023))
     rows = {r.lst_datetime: r for r in out.collect()}
     assert len(rows) == 3
     assert rows[dt.datetime(2023, 12, 30, 23, 0)].temperature_f == -11  # page-1 value kept
 
 
 def test_snapshot_metadata(spark):
-    row = pivot_forecast(forecast_long_df(spark, [_table(hours=[("12/30", "22")])]), year=2023).collect()[0]
+    row = forecast_long_df(spark, pivot_forecast([_table(hours=[("12/30", "22")])], year=2023)).collect()[0]
     assert row.last_update_nws == dt.datetime(2023, 12, 30, 14, 0)
     assert row.location == "Fairbanks_11_NE"
+
+
+def _three_stations():
+    from perfbench.gen import STATIONS, WeatherFeed
+
+    feed = WeatherFeed(1, stations=STATIONS[:3])
+    return feed.nws_tables(0), feed.day_start(0).year
+
+
+def test_handoff_is_one_local_partition(spark):
+    """The snapshot reaches Spark as one partition of a local relation:
+    no shuffle and no Python-worker scan before the staging write."""
+    tables, year = _three_stations()
+    df = forecast_long_df(spark, pivot_forecast(tables, year=year))
+    assert df.rdd.getNumPartitions() == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "ExistingRDD", "PythonRDD"):
+        assert node not in plan, plan
+
+
+def test_run_nws_writes_one_file_per_day(spark, tmp_path):
+    from alaska_etl_spark.pipelines import run_nws
+    from alaska_etl_spark.plans.warehouse import Warehouse
+
+    tables, year = _three_stations()
+    run_nws(spark, Warehouse(spark, str(tmp_path)), tables, year=year)
+    days = sorted((tmp_path / "nws").glob("utc_date=*"))
+    assert len(days) == 7
+    assert [len(list(d.glob("*.parquet"))) for d in days] == [1] * 7

@@ -145,10 +145,10 @@ def test_mid_grid_refresh_stamps_pages_individually(spark):
         "12/30/2023 15:03",
         "12/30/2023 16:07",
     ]
-    # the per-page stamp flows through to the long rows
-    long_df = forecast_long_df(spark, tables)
-    stamps = {r.last_update for r in long_df.select("last_update").distinct().collect()}
-    assert stamps == {"12/30/2023 15:03", "12/30/2023 16:07"}
+    # the per-page stamp flows through to the snapshot rows
+    snap = forecast_long_df(spark, pivot_forecast(tables, year=2023))
+    stamps = {r.last_update_nws for r in snap.select("last_update_nws").distinct().collect()}
+    assert stamps == {datetime(2023, 12, 30, 15, 3), datetime(2023, 12, 30, 16, 7)}
 
 
 def test_digital_url_carries_all_attribute_params():
