@@ -37,7 +37,5 @@
   per-month activity bitmasks
 - ranking: distributed global row_number / ntile (no single-partition
   window)
-- gate: the composed document quality gate (score, screen, scrub,
-  fingerprint) shared by batch and streaming ingest
 - parallelism: input-width guard for compute-dense narrow pipelines
 """

@@ -11,20 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from alaska_etl_spark.operators.asof import asof_join
 
-
-def forecast_vs_actual(nws: DataFrame, uscrn: DataFrame, *, latest_only: bool = False) -> DataFrame:
+def forecast_vs_actual(nws: DataFrame, uscrn: DataFrame) -> DataFrame:
     """Equi-join every forecast snapshot row to the matching observation
     on (location, utc_datetime), with the forecast lead time in hours.
 
-    ``latest_only=True`` keeps, per observation, only the most recent
-    snapshot issued at or before the observed hour (the as-of variant).
-
     Scale: both sides are facts → sort-merge join on the composite key;
     partition both tables by ``date(utc_datetime)`` so the join is
-    partition-local, and bucket by location to avoid re-shuffling the
-    repeatedly-queried key (SURVEY §4 physical choices).
+    partition-local (SURVEY §4 physical choices).
     """
     f = nws.select(
         F.col("location").alias("station_location"),
@@ -40,7 +34,7 @@ def forecast_vs_actual(nws: DataFrame, uscrn: DataFrame, *, latest_only: bool = 
         F.col("t_hr_avg").alias("actual_temp_f"),
         F.col("rh_hr_avg").alias("actual_rh_pct"),
     )
-    joined = (
+    return (
         f.join(a, ["station_location", "utc_datetime"])
         .withColumn(
             "lead_hours",
@@ -52,15 +46,6 @@ def forecast_vs_actual(nws: DataFrame, uscrn: DataFrame, *, latest_only: bool = 
         )
         .filter(F.col("lead_hours") >= 0)
     )
-    if latest_only:
-        from alaska_etl_spark.operators.dedup import dedup_keep_first
-
-        joined = dedup_keep_first(
-            joined,
-            keys=["station_location", "utc_datetime"],
-            order_by=[F.col("last_update_nws").desc()],
-        )
-    return joined
 
 
 def lead_time_error(matched: DataFrame, *, bucket_hours: int = 24) -> DataFrame:
@@ -77,27 +62,4 @@ def lead_time_error(matched: DataFrame, *, bucket_hours: int = 24) -> DataFrame:
             F.round(F.avg(F.col("forecast_temp_f") - F.col("actual_temp_f")), 3).alias("bias_temp_f"),
             F.count(F.lit(1)).alias("n_matched"),
         )
-    )
-
-
-def asof_forecast_for_observations(nws: DataFrame, uscrn: DataFrame) -> DataFrame:
-    """As-of variant: attach, to each observation, the latest forecast
-    *snapshot* issued at or before the observed hour — matching on
-    snapshot time rather than requiring an exact forecast-hour hit."""
-    snapshots = nws.select(
-        F.col("location").alias("station_location"),
-        F.col("last_update_nws").alias("snapshot_ts"),
-        F.col("utc_datetime").alias("forecast_valid"),
-        "temperature_f",
-    )
-    obs = uscrn.select("station_location", "utc_datetime", "t_hr_avg")
-    per_snapshot = snapshots.groupBy("station_location", "snapshot_ts").agg(
-        F.round(F.avg("temperature_f"), 3).alias("snapshot_mean_temp_f")
-    )
-    return asof_join(
-        obs,
-        per_snapshot,
-        on=["station_location"],
-        left_ts="utc_datetime",
-        right_ts="snapshot_ts",
     )

@@ -117,24 +117,6 @@ def data_bytes(spark: SparkSession, path: str) -> int:
     return total
 
 
-def swap_in(spark: SparkSession, tmp: str, live: str) -> None:
-    """Atomically-enough replace ``live`` with ``tmp``: rename live
-    aside, rename tmp in, drop the old copy. Readers never see a
-    half-written directory; a crash between the renames leaves the
-    ``__old`` copy to roll back from."""
-    fs, live_p = fs_and_path(spark, live)
-    _, tmp_p = fs_and_path(spark, tmp)
-    old_p = fs_and_path(spark, live + "__old")[1]
-    if fs.exists(old_p):
-        fs.delete(old_p, True)
-    if not fs.rename(live_p, old_p):
-        raise IOError(f"could not move {live} aside")
-    if not fs.rename(tmp_p, live_p):
-        fs.rename(old_p, live_p)  # roll back
-        raise IOError(f"could not move {tmp} into place")
-    fs.delete(old_p, True)
-
-
 def sink_spec(fmt: str, root: str, table: str, options: dict[str, str] | None = None) -> dict:
     """Resolve (format, root, table) to a concrete read/write target —
     the ONE place that knows how each backend is addressed, pure and
@@ -238,21 +220,9 @@ class Warehouse:
                 return False
             raise
 
-    def read(self, table: str, *, merge_schema: bool = False) -> DataFrame:
-        """Read a table; ``merge_schema=True`` unions the schemas of
-        every data file (additive evolution: a batch appended with a new
-        nullable column widens the table — pre-evolution rows read the
-        column as NULL). Off by default: schema union reads every file
-        footer, which at 100 TB is a real listing cost — pay it on the
-        evolved tables, not every scan (or re-register the widened
-        schema in the catalog once and go back to single-footer reads).
-        The reference's BigQuery tables did this with manual
-        ALTER-style schema updates; parquet-on-path gets it from footer
-        union."""
-        spec = self._spec(table)
-        if merge_schema and spec["format"] in ("parquet", "orc"):
-            spec = dict(spec, options=dict(spec["options"], mergeSchema="true"))
-        return self._read_spec(spec)
+    def read(self, table: str) -> DataFrame:
+        """Read a table."""
+        return self._read_spec(self._spec(table))
 
     # -- K2: staging truncate-load ---------------------------------------
 
@@ -364,268 +334,6 @@ class Warehouse:
             partition_col=partition_col,
         )
 
-    # -- bucketed catalog tables (the co-located-join path, SURVEY §4) ---
-
-    def save_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        *,
-        bucket_cols: list[str],
-        n_buckets: int,
-        sort_cols: list[str] | None = None,
-        mode: str = "overwrite",
-    ) -> None:
-        """Write ``table`` bucketed (and optionally sorted) by the join
-        key into the session catalog. Two tables bucketed the same way
-        join with NO exchange on either side — the shuffle is paid once
-        at write time instead of on every query, which is the right
-        trade for the repeatedly-joined 100 TB facts (forecast ⋈ actual
-        on (location, utc_datetime); embeddings ⋈ buckets on cell id).
-        """
-        if self.fmt not in PATH_FORMATS:
-            raise ValueError(f"bucketed catalog tables need a path format, not {self.fmt!r}")
-        writer = df.write.format(self.fmt).mode(mode).bucketBy(n_buckets, *bucket_cols)
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.option("path", self._path(table)).saveAsTable(table)
-
-    def read_table(self, table: str) -> DataFrame:
-        """Read a catalog (bucketed) table — bucket metadata only
-        survives through the catalog, not raw parquet paths."""
-        return self.spark.table(table)
-
-    # -- maintenance: compaction and key-merge ---------------------------
-
-    def compact(
-        self,
-        table: str,
-        *,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        partition_col: str | None = None,
-    ) -> int:
-        """Small-file compaction: rewrite ``table`` into
-        ``ceil(data_bytes / target_file_bytes)`` write tasks and swap the
-        directory in atomically. Returns the task count.
-
-        The incremental append protocol necessarily accretes one file
-        set per batch; at 100 TB the resulting tiny files dominate query
-        cost (every file is an open + a footer read + a task). Sizing is
-        measured from the filesystem, not guessed from row counts. For
-        an unpartitioned table the rewrite is a ``coalesce`` — a narrow
-        dependency, NO shuffle: tasks read neighboring input files and
-        write merged ones. A partitioned table pays one hash exchange on
-        ``partition_col`` so each partition's scattered batch files
-        collapse into the few tasks that hold it, and the layout is
-        preserved by writing ``partitionBy`` again.
-        """
-        if self.fmt not in PATH_FORMATS:
-            raise ValueError(f"compaction needs a path format, not {self.fmt!r}")
-        spec = self._spec(table)
-        live = spec["target"]
-        n_files = max(1, -(-data_bytes(self.spark, live) // target_file_bytes))
-        df = self._read_spec(spec)
-        tmp_spec = self._spec(f"{table}__compact_tmp")
-        if partition_col is not None:
-            self._write_spec(
-                df.repartition(n_files, partition_col), tmp_spec, "overwrite", partition_col
-            )
-        else:
-            self._write_spec(df.coalesce(n_files), tmp_spec, "overwrite")
-        swap_in(self.spark, tmp_spec["target"], live)
-        return n_files
-
-    def merge_upsert(
-        self,
-        df: DataFrame,
-        table: str,
-        *,
-        key_cols: list[str],
-        partition_col: str | None = None,
-    ) -> None:
-        """Key-based merge (UPDATE existing keys, INSERT new ones) —
-        the protocol step the reference never had (its append tolerates
-        duplicates; dimension corrections need a true upsert).
-
-        Scale shape: with ``partition_col`` the merge is PARTITION-
-        SCOPED — survivors are computed only over the partitions present
-        in the batch (partition-pruned scan), and the write uses dynamic
-        partition overwrite so ONLY those partitions are replaced; the
-        other 99.9% of a 100 TB table is never read or written. Without
-        a partition column the whole table is rewritten through a temp
-        directory + atomic swap (the honest no-table-format baseline —
-        avoiding exactly this rewrite is why merge-on-read formats
-        exist). The batch side is broadcast in the anti-join; existing
-        rows keep their audit stamp, merged rows get a fresh one.
-        """
-        staged = row_hash(df, key_cols)
-        incoming = staged.withColumn(AUDIT_COL, F.current_timestamp())
-        if not self.probe_exists(table):
-            self._write_spec(
-                incoming.drop("_row_hash"), self._spec(table), "append", partition_col
-            )
-            return
-        main = row_hash(self.read(table), key_cols)
-        if partition_col is not None:
-            parts = [r[0] for r in df.select(partition_col).distinct().collect()]
-            main = main.filter(F.col(partition_col).isin(parts))
-        survivors = main.join(
-            F.broadcast(incoming.select("_row_hash")), "_row_hash", "left_anti"
-        )
-        merged = survivors.unionByName(incoming).drop("_row_hash")
-        spec = self._spec(table)
-        if partition_col is not None:
-            writer = (
-                merged.write.format(spec["format"])
-                .mode("overwrite")
-                .options(**spec["options"])
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(partition_col)
-            )
-            if spec["kind"] == "path":
-                writer.save(spec["target"])
-            else:
-                writer.option("table", spec["target"]).save()
-            return
-        tmp_spec = self._spec(f"{table}__merge_tmp")
-        self._write_spec(merged, tmp_spec, "overwrite")
-        swap_in(self.spark, tmp_spec["target"], spec["target"])
-
-    # -- SCD2: dimension history ------------------------------------------
-
-    def scd2_upsert(
-        self,
-        df: DataFrame,
-        table: str,
-        *,
-        key_cols: list[str],
-        attr_cols: list[str],
-        as_of,
-    ) -> None:
-        """Apply a dimension batch as SCD Type-2 history (see
-        :func:`scd2_merge`). Layout is partitioned by ``_scd_state``
-        ('current' / 'closed'): the merge SCANS only the current
-        partition (partition-pruned — at 100 TB of accumulated history
-        the closed mass is never read), APPENDS closed versions into
-        the closed partition, and dynamic-partition-overwrites only the
-        current partition. Keys absent from the batch stay open
-        (partial batches never close rows; deletes are an explicit op).
-
-        Crash window: closed rows are appended before the current
-        partition swaps, so a failure in between leaves a closed copy
-        alongside a still-open version; rerunning the same batch
-        converges (the open version closes again into a duplicate
-        history row, the current set is correct). True atomicity across
-        two partitions needs a table format with transactions — same
-        stance as :meth:`merge_upsert`'s rewrite path.
-        """
-        spec = self._spec(table)
-        incoming = (
-            df.withColumn("effective_from", F.lit(as_of).cast("timestamp"))
-            .withColumn("effective_to", F.lit(None).cast("timestamp"))
-            .withColumn("is_current", F.lit(True))
-        )
-        if not self.probe_exists(table):
-            self._write_spec(
-                incoming.withColumn("_scd_state", F.lit("current")),
-                spec,
-                "append",
-                "_scd_state",
-            )
-            return
-        current = self.read(table).filter(F.col("_scd_state") == "current").drop(
-            "_scd_state"
-        )
-        new_current, closed = scd2_merge(
-            current, df, key_cols=key_cols, attr_cols=attr_cols, as_of=as_of
-        )
-        self._write_spec(
-            closed.withColumn("_scd_state", F.lit("closed")), spec, "append", "_scd_state"
-        )
-        writer = (
-            new_current.withColumn("_scd_state", F.lit("current"))
-            .write.format(spec["format"])
-            .mode("overwrite")
-            .options(**spec["options"])
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_scd_state")
-        )
-        if spec["kind"] == "path":
-            writer.save(spec["target"])
-        else:
-            writer.option("table", spec["target"]).save()
-
-    def scd2_history(self, table: str) -> DataFrame:
-        """Full version history, no state column."""
-        return self.read(table).drop("_scd_state")
-
-
-# ---------------------------------------------------------------------------
-# SCD Type-2 dimension history
-# ---------------------------------------------------------------------------
-
-SCD2_COLS = ("effective_from", "effective_to", "is_current")
-
-
-def scd2_merge(
-    current: DataFrame,
-    batch: DataFrame,
-    *,
-    key_cols: list[str],
-    attr_cols: list[str],
-    as_of,
-) -> tuple[DataFrame, DataFrame]:
-    """Type-2 slowly-changing-dimension merge as a pure DataFrame
-    transform: (current-version rows, incoming batch) → (new current
-    set, rows to close).
-
-    - new business key → opens a version (effective_from=as_of)
-    - changed attributes (NULL-safe hash over ``attr_cols``) → closes
-      the old version (effective_to=as_of) and opens a new one
-    - unchanged → the existing version passes through untouched (NO
-      spurious versions — the property tests pin this)
-
-    One full-outer join on the business key; both sides carry an attr
-    hash computed in codegen. ``as_of`` is an explicit timestamp
-    (reproducible reruns), not a hidden current_timestamp().
-
-    The reference's dimensions are truncate-reload snapshots with no
-    history (locations, column_descriptions —
-    notebooks/1_uscrn_scrape.ipynb:861-870); SCD2 is what a warehouse
-    needs when those dims start drifting.
-    """
-    ts = F.lit(as_of).cast("timestamp")
-    cur = row_hash(current, attr_cols).select(
-        *[F.col(c).alias(f"_c_{c}") for c in current.columns],
-        F.col("_row_hash").alias("_c_hash"),
-    )
-    inc = row_hash(batch, attr_cols).withColumnRenamed("_row_hash", "_i_hash")
-    on = [inc[k].eqNullSafe(F.col(f"_c_{k}")) for k in key_cols]
-    j = inc.join(cur, on, "full_outer")
-
-    batch_cols = batch.columns
-    is_new = F.col(f"_c_{key_cols[0]}").isNull()
-    is_gone = inc[key_cols[0]].isNull()
-    changed = (~is_new) & (~is_gone) & (F.col("_i_hash") != F.col("_c_hash"))
-
-    opened = (
-        j.filter(is_new | changed)
-        .select(*[inc[c].alias(c) for c in batch_cols])
-        .withColumn("effective_from", ts)
-        .withColumn("effective_to", F.lit(None).cast("timestamp"))
-        .withColumn("is_current", F.lit(True))
-    )
-    carried = j.filter(is_gone | ((~is_new) & (F.col("_i_hash") == F.col("_c_hash")))).select(
-        *[F.col(f"_c_{c}").alias(c) for c in current.columns]
-    )
-    closed = (
-        j.filter(changed)
-        .select(*[F.col(f"_c_{c}").alias(c) for c in current.columns])
-        .withColumn("effective_to", ts)
-        .withColumn("is_current", F.lit(False))
-    )
-    return opened.unionByName(carried), closed
-
 
 def diff_snapshots(
     old: DataFrame,
@@ -691,20 +399,16 @@ def apply_changelog(
 ) -> DataFrame:
     """Apply an ordered CDC changelog (op ∈ I/U/D, monotone ``seq_col``
     per key) to a snapshot and return the resulting snapshot — the
-    lakehouse "apply change data feed" op, complementing
-    :meth:`Warehouse.merge_upsert` (one unordered delta) and
-    :func:`scd2_merge` (history retention): here a key may be updated,
+    lakehouse "apply change data feed" op: a key may be updated,
     deleted, and re-inserted in ONE feed and the outcome is whatever
     the LAST operation says.
 
     Plan: base rows enter the union as (seq = −∞) pseudo-inserts, then
     one window per key ordered by seq descending picks the latest
     operation, and a filter drops keys whose last op is D. One shuffle
-    on the key; the window reads each row once. At 100 TB the base is
-    the large side — it arrives pre-partitioned if stored bucketed by
-    key (save_bucketed), leaving the changelog (churn-sized) as the
-    only moved data. Replaying the same feed is idempotent: the final
-    state depends only on (base, feed), not delivery count.
+    on the key; the window reads each row once. Replaying the same feed
+    is idempotent: the final state depends only on (base, feed), not
+    delivery count.
 
     ``changes`` must carry base's columns plus ``op_col``/``seq_col``;
     D rows only need the keys (payload columns are ignored).

@@ -135,9 +135,10 @@ def pivot_forecast(tables: Iterable[dict[str, Any]], *, year: int) -> list[tuple
     emits) which overrides the table-level one for that page's rows —
     mirroring the reference's per-soup stamping.
 
-    A table's forecast-hour positions run on across its pages; a page is
-    as wide as its longest row, unknown attribute rows included. Per
-    (location, last_update), in that order:
+    Rows whose attribute is not in :data:`NWS_ATTRS` are skipped. A
+    table's forecast-hour positions run on across its pages; a page is
+    as wide as its longest remaining row. Per (location, last_update),
+    in that order:
 
     - Date is forward-filled over its blank cells (ASCII spaces trimmed);
     - ``year`` is the year of the first date; a later month smaller
@@ -161,11 +162,11 @@ def pivot_forecast(tables: Iterable[dict[str, Any]], *, year: int) -> list[tuple
             hours = snaps.setdefault((loc, page.get("last_update", tbl_update)), {})
             width = 0
             for attr, *cells in page["rows"]:
+                if attr not in _ATTRS:
+                    continue
                 width = max(width, len(cells))
                 for seq, cell in enumerate(cells, seq_base):
-                    hour = hours.setdefault(seq, {})
-                    if attr in _ATTRS:
-                        hour.setdefault(attr, cell)
+                    hours.setdefault(seq, {}).setdefault(attr, cell)
             seq_base += width
 
     kept: dict[tuple, tuple[int, tuple]] = {}

@@ -1,3 +1,3 @@
-"""Incremental Structured Streaming path (``incremental``): USCRN and
-wind file-source streams drained by ``trigger(availableNow)`` into the
-warehouse load protocol or a parquet path."""
+"""Incremental Structured Streaming path (``incremental``): a USCRN
+file-source stream drained by ``trigger(availableNow)`` into the
+warehouse load protocol."""

@@ -1,15 +1,11 @@
-"""Analytics layer: forecast-vs-actual join, lead-time error buckets,
-as-of snapshot attachment (SURVEY §2.4 J5 — the dataset's purpose)."""
+"""Analytics layer: forecast-vs-actual join and lead-time error buckets
+(SURVEY §2.4 J5 — the dataset's purpose)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from alaska_etl_spark.plans.analytics import (
-    asof_forecast_for_observations,
-    forecast_vs_actual,
-    lead_time_error,
-)
+from alaska_etl_spark.plans.analytics import forecast_vs_actual, lead_time_error
 
 
 def _ts(d, h):
@@ -50,16 +46,6 @@ def test_forecast_vs_actual_lead_hours(spark):
     assert leads == [1.0, 1.0, 25.0, 25.0]
 
 
-def test_latest_only_keeps_most_recent_snapshot(spark):
-    # snapshot day-1 lead-25 and snapshot day-2 lead-1 both target June 2 01:00
-    out = forecast_vs_actual(_nws(spark), _uscrn(spark), latest_only=True).collect()
-    by_target = {}
-    for r in out:
-        assert r.utc_datetime not in by_target
-        by_target[r.utc_datetime] = r
-    assert by_target[_ts(2, 1)].lead_hours == 1.0  # day-2 snapshot won
-
-
 def test_lead_time_error_buckets(spark):
     matched = forecast_vs_actual(_nws(spark), _uscrn(spark))
     out = {r.lead_bucket: r for r in lead_time_error(matched, bucket_hours=24).collect()}
@@ -68,15 +54,3 @@ def test_lead_time_error_buckets(spark):
     assert out[0].bias_temp_f == 1.0
     assert out[24].mae_temp_f == 25.0
     assert out[0].n_matched == 2
-
-
-def test_asof_snapshot_attachment(spark):
-    out = asof_forecast_for_observations(_nws(spark), _uscrn(spark))
-    rows = {r.utc_datetime: r for r in out.collect()}
-    assert len(rows) == 72  # every observation kept
-    # first observation coincides with the first snapshot → equal-ts match
-    assert rows[_ts(1, 0)].snapshot_mean_temp_f == 3.0
-    # mid-June-1 observation sees the June-1 snapshot mean ((-9 + 15)/2 = 3)
-    assert rows[_ts(1, 12)].snapshot_mean_temp_f == 3.0
-    # June-2 observation sees the June-2 snapshot
-    assert rows[_ts(2, 12)].snapshot_mean_temp_f == 3.0

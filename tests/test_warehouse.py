@@ -67,6 +67,12 @@ def test_partitioned_write(spark, wh, tmp_path):
     assert wh.read("t").count() == 2
 
 
+def _files(root, table):
+    import glob
+
+    return sorted(glob.glob(f"{root}/{table}/**/[!_.]*", recursive=True))
+
+
 def test_append_reads_only_touched_partitions(spark, wh, tmp_path):
     """The existing side of the anti-join reads only the partitions the
     batch touches: a corrupt data file in an untouched partition is
@@ -228,121 +234,6 @@ def test_sink_spec_bigquery_option_plumbing():
 def test_unknown_format_rejected_eagerly(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown warehouse format"):
         Warehouse(spark, str(tmp_path), fmt="avro3")
-    with pytest.raises(ValueError, match="path format"):
-        Warehouse(spark, "p.d", fmt="bigquery").save_bucketed(
-            None, "t", bucket_cols=["k"], n_buckets=4
-        )
-
-
-# -- maintenance: compaction and key-merge --------------------------------
-
-
-def _files(root, table):
-    import glob
-
-    return sorted(glob.glob(f"{root}/{table}/**/[!_.]*", recursive=True))
-
-
-def test_compact_shrinks_file_count_keeps_rows(spark, wh, tmp_path):
-    df = spark.range(10000).selectExpr("id AS k", "cast(id AS string) AS v")
-    df.repartition(40).write.format(wh.fmt).save(f"{tmp_path}/t")
-    import glob
-
-    assert len(glob.glob(f"{tmp_path}/t/part-*")) == 40
-    n = wh.compact("t", target_file_bytes=1 << 30)
-    assert n == 1
-    assert len(glob.glob(f"{tmp_path}/t/part-*")) == 1
-    back = wh.read("t")
-    assert back.count() == 10000
-    assert back.agg({"k": "sum"}).collect()[0][0] == sum(range(10000))
-    # no stray tmp/old dirs
-    assert not glob.glob(f"{tmp_path}/t__*")
-
-
-def test_compact_partitioned_preserves_layout(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path))
-    df = spark.createDataFrame(
-        [(i, f"v{i}", f"p{i % 3}") for i in range(300)], "k bigint, v string, part string"
-    )
-    for _ in range(5):  # five appends -> five file sets per partition
-        df.write.mode("append").partitionBy("part").parquet(f"{tmp_path}/t")
-    import glob
-
-    before = len(glob.glob(f"{tmp_path}/t/part=*/part-*"))
-    assert before >= 15
-    wh.compact("t", target_file_bytes=1 << 30, partition_col="part")
-    after = glob.glob(f"{tmp_path}/t/part=*/part-*")
-    assert len(after) < before
-    assert sorted({p.split("/")[-2] for p in after}) == ["part=p0", "part=p1", "part=p2"]
-    assert wh.read("t").count() == 1500
-
-
-def test_merge_upsert_updates_and_inserts(spark, wh):
-    wh.merge_upsert(_batch(spark, [(1, "a", "p1"), (2, "b", "p1")]), "t", key_cols=["k"])
-    wh.merge_upsert(_batch(spark, [(2, "B", "p1"), (3, "c", "p2")]), "t", key_cols=["k"])
-    got = {(r.k, r.v) for r in wh.read("t").collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
-    assert AUDIT_COL in wh.read("t").columns
-
-
-def test_merge_upsert_partition_scoped_rewrite(spark, tmp_path):
-    """Partitioned merge must not touch partitions absent from the
-    batch: p1's data files are byte-identical before and after a merge
-    that only carries p2 rows."""
-    import glob
-
-    wh = Warehouse(spark, str(tmp_path))
-    wh.merge_upsert(
-        _batch(spark, [(1, "a", "p1"), (2, "b", "p2")]),
-        "t",
-        key_cols=["k"],
-        partition_col="part",
-    )
-    p1_before = sorted(glob.glob(f"{tmp_path}/t/part=p1/part-*"))
-    wh.merge_upsert(
-        _batch(spark, [(2, "B", "p2"), (3, "c", "p2")]),
-        "t",
-        key_cols=["k"],
-        partition_col="part",
-    )
-    assert sorted(glob.glob(f"{tmp_path}/t/part=p1/part-*")) == p1_before
-    got = {(r.k, r.v, r.part) for r in wh.read("t").collect()}
-    assert got == {(1, "a", "p1"), (2, "B", "p2"), (3, "c", "p2")}
-
-
-def test_merge_upsert_full_rewrite_roundtrip(spark, tmp_path):
-    """Unpartitioned path goes through tmp + atomic swap; result is
-    readable and tmp dirs are gone."""
-    import glob
-
-    wh = Warehouse(spark, str(tmp_path))
-    wh.merge_upsert(_batch(spark, [(i, "x", "p") for i in range(100)]), "t", key_cols=["k"])
-    wh.merge_upsert(_batch(spark, [(50, "y", "p")]), "t", key_cols=["k"])
-    rows = wh.read("t")
-    assert rows.count() == 100
-    assert rows.filter("k = 50").collect()[0].v == "y"
-    assert not glob.glob(f"{tmp_path}/t__*")
-
-
-def test_append_with_new_nullable_column_schema_evolution(spark, tmp_path):
-    """Additive schema evolution: a later batch carries a new nullable
-    column; merge_schema reads the union, pre-evolution rows NULL."""
-    from alaska_etl_spark.plans.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path))
-    v1 = spark.createDataFrame([(1, "a")], "id bigint, name string")
-    wh.load(v1, "dim", key_cols=["id"])
-    v2 = spark.createDataFrame(
-        [(2, "b", "AKST")], "id bigint, name string, tz string"
-    )
-    wh.load(v2, "dim", key_cols=["id"])
-
-    evolved = wh.read("dim", merge_schema=True)
-    assert "tz" in evolved.columns
-    rows = {r.id: r.tz for r in evolved.collect()}
-    assert rows == {1: None, 2: "AKST"}
-    # default read still works (no merge cost) and sees both rows
-    assert wh.read("dim").count() == 2
 
 
 # --- snapshot audit diff ----------------------------------------------------
