@@ -40,21 +40,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query. The engine-defined
-    sketches (q55/q57, qc5), the k-means-trained quantizers (q76/q91),
-    qb2 incremental-LSH, and the iterative BPE trainer (qd9) are
-    rows-only by design — each has an exact oracled companion (q46
-    exact distinct counts, q38 exact percentiles, q27 brute-force
-    cosine, qb0 prefix-filtered exact Jaccard) or, for qd9, a
-    pure-Python replica pin on the same fixture. Every approximate
-    near-dup/ANN path is now EXACTLY oracled: q31 IVF and q53 sign-LSH
-    since round 4 (deterministic quantizer + 6dp literals), and
-    q29 MinHash-LSH / q30 SimHash since round 5 (md5-derived hash lane
-    replayed end-to-end in DuckDB SQL). The composed pipeline q73 is
-    rows-only (its stages are oracled individually); everything else,
-    including the multimodal mapInPandas path (q32/q33),
-    sessionization (q34), the EWMA recursion (q92, oracle replays it
-    in a recursive CTE), the iterative graph loops (qb6/qb8, oracle
+    """DuckDB-runnable ANSI SQL oracle per query: one for every key of
+    :func:`queries`, and each one hash-matches its Spark plan. That
+    includes the approximate near-dup/ANN paths — q31 IVF and q53
+    sign-LSH (deterministic quantizer + 6dp literals), q29 MinHash-LSH
+    and q30 SimHash (md5-derived hash lane replayed end-to-end in
+    DuckDB SQL) — the multimodal mapInPandas path (q32/q33),
+    sessionization (q34), the EWMA recursion (q92, oracle replays it in
+    a recursive CTE), the iterative graph loops (qb6/qb8, oracle
     replays them as unrolled CTE chains), and the distributed global
-    ntile (q84), hash-matches."""
+    ntile (q84)."""
     return dict(sorted(ORACLES.items()))

@@ -15,13 +15,11 @@ lazy, so the cache must outlive the function and stay alive until the
 caller's terminal action.
 
 This module is the release valve. Operators route their persists
-through :func:`tracked_persist`; a long-lived caller wraps each unit of
-work in :func:`released_after`, or calls :func:`release_tracked`
-between pipelines:
+through :func:`tracked_persist`; a long-lived caller calls
+:func:`release_tracked` between units of work:
 
-    with released_after():
-        bm25_topk(...).collect()          # caches live here
-    # caches released
+    bm25_topk(...).collect()          # caches live here
+    release_tracked()                 # caches released
 
 One-shot jobs (bench.py, the driver) never need to bother — session
 teardown drops everything. ``tools/check_correctness.py`` calls
@@ -31,25 +29,12 @@ these (clearCache is a superset of release_tracked).
 
 from __future__ import annotations
 
-import contextlib
 import threading
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 
 # _LOCK guards the registry's list mutations so concurrent driver
 # threads never corrupt it or double-release an entry (ADVICE r5).
-# NOTE the remaining semantic assumption: :func:`released_after`'s
-# mark-based scoping is positional (LIFO), so with MULTIPLE driver
-# threads interleaving tracked_persist calls, a released_after block in
-# one thread can release caches registered by another thread's
-# in-flight query. That is safe (unpersist never breaks correctness —
-# the consumer just recomputes) but defeats the caching; callers who
-# share one session across driver threads should scope per-thread work
-# with release via `spark.catalog.clearCache()` at quiesce points
-# instead, or serialize units of work. Single-threaded drivers (every
-# caller in this repo: bench, correctness, pipelines, tests) get exact
-# scoping.
 _LOCK = threading.Lock()
 _TRACKED: list[DataFrame] = []
 
@@ -62,39 +47,17 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def _pop_down_to(mark: int) -> list[DataFrame]:
-    with _LOCK:
-        released = _TRACKED[mark:]
-        del _TRACKED[mark:]
-    return released
-
-
 def release_tracked() -> int:
     """Unpersist every tracked cache (best-effort; a cache whose
     session already stopped is skipped). Returns the number released."""
+    with _LOCK:
+        released = _TRACKED[:]
+        _TRACKED.clear()
     n = 0
-    for df in _pop_down_to(0):
+    for df in released:
         try:
             df.unpersist()
             n += 1
         except Exception:
             pass
     return n
-
-
-@contextlib.contextmanager
-def released_after() -> Iterator[None]:
-    """Scope operator caches to a unit of work: caches persisted inside
-    the block are released on exit (exception-safe). Caches created
-    BEFORE the block are untouched (single-threaded driver; see module
-    note on the multi-thread caveat)."""
-    with _LOCK:
-        mark = len(_TRACKED)
-    try:
-        yield
-    finally:
-        for df in _pop_down_to(mark):
-            try:
-                df.unpersist()
-            except Exception:
-                pass

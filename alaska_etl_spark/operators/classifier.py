@@ -3,8 +3,8 @@
 The quality-classifier step of a training-data pipeline (fastText-style
 "keep what looks like good text") is usually an external model; the
 batch PERCEPTRON brings the training loop itself into the engine in the
-same exactly-replayable form as the k-means pair
-(operators/similarity.kmeans_replicable): every quantity is a BIGINT,
+same exactly-replayable form as the k-means Lloyd loop
+(operators/similarity._lloyd_cents): every quantity is a BIGINT,
 so an external engine replays every iteration bit-for-bit — no
 sigmoid/exp float surface at all (logistic regression's gradient needs
 exp(); libm differences make that un-oracle-able, which is exactly why
@@ -107,7 +107,7 @@ def perceptron_train(feats: DataFrame, *, iters: int = 3) -> DataFrame:
     Scale shape: one full-corpus aggregate per iteration (map-side
     partial sums; the shuffle carries k+1 longs per partition), driver
     state is k+1 ints. The cost is iters corpus passes — the same
-    bounded-iteration envelope as kmeans_replicable, with an even
+    bounded-iteration envelope as the k-means Lloyd loop, with an even
     smaller driver footprint."""
     spark = feats.sparkSession
     k = len(FEATURE_COLS)

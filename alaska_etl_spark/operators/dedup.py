@@ -203,55 +203,6 @@ def _signature_sql(num_hashes: int, seed: int, hash_col: str) -> str:
     return f"array({slots})"
 
 
-def hashed_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, text) → (_id, _sh array<bigint>): distinct word-n-gram
-    shingles as 31-bit hashes, with the token array materialized ONCE.
-
-    Why the repartition barrier: a naive
-    ``transform(sequence(...), i -> slice(tokens_expr, i+1, n))`` inlines
-    ``tokens_expr`` into the lambda, so Catalyst re-tokenizes the text
-    per shingle *index* (plus once more in the size>0 filter the
-    optimizer infers under an explode) — O(tokens²) regex splits per
-    document. Materializing the per-token hashes behind an exchange
-    makes every later reference a cheap column read, and the n-gram
-    combine is pure modular arithmetic (each step stays < 2^52, ANSI-
-    safe). The shuffle moves one int array per doc — negligible against
-    the CPU it saves, at any scale."""
-    tok = df.select(
-        F.col(id_col).alias("_id"),
-        F.transform(
-            word_tokens(text_col), lambda t: F.pmod(F.xxhash64(t), F.lit(1 << 31))
-        ).alias("_th"),
-    )
-    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    tok = tok.repartition(nparts, "_id")
-
-    def _gram(i: Column) -> Column:
-        h = F.element_at("_th", i + 1)
-        for j in range(1, n):
-            h = F.pmod(h * F.lit(1_000_003) + F.element_at("_th", i + 1 + j), F.lit(1 << 31))
-        return h
-
-    k = F.greatest(F.size("_th") - F.lit(n - 1), F.lit(1))
-    # short docs (< n tokens): element_at past the end is null → pmod
-    # propagates null → the single shingle degrades to the partial gram
-    sh = F.array_distinct(
-        F.filter(F.transform(F.sequence(F.lit(0), k - 1), _gram), lambda x: x.isNotNull())
-    )
-    short = F.coalesce(
-        F.aggregate(
-            "_th",
-            F.lit(0).cast("bigint"),
-            lambda acc, h: F.pmod(acc * F.lit(1_000_003) + h, F.lit(1 << 31)),
-        ),
-        F.lit(0).cast("bigint"),
-    )
-    return tok.select(
-        "_id",
-        F.when(F.size("_th") >= n, sh).otherwise(F.array(short)).alias("_sh"),
-    )
-
-
 def gram_rows(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, *, hash_fn: str = "xxhash64"
 ) -> DataFrame:
@@ -265,7 +216,7 @@ def gram_rows(
     whole-stage-codegen relational ops: posexplode tokens → window
     ``lead`` over (id, pos) to form the n-gram → modular hash in a
     projection. Docs shorter than ``n`` tokens contribute one fold-hash
-    of all their tokens (same value as :func:`hashed_shingles`).
+    of all their tokens.
 
     Single-pass formulation (r12, guide §2.4): the original shape
     computed doc length with a SECOND window (its own sort pass) and
@@ -458,15 +409,6 @@ def novelty_rate(
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    return _novelty_join(dg, ref, id_col, round_digits, broadcast)
-
-
-def _novelty_join(
-    dg: DataFrame, ref: DataFrame, id_col: str, round_digits: int, broadcast: bool
-) -> DataFrame:
-    """Shared emit of :func:`novelty_rate` / :func:`novelty_vs_grams`:
-    left-join the per-doc gram stream (_id, _t) against the distinct
-    reference gram set (_t, _hit=1), aggregate to document grain."""
     if broadcast:
         ref = F.broadcast(ref)
     agg = (
@@ -487,49 +429,6 @@ def _novelty_join(
             / F.lit(float(scale))
         ).alias("novelty"),
     )
-
-
-def doc_grams(docs: DataFrame, id_col: str, text_col: str, *, n: int = 3) -> DataFrame:
-    """(id, gram) rows: each document's DISTINCT word n-gram shingles as
-    xxhash64 keys — the persistable gram set a novelty reference is
-    made of (:func:`novelty_vs_grams`).
-    8 bytes per gram; membership is hash-invariant modulo ~1e-8
-    collisions (same lane as novelty_rate(hashed=True))."""
-    return docs.select(
-        F.col(id_col), F.explode(shingles(text_col, n)).alias("_g")
-    ).select(id_col, F.xxhash64("_g").alias("gram"))
-
-
-def novelty_vs_grams(
-    docs: DataFrame,
-    ref_grams: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    gram_col: str = "gram",
-    broadcast: bool = True,
-    round_digits: int = 4,
-) -> DataFrame:
-    """:func:`novelty_rate` against a PRE-BUILT gram set (a ``gram``
-    column of xxhash64 keys, e.g. the persisted output of
-    :func:`doc_grams`) instead of a reference document corpus — the
-    form an incremental/streaming admission gate needs, where the
-    reference is everything already admitted and must not be
-    re-shingled from text every batch. Same emit contract as
-    novelty_rate; ``n`` must match the n used to build the grams."""
-    from alaska_etl_spark.operators.parallelism import ensure_min_parallelism
-
-    docs = ensure_min_parallelism(docs, id_col)
-    dg = docs.select(
-        F.col(id_col).alias("_id"), F.explode(shingles(text_col, n)).alias("_t")
-    ).select("_id", F.xxhash64("_t").alias("_t"))
-    ref = (
-        ref_grams.select(F.col(gram_col).alias("_t"))
-        .distinct()
-        .withColumn("_hit", F.lit(1))
-    )
-    return _novelty_join(dg, ref, id_col, round_digits, broadcast)
 
 
 def duplicated_spans(
@@ -1427,105 +1326,6 @@ def semantic_dedup(
         _dominated, schema=f"{id_col} bigint"
     )
     return assigned.join(dominated, id_col, "left_anti").select(id_col, "centroid_id")
-
-
-# ---------------------------------------------------------------------------
-# incremental near-dup: persisted LSH index (build once, probe per batch)
-# ---------------------------------------------------------------------------
-
-
-def write_lsh_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    *,
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the MinHash-LSH index of a corpus: ``{path}/bands``
-    (_id, bh; partitioned by band) and ``{path}/docs`` (_id, _sh — the
-    hashed shingle sets for exact verification).
-
-    This is what makes near-dup INCREMENTAL at 100 TB: the corpus pays
-    tokenize→shingle→signature exactly once; every future batch probes
-    parquet (:func:`probe_lsh_index`) instead of recomputing a growing
-    corpus — the same build/serve split as the IVF index
-    (operators/similarity.py:write_ivf_index), applied to dedup. Call
-    with ``mode="append"`` to grow the index with a batch that has just
-    been probed and admitted (the daily-crawl loop).
-
-    Band partitioning keeps each probe-join task's input to one band's
-    buckets and lets a band-subset probe (cheaper, lower recall) prune
-    at the file level; registering the bands table bucketed by ``bh``
-    (saveAsTable) would additionally remove the index-side shuffle —
-    kept as plain parquet here for path portability."""
-    per_doc, banded = minhash_doc_tables(
-        df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands, seed=seed
-    )
-    banded.write.mode(mode).partitionBy("band").parquet(f"{path}/bands")
-    per_doc.select("_id", "_sh").write.mode(mode).parquet(f"{path}/docs")
-    per_doc.unpersist()
-
-
-def probe_lsh_index(
-    new_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    *,
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """Near-duplicates of a NEW batch against an indexed corpus, without
-    touching the corpus text: band the batch (same parameters as the
-    index build — they are part of the index's identity), equi-join its
-    band hashes against ``{path}/bands``, then verify candidates
-    exactly against the stored shingle sets.
-
-    Returns (new_id, corpus_id, jaccard ≥ threshold). Ids present on
-    both sides (a batch probed after being appended) never self-pair.
-    Cost: |batch|·bands exploded rows + the colliding buckets of the
-    index + one verification join over candidates — independent of
-    corpus text size; LSH recall caveats are q29's (approximate by
-    design; the exact corpus-wide companion is the prefix-filtered
-    Jaccard join, qb0)."""
-    spark = new_df.sparkSession
-    per_doc, banded = minhash_doc_tables(
-        new_df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands, seed=seed
-    )
-    idx_bands = spark.read.parquet(f"{path}/bands")
-    cands = (
-        banded.join(idx_bands.withColumnRenamed("_id", "corpus_id"), ["band", "bh"])
-        .select(F.col("_id").alias("new_id"), "corpus_id")
-        .filter(F.col("new_id") != F.col("corpus_id"))
-        .distinct()
-    )
-    idx_docs = spark.read.parquet(f"{path}/docs").withColumnRenamed(
-        "_id", "corpus_id"
-    )
-    return (
-        cands.join(
-            per_doc.select(F.col("_id").alias("new_id"), F.col("_sh").alias("_sh_n")),
-            "new_id",
-        )
-        .join(idx_docs.withColumnRenamed("_sh", "_sh_c"), "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            (
-                F.size(F.array_intersect("_sh_n", "_sh_c"))
-                / F.size(F.array_union("_sh_n", "_sh_c"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
 
 
 def bag_jaccard_pairs(

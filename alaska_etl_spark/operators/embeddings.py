@@ -1,15 +1,14 @@
-"""Embedding-column preprocessing: normalization, int8 quantization,
-matryoshka truncation.
+"""Embedding-column preprocessing: int8 quantization, matryoshka
+truncation.
 
 The storage side of similarity search at 100 TB: a float32 embedding
 column is usually the widest thing in a training-data table, and the
-standard levers are (a) L2-normalize once at ingest so every cosine
-downstream is a plain dot product, (b) quantize to int8 (4× smaller, and
-the shuffle/scan volume of every dedup & ANN stage shrinks with it),
-(c) truncate matryoshka-trained embeddings to a prefix (MRL, Kusupati
+standard levers are (a) quantize to int8 (4× smaller, and the
+shuffle/scan volume of every dedup & ANN stage shrinks with it),
+(b) truncate matryoshka-trained embeddings to a prefix (MRL, Kusupati
 et al. '22) for the coarse stages of a cascade.
 
-All three are Arrow-batched or pure-expression — no row-at-a-time
+Both are Arrow-batched or pure-expression — no row-at-a-time
 Python. Quantization uses the explicit ``floor(x*scale + 0.5)``
 convention rather than a library ``round`` so the DuckDB oracle (q66)
 reproduces every code point exactly (banker's rounding differs between
@@ -30,35 +29,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def _l2_normalize_batch(v: pd.Series) -> pd.Series:
-    """One stacked batch matmul per Arrow batch (uniform-width vectors
-    stack into a matrix; rows stay in numpy until the final unstack) —
-    NULL rows pass through as NULL."""
-    n = len(v)
-    if n == 0:
-        return pd.Series([], dtype=object)
-    vals = v.to_numpy()
-    mask = np.fromiter((x is None for x in vals), count=n, dtype=bool)
-    if mask.all():
-        return pd.Series([None] * n)
-    fill = next(x for x, m in zip(vals, mask) if not m)
-    x = np.stack([fill if m else val for val, m in zip(vals, mask)]).astype(
-        np.float64, copy=False
-    )
-    norm = np.sqrt(np.einsum("ij,ij->i", x, x))
-    norm[norm == 0] = 1.0  # zero vectors pass through unscaled
-    out = x / norm[:, None]
-    res = [None if m else row.tolist() for row, m in zip(out, mask)]
-    return pd.Series(res)
-
-
-def l2_normalize(vec: Column) -> Column:
-    """Unit-normalize an array column (zero vectors pass through,
-    NULL stays NULL). Normalize once at ingest; cosine becomes dot."""
-    return _l2_normalize_batch(vec.cast("array<double>"))
 
 
 _QUANT_SCHEMA = StructType(

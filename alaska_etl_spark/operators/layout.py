@@ -1,5 +1,5 @@
-"""Multi-dimensional data layout: Z-order (Morton) clustering keys and a
-range-clustered writer.
+"""Multi-dimensional data layout: Z-order (Morton) clustering keys and
+the file-skipping audit that measures them.
 
 At 100 TB, pruning is the cheapest optimization there is: a z-ordered
 table colocates rows that are close in EVERY clustering dimension, so
@@ -7,7 +7,8 @@ parquet min/max footer stats skip files/row-groups for predicates on any
 of them — a plain ``ORDER BY (a, b)`` layout only ever prunes on ``a``.
 This is the same public technique as Delta/Iceberg ``OPTIMIZE ZORDER BY``
 (Morton curves; see also Orenstein & Merrett '84), implemented as pure
-bit arithmetic plus ``repartitionByRange`` — no table format required.
+bit arithmetic — no table format required. A clustered write is
+``repartitionByRange`` plus ``sortWithinPartitions`` on the key.
 
 The key is deterministic integer arithmetic, so the identical computation
 is emitted in two forms from one term generator: a Spark ``Column``
@@ -20,10 +21,6 @@ Production notes baked into the contract:
 - Each input is masked to the low ``bits`` bits. Real tables first map
   each dimension onto that range (e.g. ``width_bucket``/percentile rank,
   as Delta does); the mask keeps the demo exact and engine-portable.
-- ``zorder_write`` range-partitions on the key (a sampling pass picks the
-  boundaries — one extra scan, the standard cost of any clustered write)
-  and sorts within partitions so row groups inside a file are clustered
-  too.
 """
 
 from __future__ import annotations
@@ -68,30 +65,6 @@ def zorder_sql(cols: list[str], *, bits: int = 16) -> str:
         for i in range(bits):
             terms.append(f"((({masked} >> {i}) & 1) << {i * n + j})")
     return "(" + " | ".join(terms) + ")"
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    by: list[str],
-    *,
-    bits: int = 16,
-    num_files: int = 32,
-    key_col: str = "_zkey",
-) -> None:
-    """Write ``df`` clustered along the z-curve of ``by``:
-    ``repartitionByRange`` on the key (contiguous curve segments per
-    file → tight per-file min/max on every clustered column) and
-    ``sortWithinPartitions`` so row groups inside each file are
-    clustered as well. The key is dropped before write."""
-    (
-        df.withColumn(key_col, zorder_key(by, bits=bits))
-        .repartitionByRange(num_files, key_col)
-        .sortWithinPartitions(key_col)
-        .drop(key_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def layout_skipping_audit(

@@ -10,11 +10,13 @@ Spark-first formulation, no UDFs anywhere:
   (bigram counts, unigram-context counts). The model IS a pair of
   DataFrames — at 100 TB the counts tables are vocabulary-sized, get
   written like any other table, and scoring joins against them.
-- **Score** (:func:`score_bigram_lm`): explode each scored document's
-  bigrams, left-join the counts (unseen bigram → 0, unseen context →
-  0), per-bigram add-one-smoothed negative log likelihood
+- **Score** (:func:`domain_relevance_weights`): explode each scored
+  document's bigrams, left-join the counts (unseen bigram → 0, unseen
+  context → 0), per-bigram add-one-smoothed negative log likelihood
   ``-ln((c12 + 1) / (c1 + V))`` entirely in codegen, one aggregate
-  back to document grain. Perplexity = ``exp(avg_nll)``.
+  back to document grain. :func:`bigram_lm_scores` scores a corpus
+  under its own model with windows instead of joins. Perplexity =
+  ``exp(avg_nll)``.
 
 Join strategy: the counts tables are |vocab| and |vocab²∩corpus| rows;
 AQE broadcasts them while they fit and degrades to a shuffle join on
@@ -52,7 +54,6 @@ from alaska_etl_spark.operators.parallelism import ensure_min_parallelism
 __all__ = [
     "BigramLM",
     "train_bigram_lm",
-    "score_bigram_lm",
     "bigram_lm_scores",
     "domain_relevance_weights",
 ]
@@ -128,71 +129,6 @@ def train_bigram_lm(df: DataFrame, id_col: str, text_col: str) -> BigramLM:
         .agg(F.countDistinct("_w").alias("_V"))
     )
     return BigramLM(bigrams=bigrams, contexts=contexts, vocab=vocab)
-
-
-def score_bigram_lm(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    lm: BigramLM,
-    *,
-    round_digits: int = 6,
-    ppl_digits: int = 4,
-) -> DataFrame:
-    """Per-document add-one-smoothed bigram NLL and perplexity:
-    (id, n_bigrams, avg_nll, ppl). Documents with < 2 tokens score
-    n_bigrams=0 with NULL avg_nll/ppl (no evidence, not zero
-    surprise)."""
-    rows = _bigram_rows(df, id_col, text_col)
-    return _score_rows(
-        rows,
-        df.select(F.col(id_col).alias("_id")),
-        lm,
-        id_col=id_col,
-        round_digits=round_digits,
-        ppl_digits=ppl_digits,
-    )
-
-
-def _score_rows(
-    rows: DataFrame,
-    base: DataFrame,
-    lm: BigramLM,
-    *,
-    id_col: str,
-    round_digits: int,
-    ppl_digits: int,
-) -> DataFrame:
-    """Score pre-built bigram rows against a model; ``base`` carries
-    every document id (re-attached by left join so < 2-token docs
-    surface with NULL scores)."""
-    scored = (
-        rows.join(lm.bigrams, ["_w1", "_w2"], "left")
-        .join(lm.contexts, "_w1", "left")
-        .join(F.broadcast(lm.vocab))
-        .select(
-            "_id",
-            (
-                -F.log(
-                    (F.coalesce(F.col("_c12"), F.lit(0)) + 1).cast("double")
-                    / (F.coalesce(F.col("_c1"), F.lit(0)) + F.col("_V"))
-                )
-            ).alias("_nll"),
-        )
-    )
-    per_doc = scored.groupBy("_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.round(F.avg("_nll"), round_digits).alias("avg_nll"),
-    )
-    return (
-        base.join(per_doc, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
-            "avg_nll",
-            F.round(F.exp(F.col("avg_nll")), ppl_digits).alias("ppl"),
-        )
-    )
 
 
 def bigram_lm_scores(
@@ -300,9 +236,9 @@ def domain_relevance_weights(
     TARGET-domain bigram LM and under the SOURCE (full-corpus) LM;
     ``weight = source_nll − target_nll`` — positive means the document
     looks more like the target domain than like the corpus average, the
-    signal importance-resampling mixes by. Pure composition of
-    :func:`train_bigram_lm` + :func:`score_bigram_lm` (two count-table
-    joins; the LM tables are vocabulary-sized).
+    signal importance-resampling mixes by. Two :func:`train_bigram_lm`
+    models scored by count-table joins (the LM tables are
+    vocabulary-sized).
 
     Returns (id, n_bigrams, target_nll, source_nll, weight); documents
     with < 2 tokens carry NULL scores.
@@ -310,8 +246,8 @@ def domain_relevance_weights(
     Fused scoring: the scored corpus's bigram rows are exploded ONCE
     and joined against both models' count tables in one chain (four
     vocabulary-sized build sides), then a single aggregate computes
-    both NLL averages — half the explode/shuffle work of running
-    :func:`score_bigram_lm` twice."""
+    both NLL averages — half the explode/shuffle work of scoring each
+    model separately."""
     lm_t = train_bigram_lm(target, id_col, text_col)
     lm_s = train_bigram_lm(df, id_col, text_col)
 
@@ -375,7 +311,7 @@ def perplexity_gate(
     (id, group, ppl, bucket). Lower perplexity = more fluent = head.
 
     Engine-exact protocol: perplexity (already rounded to 4 dp by
-    :func:`score_bigram_lm`) is fixed-pointed to an INTEGER micro value
+    :func:`bigram_lm_scores`) is fixed-pointed to an INTEGER micro value
     and the p33/p67 thresholds are exact interpolated percentiles over
     those integers, rounded back to integers — every comparison happens
     in the integer domain, so bucket assignment is reproducible across

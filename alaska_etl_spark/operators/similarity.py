@@ -29,8 +29,8 @@ from alaska_etl_spark.functions.localrel import local_df
 def _np_round_half_away(x, digits: int):
     """numpy rounding that matches F.round / DuckDB round(): ties go
     AWAY from zero. np.round is half-to-even — at an exact half-tie it
-    silently diverges from every SQL oracle in this repo (the ADVICE r5
-    cosine_topk_arrow finding); Arrow-side oracle-facing rounding
+    silently diverges from every SQL oracle in this repo (ADVICE r5);
+    Arrow-side oracle-facing rounding
     routes through this helper instead (property-pinned against DuckDB
     round() in tests/test_properties.py)."""
     scale = 10.0 ** digits
@@ -324,7 +324,7 @@ def assign_buckets(
     VERDICT r2 "What's wrong" #3.)
 
     The centroid collect is ncells rows (a few KB) — the same bounded
-    driver envelope as :func:`ivf_search`'s probe-cell list, and the
+    driver envelope as :func:`ivf_topk`'s centroid matrix, and the
     intended mechanism: the quantizer must be small enough to ship to
     every task anyway. NULL/zero-norm corpus vectors deterministically
     land in the smallest centroid_id (the old NULL-cosine tie-break).
@@ -387,63 +387,6 @@ def _assign_with_matrix(
     ).withColumn("centroid_id", _nearest(F.col(vec_col)))
 
 
-def kmeans_refine(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = 2,
-) -> DataFrame:
-    """Lloyd iterations over the coarse quantizer: better centroids →
-    tighter cells → higher recall per probed cell. Returns refined
-    (centroid_id, centroid) with the original cell labels.
-
-    Per-iteration scale shape: assignment is the shuffle-free Arrow
-    argmax (:func:`assign_buckets`); the mean update is posexplode over
-    vector components into a hash aggregate — map-side partial sums
-    collapse the shuffle to ~ncells × dim rows regardless of corpus
-    size, and the driver collects only that (the same bounded envelope
-    as the assignment closure itself, which ships centroids to every
-    task anyway). Empty cells keep their previous centroid.
-
-    Means of floats are summation-order dependent in the last bits, so
-    refined centroids are NOT oracle-reproducible — use them where the
-    quantizer quality matters (IVF serving), not where an external
-    engine must replay assignment (semantic dedup keeps the unrefined
-    deterministic quantizer).
-    """
-    rows = sorted(
-        centroids.select("centroid_id", "centroid").collect(),
-        key=lambda r: r.centroid_id,
-    )
-    cents = {r.centroid_id: list(r.centroid) for r in rows}
-    spark = corpus.sparkSession
-    for _ in range(iters):
-        cdf = local_df(
-            spark,
-            [(k, v) for k, v in sorted(cents.items())],
-            "centroid_id bigint, centroid array<double>",
-        )
-        assigned = assign_buckets(corpus, cdf, id_col=id_col, vec_col=vec_col)
-        sums = (
-            assigned.select("centroid_id", F.posexplode(vec_col).alias("_d", "_v"))
-            .groupBy("centroid_id", "_d")
-            .agg(F.sum("_v").alias("_s"), F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        acc: dict[int, dict[int, float]] = {}
-        counts: dict[int, int] = {}
-        for r in sums:
-            acc.setdefault(r.centroid_id, {})[r._d] = r._s
-            counts[r.centroid_id] = r._n
-        for cid, dims in acc.items():
-            n = counts[cid]
-            cents[cid] = [dims[i] / n for i in range(len(dims))]
-    out = [(k, v) for k, v in sorted(cents.items())]
-    return local_df(spark, out, "centroid_id bigint, centroid array<double>")
-
-
 def _lloyd_cents(
     corpus: DataFrame,
     *,
@@ -453,10 +396,9 @@ def _lloyd_cents(
     iters: int = 2,
     round_digits: int = 6,
 ) -> "dict[int, list[float]]":
-    """Lloyd iterations an external engine can replay EXACTLY — the
-    oracle-safe sibling of :func:`kmeans_refine`, whose float means are
-    summation-order dependent (see its docstring). Three protocol moves
-    make every step engine-independent:
+    """Lloyd iterations an external engine can replay EXACTLY. Float
+    means of float vectors are summation-order dependent in the last
+    bits; three protocol moves make every step engine-independent:
 
     - init: :func:`centroids_by_id` (``ORDER BY id LIMIT k``);
     - assignment: :func:`assign_buckets` with ``round_digits`` — argmax
@@ -492,8 +434,7 @@ def _lloyd_cents(
     mean update, empty cells keep their previous centroid exactly.
 
     Returns the centroid DICT (the driver holds k·dim doubles anyway)
-    so downstream consumers — the frame-returning
-    :func:`kmeans_replicable`, :func:`kmeans_summary`,
+    so downstream consumers — :func:`kmeans_summary` and
     :func:`cluster_separation` — can skip frame round-trips: the r8
     anatomy showed kmeans_summary paying a whole Spark JOB for an
     ``head(1)`` emptiness check of a frame whose rows the driver had
@@ -538,32 +479,8 @@ def _lloyd_cents(
 
 
 def _cents_frame(spark, cents: "dict[int, list[float]]") -> DataFrame:
-    if not cents:
-        return spark.createDataFrame(
-            [], "centroid_id bigint, centroid array<double>"
-        )
     return local_df(
         spark, sorted(cents.items()), "centroid_id bigint, centroid array<double>"
-    )
-
-
-def kmeans_replicable(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    iters: int = 2,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Frame form of :func:`_lloyd_cents` (see its docstring for the
-    protocol and scale shape). Returns (centroid_id, centroid)."""
-    return _cents_frame(
-        corpus.sparkSession,
-        _lloyd_cents(
-            corpus, id_col=id_col, vec_col=vec_col, k=k, iters=iters,
-            round_digits=round_digits,
-        ),
     )
 
 
@@ -576,7 +493,7 @@ def kmeans_summary(
     iters: int = 2,
     round_digits: int = 6,
 ) -> DataFrame:
-    """Cluster-quality report over :func:`kmeans_replicable`: per final
+    """Cluster-quality report over :func:`_lloyd_cents`: per final
     cell, member count and mean cosine-to-centroid. Per-row cosines are
     fixed-pointed to 1e-6 micros BEFORE summing (order-free BIGINT; the
     PSI/JS emit discipline of ``functions/fixedpoint``) and the mean is
@@ -641,7 +558,7 @@ def cluster_separation(
     round_digits: int = 6,
 ) -> DataFrame:
     """Per-cell cluster SEPARATION report over
-    :func:`kmeans_replicable`: the centroid-based silhouette surrogate
+    :func:`_lloyd_cents`: the centroid-based silhouette surrogate
     — for each vector, its cosine to its OWN (best) centroid and the
     margin to the runner-up centroid; per final cell, member count and
     the two means. A cell whose mean margin ~0 sits on a boundary
@@ -727,83 +644,6 @@ def cluster_separation(
     )
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ncells: int = 16,
-    refine_iters: int = 0,
-):
-    """One-time IVF build: (centroids, corpus-with-centroid_id). Persist
-    the assignment partitioned by ``centroid_id`` (see
-    :func:`write_ivf_index`) and searches prune to nprobe/ncells of the
-    data at the *file* level — the 100 TB serving path.
-    ``refine_iters`` > 0 runs :func:`kmeans_refine` Lloyd rounds on the
-    sampled seed centroids before the final assignment (build-time cost:
-    one narrow assign + one tiny-shuffle mean update per round)."""
-    cents = _centroids(corpus, id_col, vec_col, ncells)
-    if refine_iters > 0:
-        cents = kmeans_refine(
-            corpus, cents, id_col=id_col, vec_col=vec_col, iters=refine_iters
-        )
-    assigned = assign_buckets(corpus, cents, id_col=id_col, vec_col=vec_col)
-    return cents, assigned
-
-
-def write_ivf_index(assigned: DataFrame, path: str) -> None:
-    """Persist the bucket assignment partitioned by centroid_id: each
-    cell is its own partition directory, so a probe of k cells reads
-    exactly k directories (partition pruning, visible as PartitionFilters
-    in the scan)."""
-    assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-
-
-def ivf_search(
-    spark,
-    centroids: DataFrame,
-    index_path: str,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    nprobe: int = 4,
-    round_digits: int | None = 4,
-) -> DataFrame:
-    """Search a persisted IVF index. Probe cells are computed from the
-    (broadcast-sized) centroid set and collected to the driver — a few
-    ints — so the cell predicate is a literal ``isin`` that prunes
-    parquet partitions before any row is read."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    )
-    scored = q.join(F.broadcast(centroids), F.lit(True)).select(
-        "query_id", "_qv", "centroid_id",
-        cosine_sim(F.col("_qv"), F.col("centroid")).alias("_cs"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("_cs").desc(), F.col("centroid_id").asc())
-    probes = (
-        scored.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "_qv", "centroid_id")
-    )
-    cells = [r.centroid_id for r in probes.select("centroid_id").distinct().collect()]
-
-    index = spark.read.parquet(index_path).filter(F.col("centroid_id").isin(cells))
-    sim = cosine_sim(F.col("_qv"), F.col(vec_col))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    cand = (
-        index.join(probes, "centroid_id")
-        .select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("cosine"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -818,9 +658,7 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF approximate top-k: probe only the ``nprobe`` cells nearest to
     each query. Recall < 1 by design; the exact :func:`cosine_topk` is
-    the oracle. At 100 TB, bucket assignment is computed once and
-    persisted (see :func:`build_ivf_index` / :func:`ivf_search`) so
-    repeated queries shuffle nothing.
+    the oracle.
 
     ``replicable=True`` makes the WHOLE pipeline engine-exact so an
     external oracle can replay it end-to-end: centroids come from
@@ -937,334 +775,6 @@ def ivf_topk(
     return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-# ---------------------------------------------------------------------------
-# Product quantization (PQ): compressed-domain ANN for the 100 TB shelf
-# ---------------------------------------------------------------------------
-
-
-def pq_train(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    k: int = 16,
-    dim: int | None = None,
-    iters: int = 2,
-) -> np.ndarray:
-    """Train product-quantization codebooks: split each vector into ``m``
-    subvectors and k-means each subspace to ``k`` centroids. Returns the
-    codebooks as an (m, k, dim/m) ndarray — the quantizer artifact, a
-    few KB, that :func:`pq_encode` / :func:`pq_topk` carry in their UDF
-    closures (the same ship-to-every-task envelope as
-    :func:`assign_buckets`' centroids).
-
-    Scale shape per Lloyd round — ALL subspaces advance in ONE corpus
-    pass: a single Arrow pandas_udf computes the m per-subspace
-    assignments (narrow, no shuffle), and the mean update posexplodes
-    vector components keyed by (subspace, code, component) into a
-    partially-aggregated shuffle of ~m·k·(dim/m) = k·dim rows — corpus-
-    size-independent, like :func:`kmeans_refine`. Seeds are the ``k``
-    smallest-id corpus vectors sliced per subspace
-    (TakeOrderedAndProject — no Exchange), so training is reproducible
-    up to float summation order.
-    """
-    if dim is None:
-        raise ValueError(
-            "pq_train requires dim= (embedding width); inferring it would "
-            "run a hidden driver-side job on the corpus"
-        )
-    assert dim % m == 0, "m must divide the embedding dim"
-    dsub = dim // m
-    seed_rows = (
-        corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
-        .orderBy(id_col)
-        .limit(k)
-        .collect()
-    )
-    seeds = np.stack([np.asarray(r._v, dtype=np.float64) for r in seed_rows])
-    books = np.stack([seeds[:, j * dsub : (j + 1) * dsub] for j in range(m)])  # m×k×dsub
-
-    vec_rows = corpus.select(F.col(vec_col).cast("array<double>").alias("_v"))
-    for _ in range(iters):
-        codes_udf = _pq_codes_udf(books)
-        coded = vec_rows.withColumn("_codes", codes_udf(F.col("_v")))
-        sums = (
-            coded.select(F.col("_codes"), F.posexplode("_v").alias("_i", "_x"))
-            .select(
-                (F.col("_i") / dsub).cast("int").alias("_j"),
-                F.element_at("_codes", (F.col("_i") / dsub).cast("int") + 1).alias("_c"),
-                (F.col("_i") % dsub).alias("_d"),
-                "_x",
-            )
-            .groupBy("_j", "_c", "_d")
-            .agg(F.sum("_x").alias("_s"), F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        new_books = books.copy()
-        for r in sums:
-            new_books[r._j, r._c, r._d] = r._s / r._n
-        books = new_books
-    return books
-
-
-def _pq_codes_udf(books: np.ndarray):
-    """Arrow pandas_udf assigning each vector its m-part PQ code word
-    (argmin squared-L2 per subspace). Narrow projection — zero shuffle."""
-    m, k, dsub = books.shape
-    flat = books  # closure copy
-
-    @pandas_udf("array<int>")
-    def _codes(v: pd.Series) -> pd.Series:
-        n = len(v)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        x = np.stack(v.to_numpy()).astype(np.float64, copy=False)  # n × dim
-        xs = x.reshape(n, m, dsub)
-        # ||x - c||² = ||x||² - 2x·c + ||c||²; argmin over k per subspace
-        cn = np.einsum("mkd,mkd->mk", flat, flat)  # m × k
-        dots = np.einsum("nmd,mkd->nmk", xs, flat)  # n × m × k
-        codes = np.argmin(cn[None, :, :] - 2.0 * dots, axis=2).astype(np.int32)
-        return pd.Series(list(codes))
-
-    return _codes
-
-
-def pq_encode(
-    corpus: DataFrame,
-    books: np.ndarray,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, vector) → (id, pq_code array<int> of length m): the 100 TB
-    compression step — dim × 4 bytes becomes m small ints (m bytes once
-    stored as tinyint/byte), a 16-64× shrink that every downstream scan,
-    shuffle, and cache inherits. Zero-shuffle narrow projection (pinned
-    in tests)."""
-    return corpus.select(
-        F.col(id_col),
-        _pq_codes_udf(books)(F.col(vec_col).cast("array<double>")).alias("pq_code"),
-    )
-
-
-def pq_topk(
-    corpus_codes: DataFrame,
-    queries: DataFrame,
-    books: np.ndarray,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) PQ search: approximate top-k neighbors
-    from the COMPRESSED corpus — raw vectors never touch the scan.
-
-    Per query, the squared-L2 distance to any corpus vector decomposes
-    into m table lookups: table[j][c] = ||q_j − books[j][c]||², so each
-    candidate costs m adds instead of a dim-length dot product, against
-    a corpus that is 16-64× smaller on disk. The query set is collected
-    into the UDF closure (small by the same contract that broadcasts it
-    in :func:`cosine_topk`; the lookup tables are q × m × k doubles — a
-    few KB). The per-query top-k is the same rounded window as every
-    other search path; ``WindowGroupLimit`` keeps partial top-k
-    map-side, so the shuffle carries ~k rows per (partition, query).
-
-    Returns (query_id, neighbor_id, adist, rank) — adist ascending;
-    recall is judged against :func:`cosine_topk` (on L2-normalized
-    vectors squared-L2 order ≡ cosine order).
-    """
-    m, kk, dsub = books.shape
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("_qid"), F.col(vec_col).cast("array<double>").alias("_qv")
-        ).collect(),
-        key=lambda r: r._qid,
-    )
-    qids = np.asarray([r._qid for r in q_rows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r._qv, dtype=np.float64) for r in q_rows])
-    qs = qmat.reshape(len(qids), m, dsub)
-    cn = np.einsum("mkd,mkd->mk", books, books)
-    qdots = np.einsum("qmd,mkd->qmk", qs, books)
-    qn = np.einsum("qmd,qmd->qm", qs, qs)
-    tables = qn[:, :, None] - 2.0 * qdots + cn[None, :, :]  # q × m × k
-
-    @pandas_udf("array<double>")
-    def _adists(codes: pd.Series) -> pd.Series:
-        n = len(codes)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        cm = np.stack(codes.to_numpy()).astype(np.int64, copy=False)  # n × m
-        # gather per query: sum the m table entries this row's codes select
-        sub = np.arange(m)[None, :]
-        out = np.stack([t[sub, cm].sum(axis=1) for t in tables], axis=1)  # n × q
-        return pd.Series(list(_np_round_half_away(out, round_digits)))
-
-    scored = corpus_codes.select(
-        F.col(id_col).alias("neighbor_id"), _adists(F.col("pq_code")).alias("_ds")
-    ).select(
-        "neighbor_id", F.posexplode("_ds").alias("_qi", "adist")
-    ).select(
-        F.element_at(F.lit(qids.tolist()), F.col("_qi") + 1).alias("query_id"),
-        "neighbor_id",
-        "adist",
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ncells: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    kcode: int = 16,
-    dim: int | None = None,
-    iters: int = 1,
-    k: int = 10,
-    round_digits: int = 6,
-) -> DataFrame:
-    """IVF-PQ (IVFADC): coarse-quantize the corpus into ``ncells``
-    inverted lists, product-quantize each vector's RESIDUAL
-    (vector − its centroid), and answer queries by scanning only the
-    ``nprobe`` nearest cells with per-(query, cell) ADC lookup tables —
-    the FAISS-style composition both approximations were built for:
-    IVF prunes which rows are scored, PQ shrinks what scoring reads.
-
-    Build: :func:`assign_buckets` (narrow argmax), residuals via a
-    broadcast join + ``zip_with`` (JVM-side), :func:`pq_train` /
-    :func:`pq_encode` on the residual column. Search: probe cells are
-    chosen driver-side from the (few-KB) centroid matrix, the
-    compressed corpus is filtered to probed cells, and one Arrow pass
-    sums m table lookups per (row, probing query); squared-L2
-    ascending, ties to the smaller neighbor id. The only Exchange is
-    the final per-query top-k window.
-
-    At 100 TB the encoded corpus persists partitioned by
-    ``centroid_id`` (:func:`write_ivf_index` applies unchanged — the
-    code column is just smaller), so a probe reads nprobe/ncells of an
-    already-16-64×-compressed table. Approximate by design → rows-only
-    query (q91); recall is judged against :func:`cosine_topk` in
-    tests/test_similarity.py.
-    """
-    if dim is None:
-        raise ValueError("ivfpq_topk requires dim= (no hidden driver job)")
-    cents = _centroids(corpus, id_col, vec_col, ncells)
-    crows = sorted(cents.collect(), key=lambda r: r.centroid_id)
-    cids = np.asarray([r.centroid_id for r in crows], dtype=np.int64)
-    cmat = np.asarray([r.centroid for r in crows], dtype=np.float64)
-    cnorm = np.sqrt(np.einsum("ij,ij->i", cmat, cmat))
-    cnorm[cnorm == 0] = 1.0
-
-    assigned = assign_buckets(corpus, cents, id_col=id_col, vec_col=vec_col)
-    cdf = F.broadcast(
-        local_df(
-            corpus.sparkSession,
-            [(int(i), [float(x) for x in v]) for i, v in zip(cids, cmat)],
-            "centroid_id bigint, _cent array<double>",
-        )
-    )
-    from alaska_etl_spark.cache import tracked_persist
-
-    # resid's subtree contains the assign_buckets Arrow pass over the
-    # whole corpus; unpersisted, its three consumers (pq_train,
-    # pq_encode, the centroid_id join-back) re-ran that pandas UDF —
-    # the r12 diamond audit read 3 distinct ArrowEvalPython[_nearest]
-    # nodes in q91's plan. Materialize the residuals once (the same
-    # trade write_ivf_index makes durable).
-    resid = tracked_persist(
-        assigned.join(cdf, "centroid_id").select(
-            F.col(id_col),
-            "centroid_id",
-            F.zip_with(F.col(vec_col), F.col("_cent"), lambda a, b: a - b).alias("_resid"),
-        )
-    )
-    books = pq_train(resid, id_col=id_col, vec_col="_resid", m=m, k=kcode, dim=dim, iters=iters)
-    codes = pq_encode(resid, books, id_col=id_col, vec_col="_resid").join(
-        resid.select(id_col, "centroid_id"), id_col
-    )
-
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("_qid"), F.col(vec_col).cast("array<double>").alias("_qv")
-        ).collect(),
-        key=lambda r: r._qid,
-    )
-    qids = np.asarray([r._qid for r in q_rows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r._qv, dtype=np.float64) for r in q_rows])
-    qn = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))
-    qn[qn == 0] = 1.0
-    qsims = (qmat @ cmat.T) / np.outer(qn, cnorm)
-
-    nq = len(qids)
-    dsub = dim // m
-    # probe map cell-index -> query indices, and per-(query, cell) ADC
-    # tables over the RESIDUAL codebooks: t[j, code] = ||qr_j - b_jk||^2
-    cell_probers: dict[int, list[int]] = {}
-    tables: dict[tuple[int, int], np.ndarray] = {}
-    bn = np.einsum("mkd,mkd->mk", books, books)
-    for qi in range(nq):
-        order = np.lexsort((cids, -qsims[qi]))[: min(nprobe, len(cids))]
-        for ci in order:
-            cell_probers.setdefault(int(ci), []).append(qi)
-            qr = (qmat[qi] - cmat[ci]).reshape(m, dsub)
-            qrd = np.einsum("md,mkd->mk", qr, books)
-            qrn = np.einsum("md,md->m", qr, qr)
-            tables[(qi, int(ci))] = qrn[:, None] - 2.0 * qrd + bn  # m × kcode
-    probed_cells = [int(cids[ci]) for ci in cell_probers]
-    cid_to_idx = {int(c): i for i, c in enumerate(cids)}
-
-    @pandas_udf("array<double>")
-    def _adists(cell: pd.Series, code: pd.Series) -> pd.Series:
-        n = len(cell)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        cm = np.stack(code.to_numpy()).astype(np.int64, copy=False)  # n × m
-        cells = cell.to_numpy()
-        sub = np.arange(m)
-        out = np.full((n, nq), np.nan)
-        for ci, qlist in cell_probers.items():
-            mask = cells == cids[ci]
-            if not mask.any():
-                continue
-            rows = cm[mask]
-            for qi in qlist:
-                out[mask, qi] = tables[(qi, ci)][sub, rows].sum(axis=1)
-        out = _np_round_half_away(out, round_digits)
-        return pd.Series([[None if np.isnan(x) else float(x) for x in r] for r in out])
-
-    scored = (
-        codes.filter(F.col("centroid_id").isin(probed_cells))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            _adists(
-                F.col("centroid_id").cast("bigint"), F.col("pq_code")
-            ).alias("_ds"),
-        )
-        # posexplode_OUTER on purpose: _ds is always an nq-length array,
-        # so outer vs inner emit identical rows — but a plain explode
-        # lets InferFiltersFromGenerate synthesize size(_ds)>0 and push
-        # it below the Generate, re-evaluating the _adists pandas UDF a
-        # second time (the q07 trap; r12 diamond audit read 2
-        # ArrowEvalPython[_adists] nodes here).
-        .select("neighbor_id", F.posexplode_outer("_ds").alias("_qi", "adist"))
-        .filter(F.col("adist").isNotNull())
-        .select(
-            F.element_at(F.lit(qids.tolist()), F.col("_qi") + 1).alias("query_id"),
-            "neighbor_id",
-            "adist",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def hard_negative_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1319,155 +829,6 @@ def hard_negative_topk(
     return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def cosine_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str | None = None,
-    k: int = 10,
-    include_self: bool = False,
-    round_digits: int = 4,
-    max_query_rows: int = 100_000,
-) -> DataFrame:
-    """Exact brute-force top-k cosine neighbors, Arrow-matmul form:
-    identical results to :func:`cosine_topk` (same rounding, same
-    (cosine DESC, neighbor_id ASC) order), different physical shape —
-    the query matrix is collected driver-side (O(queries) rows, the
-    same bounded envelope as :func:`assign_buckets`' centroid collect)
-    and each corpus Arrow batch computes ONE numpy matmul against it,
-    emitting only its per-(query, batch) top-k candidates. A global
-    window top-k over |queries|·k·|batches| candidate rows finishes.
-
-    Per-batch pruning is exact: under the total order (cosine DESC,
-    id ASC), every member of the global top-k is in its own batch's
-    top-k, so the candidate union is a superset. vs cosine_topk's
-    broadcast-join form this replaces |corpus|·|queries| per-row UDF
-    cosines + a |corpus|·|queries|-row window shuffle with a matmul
-    and a window over candidates only — the form that survives a large
-    query side (measured: qf1's two passes 2.9 s → ~1 s at sf0.1).
-    NULL embeddings on EITHER side score 0.0 everywhere (corpus-side
-    via the per-batch zero-substitution; query-side likewise — same as
-    cosine_sim's zero-norm guard); if EVERY query embedding is NULL
-    there is no dimensionality to substitute against and the result is
-    empty. Non-null query vectors must share one dimensionality
-    (raises ValueError otherwise); id columns must be integral
-    (byte/short/int/long — their Spark types are preserved in the
-    output schema, mirroring cosine_topk).
-
-    Rounding is half-away-from-zero at ``round_digits`` — the same mode
-    as Spark ``F.round`` / DuckDB ``round()`` used by :func:`cosine_topk`
-    and the oracles (``np.round`` is half-to-even; ADVICE r5). Residual
-    caveat: BLAS matmul may sum products in a different order than
-    Spark's sequential ``F.aggregate``, so a cosine landing within ulps
-    of an exact .5·10^-digits boundary can still round differently
-    across the two implementations — data-dependent and absent from the
-    fixed test corpora, but not impossible.
-
-    The driver-collect contract is ENFORCED, not advisory (VERDICT r6
-    #2): the query side is fetched through ``limit(max_query_rows+1)``
-    — the driver never materializes more than the cap even when a
-    caller points ``queries`` at a corpus — and exceeding
-    ``max_query_rows`` raises ValueError naming :func:`ivf_topk` as
-    the index-scale substitute (SCALE.md "Driver-collect guard")."""
-    from pyspark.sql.types import IntegralType, StructField, StructType
-
-    qid = query_id_col or id_col
-    qid_field = queries.schema[qid]
-    nid_field = corpus.schema[id_col]
-    for side, field in (("queries", qid_field), ("corpus", nid_field)):
-        if not isinstance(field.dataType, IntegralType):
-            raise ValueError(
-                f"cosine_topk_arrow: {side} id column {field.name!r} must be "
-                f"integral, got {field.dataType.simpleString()} (use cosine_topk "
-                "for arbitrary id types)"
-            )
-    out_struct = StructType(
-        [
-            StructField("query_id", qid_field.dataType),
-            StructField("neighbor_id", nid_field.dataType),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-    qrows = sorted(
-        queries.select(
-            F.col(qid).alias("_qid"),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
-        )
-        .limit(max_query_rows + 1)
-        .collect(),
-        key=lambda r: r._qid,
-    )
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"cosine_topk_arrow: query side exceeds max_query_rows="
-            f"{max_query_rows}; this operator collects the query matrix "
-            "driver-side by contract. For a large query/index side use "
-            "ivf_topk (distributed, no driver materialization), or raise "
-            "max_query_rows explicitly if the driver is sized for it."
-        )
-    spark = corpus.sparkSession
-    if not qrows:  # empty query side: empty typed result, no jobs
-        return spark.createDataFrame([], out_struct.add("rank", "integer"))
-
-    qvecs = [r._qv for r in qrows]
-    dims = {len(v) for v in qvecs if v is not None}
-    if len(dims) > 1:
-        raise ValueError(f"cosine_topk_arrow: ragged query embeddings (dims {sorted(dims)})")
-    dim = dims.pop() if dims else 0
-    q_ids = np.asarray([r._qid for r in qrows], dtype=np.int64)
-    q_mat = np.asarray(
-        [v if v is not None else [0.0] * dim for v in qvecs], dtype=np.float64
-    ).reshape(len(qvecs), dim)
-    q_norm = np.sqrt(np.einsum("ij,ij->i", q_mat, q_mat))
-    q_norm[q_norm == 0] = 1.0
-
-    def _batch_topk(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0 or dim == 0:
-                continue
-            nid = pdf["_nid"].to_numpy(dtype=np.int64)
-            vals = pdf["_cv"].to_numpy()
-            null_mask = np.fromiter((x is None for x in vals), count=n, dtype=bool)
-            if null_mask.any():
-                zero = np.zeros(dim)
-                vals = np.array(
-                    [zero if m else x for x, m in zip(vals, null_mask)], dtype=object
-                )
-            x = np.stack(vals).astype(np.float64, copy=False)
-            xn = np.sqrt(np.einsum("ij,ij->i", x, x))
-            xn[xn == 0] = 1.0
-            raw = (q_mat @ x.T) / np.outer(q_norm, xn)
-            # half-away-from-zero, matching F.round / DuckDB round()
-            sims = _np_round_half_away(raw, round_digits)
-            if not include_self:
-                sims = np.where(q_ids[:, None] == nid[None, :], -np.inf, sims)
-            kk = min(k, n)
-            # per query: order by (-cosine, neighbor_id) and keep kk
-            order = np.lexsort((np.broadcast_to(nid, sims.shape), -sims), axis=1)[:, :kk]
-            rows_q = np.repeat(q_ids, kk)
-            rows_n = nid[order].ravel()
-            rows_c = np.take_along_axis(sims, order, axis=1).ravel()
-            keep = rows_c != -np.inf
-            yield pd.DataFrame(
-                {"query_id": rows_q[keep], "neighbor_id": rows_n[keep], "cosine": rows_c[keep]}
-            )
-
-    from alaska_etl_spark.operators.parallelism import ensure_min_parallelism
-
-    c = ensure_min_parallelism(corpus, id_col).select(
-        F.col(id_col).alias("_nid"),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
-    )
-    cand = c.mapInPandas(_batch_topk, out_struct)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def bitext_topk_pair(
     x: DataFrame,
     y: DataFrame,
@@ -1481,16 +842,16 @@ def bitext_topk_pair(
     """BOTH directions' exact top-k between two embedding sets from ONE
     corpus scan (r6; the engine under :func:`margin_bitext_pairs`): the
     x side is collected driver-side (the same bounded envelope as
-    :func:`cosine_topk_arrow`) and each y Arrow batch computes one
+    :func:`ivf_topk`'s query matrix) and each y Arrow batch computes one
     matmul whose ROWS are per-x candidates and whose COLUMNS are
     complete per-y neighbor lists — every y meets ALL of x inside its
     own batch, so the y→x top-k finalizes in-batch with exact ranks and
     never needs a window. Only the x→y direction windows, over
-    |x|·k·|batches| candidates. vs two cosine_topk_arrow passes this
-    halves the Python stages, drops one driver collect, and drops one
+    |x|·k·|batches| candidates. vs two one-directional matmul passes
+    this halves the Python stages, drops one driver collect, and drops one
     window — measured 2.4-2.9 → ~1.8 s cold for qf1's q40 at sf0.1.
 
-    Rounding and ordering are identical to cosine_topk_arrow
+    Rounding matches :func:`cosine_topk` and the oracles
     (half-away-from-zero at ``round_digits``; ties by neighbor id
     ascending); NULL vectors on either side score 0.0; ids must be
     integral. Returns (xy, yx) DataFrames, each

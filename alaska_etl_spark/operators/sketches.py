@@ -1,60 +1,22 @@
-"""Sketch aggregates: approximate distinct counts (HyperLogLog++) and
-approximate quantiles (Greenwald-Khanna) with their exact companions.
+"""Exact sketch-style aggregates: per-group distinct counts, heavy
+hitters and value-domain quantiles, each with bounded or mergeable
+state and an exact DuckDB oracle.
 
-The scale rationale: COUNT(DISTINCT x) per group is an Expand-based
-two-phase aggregate whose state is the distinct value set — at 100 TB
-the state IS the data. The HLL++ sketch (``approx_count_distinct``)
-keeps fixed ~kilobyte state per group, merges associatively (map-side
-partials combine like any sum), and trades a configured relative error.
-Same story for exact percentiles (full sort / large state) vs
-Greenwald-Khanna (``percentile_approx``, bounded state).
-
-Sketch outputs are engine-defined → rows-only in the driver gate
-(q55_approx_distinct, q57_approx_quantiles); the exact companions are
-the oracles (q46_distinct_counts, q38_percentiles), and the error-bound
-contract — |approx − exact| / exact within tolerance — is pinned in
-tests/test_sketches.py.
-
-:func:`heavy_hitters` is different: the Misra-Gries pass only proposes
-CANDIDATES and a verify pass makes the final answer exact, so it is
-exactly oracled (qa6) despite bounded state — the sketch buys scale,
-not approximation.
+:func:`heavy_hitters`' Misra-Gries pass only proposes CANDIDATES and a
+verify pass makes the final answer exact, so it is exactly oracled
+(qa6) despite bounded state — the sketch buys scale, not
+approximation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def distinct_counts(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
-    """Exact per-group distinct counts (the oracle companion)."""
+    """Exact per-group distinct counts (q46)."""
     return df.groupBy(*group_cols).agg(F.countDistinct(col).alias("n_distinct"))
-
-
-def approx_distinct_counts(
-    df: DataFrame, group_cols: list[str], col: str, *, rsd: float = 0.02
-) -> DataFrame:
-    """HLL++ per-group distinct counts at ``rsd`` relative standard
-    deviation — fixed-size mergeable state instead of a distinct set."""
-    return df.groupBy(*group_cols).agg(
-        F.approx_count_distinct(col, rsd=rsd).alias("n_distinct_approx")
-    )
-
-
-def approx_quantiles(
-    df: DataFrame,
-    group_cols: list[str],
-    col: str,
-    probs: list[float],
-    *,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Greenwald-Khanna approximate quantiles per group; state is
-    O(accuracy), not O(rows)."""
-    return df.groupBy(*group_cols).agg(
-        F.percentile_approx(col, probs, accuracy).alias("quantiles_approx")
-    )
 
 
 def misra_gries_candidates(df: DataFrame, col: str, *, k: int) -> DataFrame:
@@ -155,7 +117,7 @@ def decimal_quantiles(
     by the VALUE DOMAIN, not the row count — the third point in the
     quantile trade-off triangle: exact ``percentile`` buffers every row
     of the group (q38), Greenwald-Khanna bounds state but approximates
-    (:func:`approx_quantiles`), and for FIXED-PRECISION data (money,
+    (``percentile_approx``), and for FIXED-PRECISION data (money,
     sensor readings: ``scale`` decimal steps per unit) counting by
     distinct value is exact AND bounded — a 2-decimal column spanning
     ±1e6 has ≤ 2e8 possible values however many petabytes of rows

@@ -1,20 +1,17 @@
-"""Skew mitigation: salted two-phase aggregation and salted broadcast
-joins (SURVEY §4 / BASELINE scale notes: "skewed keys → salting or AQE
-skew-join").
+"""Skew mitigation: salted two-phase aggregation and the skew
+diagnostic (SURVEY §4 / BASELINE scale notes: "skewed keys → salting or
+AQE skew-join").
 
 AQE's skew-join splitting (on in session.py) handles sort-merge join
-skew automatically; the two cases it does NOT cover are (a) a hash
-aggregate where one group dominates a partition's build side, and
-(b) replicated joins against a broadcastable-but-hot dimension. Both
-are classic salt territory:
+skew automatically; it does NOT cover a hash aggregate where one group
+dominates a partition's build side. That is classic salt territory:
 
 - :func:`salted_aggregate` — phase 1 aggregates on (keys, salt) so the
   hot key's rows spread over ``n_salts`` reducers; phase 2 combines the
   decomposable partials. Exact for sum/count/min/max and avg (carried
   as sum+count until the end).
-- :func:`salted_broadcast_join` — replicate the small side ``n_salts``×
-  with an explicit salt column and salt the big side uniformly, so a
-  hot key's probe rows hit ``n_salts`` distinct hash buckets.
+- :func:`key_skew_report` — how concentrated a prospective shuffle
+  key is, measured before deciding to salt.
 
 Salts are deterministic (hash of a uniform row id), so results are
 reproducible. Note Spark's partial (map-side) aggregation already
@@ -85,24 +82,6 @@ def salted_aggregate(
             )
     phase1 = with_salt(df, n_salts).groupBy(*keys, "_salt").agg(*partials)
     return phase1.groupBy(*keys).agg(*finals)
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    *,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Join a skewed big side to a small side with salt replication:
-    small × n_salts rows broadcast; big rows salted uniformly. Output
-    equals ``big.join(small, on, how)`` (small's key assumed unique)."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt")
-    small_rep = small.select("*", salts)
-    big_salted = with_salt(big, n_salts)
-    out = big_salted.join(F.broadcast(small_rep), [*on, "_salt"], how)
-    return out.drop("_salt")
 
 
 def key_skew_report(

@@ -192,20 +192,6 @@ def winnowing_fingerprints(
     )
 
 
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full analysis column set to a documents DataFrame."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("n_tokens_bpe", bpe_ish_token_count(text_col))
-        .withColumn("stopword_ratio", F.round(stopword_ratio(text_col), 6))
-        .withColumn("punct_ratio", F.round(punct_ratio(text_col), 6))
-        .withColumn("mean_word_len", F.round(mean_word_length(text_col), 6))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("lang_pred", lang_id(text_col))
-        .withColumn("fingerprint", doc_fingerprint(text_col))
-    )
-
-
 def repetition_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document repetition signals (the Gopher/MassiveText quality
     rules adapted to token n-grams): documents dominated by repeated
@@ -640,24 +626,6 @@ def vocab_divergence_from_counts(
     )
 
 
-def token_counts(
-    docs: DataFrame, text_col: str, *, group_col: str | None = None
-) -> DataFrame:
-    """(group, token, count) unigram count table — the persistable
-    distribution :func:`vocab_divergence_from_counts` compares (written
-    once as a trusted reference, or per snapshot for corpus-vs-corpus
-    audits). ``group_col=None`` tags
-    everything 'all'."""
-    from alaska_etl_spark.operators.dedup import word_tokens
-
-    grp = F.col(group_col) if group_col else F.lit("all")
-    return (
-        docs.select(grp.alias("_g"), F.explode(word_tokens(text_col)).alias("_w"))
-        .groupBy("_g", "_w")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-
-
 def pmi_collocations(
     df: DataFrame,
     id_col: str,
@@ -669,8 +637,7 @@ def pmi_collocations(
 ) -> DataFrame:
     """Top-``top_k`` adjacent-bigram collocations by pointwise mutual
     information — the corpus-statistics operator behind phrase mining
-    and tokenizer-merge candidates (the statistical cousin of qd9's
-    frequency-ranked BPE merges).
+    and tokenizer-merge candidates.
 
     PMI(a,b) = ln(p(a,b) / (p(a)·p(b))) with p(a,b) over adjacent
     bigrams and p(a) over unigrams. Exactness is the qg5/qf8 per-term

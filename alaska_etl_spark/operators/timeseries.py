@@ -54,9 +54,8 @@ def activity_bitmap(
     aggregates in whole-stage codegen — ``bit_or`` is mergeable, so
     map-side partials collapse each partition's events to one long per
     (key, month) before the shuffle: the shuffle volume is |keys ×
-    months| rows of 8 bytes regardless of event count, the same
-    downstream-join economics the HLL partials in qc5 buy for distinct
-    counts. Downstream set algebra (common active days of two users =
+    months| rows of 8 bytes regardless of event count. Downstream set
+    algebra (common active days of two users =
     ``bit_count(a & b)``) never revisits the events.
     """
     month = F.date_trunc("month", F.col(ts_col))
@@ -82,8 +81,8 @@ def sliding_distinct(
 ) -> DataFrame:
     """EXACT distinct keys per trailing ``window_days``-day window, one
     row per day in the data's range — the "7-day active users" metric,
-    computed without the quadratic self-join OR the approximation qc5's
-    HLL rollup accepts.
+    computed without the quadratic self-join OR an approximate
+    distinct-count sketch.
 
     The trick is grain reduction before fan-out: events collapse to
     distinct (key, day) rows first (one hash aggregate — at 100 TB this

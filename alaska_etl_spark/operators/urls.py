@@ -43,10 +43,9 @@ normalizes *content* — this family normalizes the ADDRESS):
   (pages, distinct canonical URLs, distinct hosts, duplicate share).
 - :func:`path_prefix_chain` — host+path prefixes at ``/``
   boundaries, the path-axis twin (robots/section-level rules).
-- :func:`blocklist_audit` / :func:`blocklist_filter` — per-rule match
-  counts + corpus share and the filtered frame (anti-join on matched
-  ids); rules carry a ``kind`` (``domain`` or ``path_prefix``) and
-  both kinds ride ONE kind-tagged equi-join.
+- :func:`blocklist_audit` — per-rule match counts + corpus share;
+  rules carry a ``kind`` (``domain`` or ``path_prefix``) and both
+  kinds ride ONE kind-tagged equi-join.
 - :func:`parse_robots` / :func:`robots_check` /
   :func:`robots_directives` — RFC 9309 robots.txt politeness:
   per-host bodies → agent-applicable rules (UA-group windows,
@@ -97,7 +96,6 @@ __all__ = [
     "path_prefix_chain",
     "domain_rollup",
     "blocklist_audit",
-    "blocklist_filter",
     "parse_robots",
     "robots_directives",
     "robots_check",
@@ -581,22 +579,6 @@ def blocklist_audit(
         "n_hosts",
         div_half_up("10000 * n_pages", "nullif(_n, 0)").alias("share_bp"),
     ).orderBy(F.col("rule") != "_total", "rule")
-
-
-def blocklist_filter(
-    df: DataFrame,
-    id_col: str,
-    url_col: str,
-    rules: DataFrame,
-) -> DataFrame:
-    """``df`` minus every row matching any blocklist rule of either
-    kind (``domain`` host-suffix or ``path_prefix`` — see
-    :func:`blocklist_audit`) — the chain match distinct-projected to
-    ids, then one anti-join (rows that fail to canonicalize are KEPT:
-    the blocklist only speaks about URLs it can parse; malformed-URL
-    routing is the bad-row frame's job)."""
-    ids = _matched(df, id_col, url_col, rules).select("_bid").distinct()
-    return df.join(ids, df[id_col] == ids["_bid"], "left_anti")
 
 
 # Directive keys that belong to a UA group (RFC 9309 rules plus the

@@ -135,117 +135,3 @@ def run_forecast_report(warehouse: Warehouse, *, bucket_hours: int = 24) -> Data
     return lead_time_error(matched, bucket_hours=bucket_hours)
 
 
-def prepare_training_data(
-    documents: DataFrame,
-    *,
-    benchmark: DataFrame | None = None,
-    min_tokens: int = 20,
-    max_dup_token_ratio: float = 0.9,
-    jaccard_threshold: float = 0.5,
-    split_weights: dict[str, float] | None = None,
-    pack_budget: int = 4096,
-    seed: int = 0,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """The full training-data preparation pipeline, composed from the
-    engine's operator families — quality filter → exact dedup → near-dup
-    group dedup → benchmark decontamination → deterministic split →
-    sequence packing. One call; everything rerun-stable (every decision
-    derives from content or stable ids). The dedup survivor set is
-    materialized at a checkpoint barrier before the fan-out stages —
-    every later stage re-reads it instead of re-expanding the MinHash +
-    connected-components subtree in its plan.
-
-    Returns one row per SURVIVING document:
-    (doc_id, text, n_tokens, split, shard, start_offset, seq_idx).
-
-    Stage shapes (each documented at its operator): repetition signals
-    and token counts are window + hash aggregates; exact dedup is a
-    keyed keep-first; near-dup groups come from the banded MinHash join
-    + connected components with the min-id survivor; decontamination is
-    a broadcast span semi-join; split/pack are hash projections plus one
-    prefix-sum window. Near-dup FAMILIES stay on one side of every
-    split boundary because the split key is the group survivor's id.
-    """
-    from alaska_etl_spark.operators.dedup import (
-        decontaminate,
-        dedup_keep_first,
-        dup_groups,
-        minhash_near_dup_pairs,
-    )
-    from alaska_etl_spark.operators.splits import hash_split, pack_sequences
-    from alaska_etl_spark.operators.text import repetition_signals, token_count
-
-    split_weights = split_weights or {"train": 0.9, "val": 0.05, "test": 0.05}
-
-    base = documents.select("doc_id", "text").withColumn(
-        "n_tokens", token_count("text")
-    )
-
-    # 1. quality: length floor + repetition ceiling
-    rep = repetition_signals(documents, "doc_id", "text").select(
-        "doc_id", "dup_token_ratio"
-    )
-    kept = (
-        base.join(rep, "doc_id", "left")
-        .filter(
-            (F.col("n_tokens") >= min_tokens)
-            & (F.coalesce(F.col("dup_token_ratio"), F.lit(0.0)) <= max_dup_token_ratio)
-        )
-        .drop("dup_token_ratio")
-    )
-
-    # 2. exact dedup (first doc_id per identical text wins)
-    kept = dedup_keep_first(kept, ["text"], ["doc_id"])
-
-    # 3. near-dup groups: keep only each family's min-id survivor
-    pairs = minhash_near_dup_pairs(
-        kept, "doc_id", "text", n=3, jaccard_threshold=jaccard_threshold
-    ).select("id_a", "id_b")
-    groups = dup_groups(pairs, checkpoint_dir=checkpoint_dir)  # (component, member_count, keep_id)
-    family_members = (
-        pairs.selectExpr("id_a AS doc_id")
-        .unionByName(pairs.selectExpr("id_b AS doc_id"))
-        .distinct()
-    )
-    survivors_of_families = groups.select(F.col("keep_id").alias("doc_id"))
-    kept = kept.join(family_members, "doc_id", "left_anti").unionByName(
-        kept.join(survivors_of_families, "doc_id", "left_semi")
-    )
-    # Stage barrier: the dedup survivor set is consumed by every later
-    # stage (decontaminate, split, three per-split packings, the final
-    # join), and each reference would re-expand the MinHash + components
-    # subtree — the plan TREE itself grows multiplicatively and the
-    # recompute cost with it. Same lineage-truncation mechanism as
-    # connected_components: localCheckpoint locally, reliable
-    # checkpoint() when a fault-tolerant dir is configured.
-    if checkpoint_dir is not None:
-        kept.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        kept = kept.checkpoint()
-    else:
-        kept = kept.localCheckpoint()
-
-    # 4. decontamination against the benchmark/eval set
-    if benchmark is not None:
-        flags = decontaminate(kept, benchmark, "doc_id", "text", n=8, hashed=True)
-        kept = kept.join(flags.filter("contaminated").select("doc_id"), "doc_id", "left_anti")
-
-    # 5. deterministic split on the surviving id (post-dedup each family
-    #    is exactly its survivor, so families cannot straddle splits)
-    kept = hash_split(kept, "doc_id", weights=split_weights, seed=seed)
-
-    # 6. sequence packing PER SPLIT (a packed sequence must never mix
-    #    train and held-out docs), seeded per split name
-    packed = None
-    for i, name in enumerate(sorted(split_weights)):
-        part = pack_sequences(
-            kept.filter(F.col("split") == name),
-            "doc_id",
-            "n_tokens",
-            budget=pack_budget,
-            seed=seed + 1 + i,
-        )
-        packed = part if packed is None else packed.unionByName(part)
-    return kept.join(packed, "doc_id").select(
-        "doc_id", "text", "n_tokens", "split", "shard", "start_offset", "seq_idx"
-    )

@@ -9,9 +9,8 @@ value hash, with columns sorted by name):
   order can't flip a hash;
 - similarity scores are ranked on *rounded* values with id tie-breaks so
   rank order is engine-independent;
-- queries without an oracle entry (approximate/LSH ops whose exact
-  result is engine-defined) get the driver's rows-only check, and their
-  exact companions (brute-force cosine, exact Jaccard) ARE oracled.
+- every key in :data:`QUERIES` has its oracle under the same key in
+  :data:`ORACLES`, and each function is registered under one key.
 
 Each Spark callable takes (spark, sf_dir) and returns a DataFrame.
 """
@@ -901,7 +900,7 @@ WHERE b.vec_id < 100 AND a.vec_id < 100
 """
 
 
-def q42_dup_groups(spark, sf_dir):
+def qt4_dup_groups(spark, sf_dir):
     """Near-dup pairs → duplicate GROUPS via distributed connected
     components (iterative min-label propagation). Edges are q26's exact
     Jaccard pairs; the oracle computes the same components with a
@@ -2018,21 +2017,9 @@ FROM salted
 Q37_SQL = _q54_sql()
 
 
-def q55_approx_distinct(spark, sf_dir):
-    """HLL++ per-group distinct counts (operators/sketches.py) — the
-    100 TB replacement for COUNT(DISTINCT) whose state would otherwise
-    BE the distinct set. Rows-only: sketch estimates are engine-defined;
-    the exact companion q56 is the oracle and the relative-error
-    contract is pinned in tests/test_sketches.py."""
-    from alaska_etl_spark.operators.sketches import approx_distinct_counts
-
-    o = _t(spark, sf_dir, "orders")
-    return approx_distinct_counts(o, ["o_orderpriority"], "o_custkey", rsd=0.02)
-
-
 def q46_distinct_counts(spark, sf_dir):
-    """Exact per-group distinct counts — q55's oracle companion (the
-    q26/q29 exact-vs-approximate pairing, sketch edition)."""
+    """Exact per-group distinct counts of customers per order
+    priority."""
     from alaska_etl_spark.operators.sketches import distinct_counts
 
     o = _t(spark, sf_dir, "orders")
@@ -2043,20 +2030,6 @@ Q46_SQL = """
 SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_distinct
 FROM orders GROUP BY o_orderpriority
 """
-
-
-def q57_approx_quantiles(spark, sf_dir):
-    """Greenwald-Khanna approximate quantiles (operators/sketches.py)
-    per event type — bounded O(accuracy) state vs the exact sort. Rows-
-    only: GK outputs are engine-defined; the exact companion is q38
-    (same groups, same cents input) and the error contract is pinned in
-    tests/test_sketches.py."""
-    from alaska_etl_spark.operators.sketches import approx_quantiles
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", _cents(F.col("value")).alias("cents")
-    )
-    return approx_quantiles(ev, ["event_type"], "cents", [0.5, 0.9])
 
 
 def q47_duplicated_spans(spark, sf_dir):
@@ -2365,24 +2338,6 @@ def _q72_sql() -> str:
 Q72_SQL = _q72_sql()
 
 
-def q73_training_pipeline(spark, sf_dir):
-    """The composed end-to-end training-data pipeline
-    (pipelines.prepare_training_data): quality filter → exact dedup →
-    MinHash family survivor → decontaminate (docs < 20 as the fake
-    benchmark) → split → per-split packing. Rows-only by design — the
-    composition is eager (checkpoint barrier + the components loop) and
-    every stage is individually oracled (q70/q25/q29+q42/q71/q68/q72);
-    the integration test pins stage-by-stage effects."""
-    from alaska_etl_spark.pipelines import prepare_training_data
-
-    d = _t(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") >= 20)
-    bench = d.filter(F.col("doc_id") < 20)
-    return prepare_training_data(corpus, benchmark=bench, min_tokens=10).select(
-        "doc_id", "n_tokens", "split", "shard", "start_offset", "seq_idx"
-    )
-
-
 def q74_dedup_survivors(spark, sf_dir):
     """Near-dup pairs → per-document survivor verdict over the whole
     (bounded) corpus: singleton docs survive as their own component;
@@ -2466,24 +2421,6 @@ SELECT doc_id, term, tfidf, rank FROM (
   FROM scored)
 WHERE rank <= 3
 """
-
-
-def q76_pq_ann(spark, sf_dir):
-    """Product-quantization ANN (asymmetric-distance search over the
-    compressed corpus): train m=8/k=16 codebooks on the 64-dim corpus,
-    encode every vector to an 8-int code word, search with per-query
-    lookup tables. Rows-only by design (quantized distances are
-    engine-defined); the exact companion is q27 on the same corpus, and
-    recall/shape are pinned in tests/test_similarity.py."""
-    from alaska_etl_spark.operators.similarity import pq_encode, pq_topk, pq_train
-
-    emb = _t(spark, sf_dir, "embeddings")
-    books = pq_train(emb, m=8, k=16, dim=64, iters=2)
-    codes = pq_encode(emb, books)
-    queries = emb.filter(F.col("vec_id") < 10)
-    return pq_topk(codes, queries, books, k=5).select(
-        "query_id", "neighbor_id", "adist", "rank"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3093,21 +3030,6 @@ def _q90_sql() -> str:
     return f"SELECT doc_id, lang, source FROM ({inner})"
 
 
-def q91_ivfpq_ann(spark, sf_dir):
-    """IVF-PQ (IVFADC) approximate nearest neighbors: inverted-list
-    pruning (nprobe=4 of 16 cells) over a residual-product-quantized
-    corpus (m=8, 16 codes). Rows-only by design (quantized distances
-    are engine-defined); exact companion q27, recall/shape pinned in
-    tests/test_similarity.py."""
-    from alaska_etl_spark.operators.similarity import ivfpq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivfpq_topk(
-        emb, queries, ncells=16, nprobe=4, m=8, kcode=16, dim=64, iters=1, k=5
-    ).select("query_id", "neighbor_id", "adist", "rank")
-
-
 def q92_ewma(spark, sf_dir):
     """Per-user exponential moving average of event values in event-time
     order (operators/timeseries.py): the recursive scan relational
@@ -3191,7 +3113,8 @@ def q94_domain_weights(spark, sf_dir):
 
 def _lm_score_cte(prefix: str, train_where: str) -> str:
     """Q89's train+score CTE chain, parameterized by training filter —
-    the SQL twin of train_bigram_lm/score_bigram_lm composition."""
+    the SQL twin of train_bigram_lm plus the count-table scoring of
+    domain_relevance_weights."""
     return f"""
 {prefix}_bigr AS (
   SELECT doc_id, t AS w1, lead(t) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
@@ -4007,30 +3930,6 @@ QUALIFY rank <= 3
 QB1_SQL = _qb1_sql()
 
 
-def qb2_incremental_dedup(spark, sf_dir):
-    """Incremental near-dup via the persisted LSH index
-    (operators/dedup.py:write_lsh_index / probe_lsh_index): the even-id
-    half of the corpus is indexed once (bands + shingle sets as
-    parquet), then the odd-id half probes it — the daily-crawl dedup
-    loop where the corpus text is never re-read. Rows-only by design
-    (the banding is Spark-hash-specific, exactly like q29); the exact
-    corpus-wide companion is qb0, and
-    tests/test_dedup.py:test_lsh_index_probe_equals_full_corpus_cross_pairs
-    pins probe ≡ one-shot-minhash-restricted-to-cross-pairs."""
-    import tempfile
-
-    from alaska_etl_spark.operators.dedup import probe_lsh_index, write_lsh_index
-
-    d = _t(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 2 == 0)
-    batch = d.filter(F.col("doc_id") % 2 == 1)
-    root = tempfile.mkdtemp(prefix="qb2_lsh_")
-    write_lsh_index(corpus, "doc_id", "text", root)
-    return probe_lsh_index(batch, "doc_id", "text", root).select(
-        "new_id", "corpus_id", F.round("jaccard", 4).alias("jaccard")
-    )
-
-
 def qb3_corr_matrix(spark, sf_dir):
     """Pairwise Pearson correlation of the lineitem numerics in ONE
     pass over the fact (operators/stats.py:corr_matrix): every moment
@@ -4522,31 +4421,6 @@ UNION ALL SELECT '4_purchase', (SELECT count(*) FROM s4),
 """
 
 
-def qc5_sketch_rollup(spark, sf_dir):
-    """Persisted mergeable-sketch rollup (operators/sketch_store.py):
-    build one (HLL users, KLL values) sketch row per day of events,
-    then answer a distinct-count + quantile range query by MERGING the
-    stored sketches — q87's continuous-aggregate pattern for the two
-    aggregates with no exact bounded partial. Rows-only by design
-    (Datasketches estimates are engine-defined, like q55/q57); the
-    exact companions are q46/q38 and the tolerance contracts are
-    pinned in tests/test_sketch_store.py."""
-    import tempfile
-
-    from alaska_etl_spark.operators.sketch_store import (
-        merged_distinct_count,
-        merged_quantiles,
-        write_sketch_rollup,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="qc5_sketch_")
-    write_sketch_rollup(ev, root, ts_col="ts", id_col="user_id", val_col="value")
-    d = merged_distinct_count(spark, root)
-    q = merged_quantiles(spark, root, [0.5, 0.9])
-    return d.join(q)
-
-
 def qc6_integrity_report(spark, sf_dir):
     """Referential-integrity audit (plans/warehouse.py:fk_check): orphan
     counts for every foreign key of the star, twice — against the real
@@ -4658,7 +4532,7 @@ def qc8_activity_bitmap(spark, sf_dir):
     """Per-(user, month) activity as a day-of-month bitmask
     (operators/timeseries.activity_bitmap): ``bit_or`` of ``1 <<
     (day-1)`` — a mergeable 8-byte presence summary per key-month (the
-    bitmap-index analogue of qc5's HLL partials) with popcount as the
+    bitmap-index analogue of mergeable sketch partials) with popcount as the
     active-day count. Both aggregates stay in whole-stage codegen."""
     from alaska_etl_spark.operators.timeseries import activity_bitmap
 
@@ -4823,8 +4697,7 @@ def qd2_sliding_distinct(spark, sf_dir):
     """Exact trailing-7-day distinct users per day
     (operators/timeseries.sliding_distinct): events collapse to the
     (user, day) presence table FIRST, each presence row then serves ≤7
-    window ends — exact sliding distinct at |presence|×7 cost, the
-    exact companion to qc5's merged-HLL window."""
+    window ends — exact sliding distinct at |presence|×7 cost."""
     from alaska_etl_spark.operators.timeseries import sliding_distinct
 
     ev = _t(spark, sf_dir, "events")
@@ -5134,20 +5007,6 @@ WITH pairs AS (
 )
 SELECT vec_id, label, agree_frac, agree_frac < 0.5 AS flagged FROM agg
 """
-
-
-def qd9_bpe_merges(spark, sf_dir):
-    """BPE vocabulary training on the documents corpus: the first 20
-    learned merges (step, left, right, merged, pair_count). Fully
-    deterministic (integer pair counts, count-desc/lexicographic total
-    order) but rows-only by the same boundary as q29: an iterative
-    re-segmentation has no fixed-depth relational replay. The merge
-    list is pinned against a pure-Python Sennrich-BPE replica — on this
-    same documents fixture — in tests/test_bpe.py."""
-    from alaska_etl_spark.operators.bpe import train_bpe
-
-    d = _t(spark, sf_dir, "documents")
-    return train_bpe(d, "text", num_merges=20)
 
 
 def qe0_share_and_growth(spark, sf_dir):
@@ -6401,7 +6260,7 @@ FROM (SELECT n_keys, total_rows, max_rows_per_key, ic, topn AS _topn FROM agg)
 
 def qh2_pmi_collocations(spark, sf_dir):
     """Top-50 adjacent-bigram collocations by PMI (min pair count 5) —
-    phrase-mining corpus statistics next to qd9's BPE merges: bigrams
+    phrase-mining corpus statistics: bigrams
     from the posexplode+lead codegen path, one ln evaluation per
     distinct surviving pair under the qg5/qf8 1e-8 fixed-point
     discipline, sort-limit emit with full (pmi, w1, w2) tie-breaks."""
@@ -11400,7 +11259,7 @@ FROM flagged GROUP BY 1 ORDER BY 1
 """
 
 
-def qs2_repeat_runs(spark, sf_dir):
+def q42_repeat_runs(spark, sf_dir):
     """Exact intra-document repeated verbatim runs (operators/
     simjoin.py longest_repeat_runs, X178): the within-example half of
     the Lee et al. '22 exact-substring story next to qr6's
@@ -11492,7 +11351,7 @@ FROM best GROUP BY 1 ORDER BY 1
 """
 
 
-def qs8_dsir_selection(spark, sf_dir):
+def q48_dsir_selection(spark, sf_dir):
     """DSIR hashed-n-gram importance weights (operators/splits.py
     dsir_weights, X180; Xie et al. '23): score every raw document by
     how target-like its hashed-bigram distribution is — the published
@@ -11598,7 +11457,7 @@ def _robots_rows() -> "list[tuple[str, str]]":
     ]
 
 
-def qs9_robots_gate(spark, sf_dir):
+def q14_robots_gate(spark, sf_dir):
     """robots.txt politeness gate (operators/urls.py parse_robots +
     robots_check, X181; RFC 9309): parse per-host robots.txt bodies
     into the rule rows that apply to the crawler's product token
@@ -11738,7 +11597,7 @@ ORDER BY b.doc_id
 QS9_SQL = _qs9_sql()
 
 
-def qt0_sitemap_frontier(spark, sf_dir):
+def q35_sitemap_frontier(spark, sf_dir):
     """Sitemap-fed frontier admission (operators/urls.py sitemap_urls +
     robots_check, X182): the discovery path end-to-end — each host's
     sitemap body (built from its own corpus URLs, entries sorted and
@@ -12189,7 +12048,7 @@ QUERIES = {
     "qn2_quality_score": q23_quality_score,
     "qs6_lang_id": q24_lang_id,
     "q24_calibration": qr8_calibration,
-    "qt3_exact_dedup": q25_exact_dedup,
+    "q25_exact_dedup": q25_exact_dedup,
     "qq3_ngram_jaccard": q26_ngram_jaccard,
     "q27_cosine_topk": q27_cosine_topk,
     "qr0_embedding_near_dup": q28_embedding_near_dup,
@@ -12199,7 +12058,7 @@ QUERIES = {
     "q32_media_decode": q32_media_decode,
     "qo8_frame_sample": q33_frame_sample,
     "q34_sessionize": q34_sessionize,
-    "qt7_salted_agg": q35_salted_agg,
+    "q35_salted_agg": q35_salted_agg,
     # round-6 slot rotation (README "Driver query slots"): the TPC-H
     # Q13-ish supplier counts, the set-ops suite, and CUBE move to
     # qf4-qf6 (their families stay driver-visible via q01/q19/q48 aggs,
@@ -12216,7 +12075,7 @@ QUERIES = {
     "qr1_novelty_rate": qf2_novelty_rate,
     "qf5_set_ops": q40_set_ops,
     "qf6_cube": q41_cube,
-    "qt4_dup_groups": q42_dup_groups,
+    "qt4_dup_groups": qt4_dup_groups,
     "qs7_winnow_fingerprint": q43_winnow_fingerprint,
     "q43_span_excision": qr9_span_excision,
     # round-5 slot rotation (README "Driver query slots"): the TPC-H
@@ -12230,7 +12089,7 @@ QUERIES = {
     "qe6_order_count_distribution": q45_order_count_distribution,
     "q62_promo_revenue": q62_promo_revenue,
     "q63_disjunctive_predicates": q63_disjunctive_predicates,
-    "qt5_volume_shipping": q48_volume_shipping,
+    "q48_volume_shipping": q48_volume_shipping,
     "q49_max_concurrent": qc7_max_concurrent,
     "qe7_idle_customers": q49_idle_customers,
     "qf3_dup_source_matrix": qf3_dup_source_matrix,
@@ -12330,37 +12189,20 @@ QUERIES = {
     "qr3_url_canonical": qr3_url_canonical,
     "qr5_blocklist_audit": qr5_blocklist_audit,
     "qr7_domain_quota": qr7_domain_quota,
-    "q25_line_dedup": qs1_line_dedup,
-    "q42_repeat_runs": qs2_repeat_runs,
-    "q48_dsir_selection": qs8_dsir_selection,
-    "q14_robots_gate": qs9_robots_gate,
-    "q35_sitemap_frontier": qt0_sitemap_frontier,
+    "qs1_line_dedup": qs1_line_dedup,
+    "q42_repeat_runs": q42_repeat_runs,
+    "q48_dsir_selection": q48_dsir_selection,
+    "q14_robots_gate": q14_robots_gate,
+    "q35_sitemap_frontier": q35_sitemap_frontier,
     "qt1_crawl_delay_budget": qt1_crawl_delay_budget,
     "qt2_line_savings": qt2_line_savings,
     "qt8_psl_domains": qt8_psl_domains,
-    # r12 optimization-phase compatibility aliases: the r12 slot
-    # rotation renamed ten registry keys; a declared query name must
-    # never disappear between rounds, so every pre-rotation name stays
-    # registered as an exact alias (same function object, same oracle
-    # SQL under the same name in ORACLES below).
-    "qs1_line_dedup": qs1_line_dedup,
-    "qs2_repeat_runs": qs2_repeat_runs,
-    "qs8_dsir_selection": qs8_dsir_selection,
-    "qs9_robots_gate": qs9_robots_gate,
-    "qt0_sitemap_frontier": qt0_sitemap_frontier,
-    "q25_exact_dedup": q25_exact_dedup,
-    "q42_dup_groups": q42_dup_groups,
-    "q35_salted_agg": q35_salted_agg,
-    "q48_volume_shipping": q48_volume_shipping,
-    "q14_range_join": q14_range_join,
     "qg1_top_supplier": q50_top_supplier,
     "q10_sole_blame_supplier": q10_sole_blame_supplier,
-    "qt6_range_join": q14_range_join,
+    "q14_range_join": q14_range_join,
     "q53_lsh_ann": q53_lsh_ann,
     "q37_pii_scrub": q37_pii_scrub,
-    "q55_approx_distinct": q55_approx_distinct,
     "q46_distinct_counts": q46_distinct_counts,
-    "q57_approx_quantiles": q57_approx_quantiles,
     "qq4_duplicated_spans": q47_duplicated_spans,
     "q64_semantic_dedup": q64_semantic_dedup,
     "q65_zorder_key": q65_zorder_key,
@@ -12371,10 +12213,8 @@ QUERIES = {
     "q70_repetition_signals": q70_repetition_signals,
     "q71_decontaminate": q71_decontaminate,
     "q72_pack_sequences": q72_pack_sequences,
-    "q73_training_pipeline": q73_training_pipeline,
     "q74_dedup_survivors": q74_dedup_survivors,
     "q75_tfidf": q75_tfidf,
-    "q76_pq_ann": q76_pq_ann,
     "q77_column_profile": q77_column_profile,
     "q78_interpolate": q78_interpolate,
     "q79_fuzzy_pairs": q79_fuzzy_pairs,
@@ -12389,7 +12229,6 @@ QUERIES = {
     "q88_cosine_simjoin": q88_cosine_simjoin,
     "q89_lm_perplexity": q89_lm_perplexity,
     "q90_stratified_sample": q90_stratified_sample,
-    "q91_ivfpq_ann": q91_ivfpq_ann,
     "q92_ewma": q92_ewma,
     "q93_zscore_anomalies": q93_zscore_anomalies,
     "q94_domain_weights": q94_domain_weights,
@@ -12410,7 +12249,6 @@ QUERIES = {
     "qa9_bloom_pruned_join": qa9_bloom_pruned_join,
     "qb0_jaccard_simjoin": qb0_jaccard_simjoin,
     "qb1_geo_knn_join": qb1_geo_knn_join,
-    "qb2_incremental_dedup": qb2_incremental_dedup,
     "qb3_corr_matrix": qb3_corr_matrix,
     "qb4_grouped_regression": qb4_grouped_regression,
     "qb5_decimal_quantiles": qb5_decimal_quantiles,
@@ -12423,7 +12261,6 @@ QUERIES = {
     "qc2_unpivot": qc2_unpivot,
     "qc3_cohort_retention": qc3_cohort_retention,
     "qc4_funnel": qc4_funnel,
-    "qc5_sketch_rollup": qc5_sketch_rollup,
     "qc6_integrity_report": qc6_integrity_report,
     "qc8_activity_bitmap": qc8_activity_bitmap,
     "qc9_mix_entropy": qc9_mix_entropy,
@@ -12435,7 +12272,6 @@ QUERIES = {
     "qd6_hard_negatives": qd6_hard_negatives,
     "qd7_perplexity_gate": qd7_perplexity_gate,
     "qd8_label_consistency": qd8_label_consistency,
-    "qd9_bpe_merges": qd9_bpe_merges,
     "qe0_share_and_growth": qe0_share_and_growth,
     "qe1_ab_test": qe1_ab_test,
     "qe3_psi_drift": qe3_psi_drift,
@@ -12473,15 +12309,17 @@ ORACLES = {
     "qn2_quality_score": Q23_SQL,
     "qs6_lang_id": Q24_SQL,
     "q24_calibration": QR8_SQL,
-    "qt3_exact_dedup": Q25_SQL,
+    "q25_exact_dedup": Q25_SQL,
     "qq3_ngram_jaccard": Q26_SQL,
     "q27_cosine_topk": Q27_SQL,
     "qr0_embedding_near_dup": Q28_SQL,
+    "q29_minhash_lsh": Q29_SQL,
+    "qo7_simhash": Q30_SQL,
     "q31_ivf_ann": Q31_SQL,
     "q32_media_decode": Q32_SQL,
     "qo8_frame_sample": Q33_SQL,
     "q34_sessionize": Q34_SQL,
-    "qt7_salted_agg": Q35_SQL,
+    "q35_salted_agg": Q35_SQL,
     "q36_containment_join": QF0_SQL,
     "qf4_supplier_counts": Q36_SQL,
     "q61_small_quantity_revenue": Q61_SQL,
@@ -12500,13 +12338,13 @@ ORACLES = {
     "qe6_order_count_distribution": Q45_SQL,
     "q62_promo_revenue": Q62_SQL,
     "q63_disjunctive_predicates": Q63_SQL,
-    "qt5_volume_shipping": Q48_SQL,
+    "q48_volume_shipping": Q48_SQL,
     "q49_max_concurrent": QC7_SQL,
     "qe7_idle_customers": Q49_SQL,
     "qg1_top_supplier": Q50_SQL,
     "q53_lsh_ann": Q53_SQL,
     "q10_sole_blame_supplier": Q10_SQL,
-    "qt6_range_join": Q14_SQL,
+    "q14_range_join": Q14_SQL,
     "q37_pii_scrub": Q37_SQL,
     "q46_distinct_counts": Q46_SQL,
     "qq4_duplicated_spans": Q47_SQL,
@@ -12679,7 +12517,7 @@ ORACLES = {
     "qr3_url_canonical": QR3_SQL,
     "qr5_blocklist_audit": QR5_SQL,
     "qr7_domain_quota": QR7_SQL,
-    "q25_line_dedup": QS1_SQL,
+    "qs1_line_dedup": QS1_SQL,
     "q42_repeat_runs": QS2_SQL,
     "q48_dsir_selection": QS8_SQL,
     "q14_robots_gate": QS9_SQL,
@@ -12687,24 +12525,4 @@ ORACLES = {
     "qt1_crawl_delay_budget": QT1_SQL,
     "qt2_line_savings": QT2_SQL,
     "qt8_psl_domains": QT8_SQL,
-    # r12 compatibility aliases (see QUERIES): pre-rotation names keep
-    # their oracles registered verbatim.
-    "qs1_line_dedup": QS1_SQL,
-    "qs2_repeat_runs": QS2_SQL,
-    "qs8_dsir_selection": QS8_SQL,
-    "qs9_robots_gate": QS9_SQL,
-    "qt0_sitemap_frontier": QT0_SQL,
-    "q25_exact_dedup": Q25_SQL,
-    "q42_dup_groups": Q42_SQL,
-    "q35_salted_agg": Q35_SQL,
-    "q48_volume_shipping": Q48_SQL,
-    "q14_range_join": Q14_SQL,
-    "q29_minhash_lsh": Q29_SQL,
-    "qo7_simhash": Q30_SQL,
-    # q55, q57, q76, q91, qb2, qc5: approximate ops — rows-only by
-    # design; each has an oracled exact companion (q46, q38, q27, q27,
-    # qb0, q46+q38). q29/q30 became EXACTLY oracled in round 5 (md5
-    # hash lane replayed end-to-end in DuckDB).
-    # q73: eager composed pipeline — rows-only; every stage individually
-    # oracled (q70/q25/q29+q42/q71/q68/q72).
 }

@@ -120,6 +120,15 @@ _VALUES = [
 _UTC_OFFSET = dt.timedelta(hours=AKST_OFFSET_HOURS)
 
 
+def _first_month(hours: dict[int, dict[str, str]]) -> int | None:
+    """Month of the first non-blank Date of one snapshot's positions."""
+    for seq in sorted(hours):
+        date = (hours[seq].get("Date") or "").strip(" ")
+        if date:
+            return _to_long(date.split("/")[0], 32)
+    return None
+
+
 def pivot_forecast(tables: Iterable[dict[str, Any]], *, year: int) -> list[tuple]:
     """Scraped landscape tables → one typed tuple per (location,
     forecast hour), in :data:`FORECAST_SCHEMA` order.
@@ -141,9 +150,12 @@ def pivot_forecast(tables: Iterable[dict[str, Any]], *, year: int) -> list[tuple
     in that order:
 
     - Date is forward-filled over its blank cells (ASCII spaces trimmed);
-    - ``year`` is the year of the first date; a later month smaller
-      than the first one is in ``year + 1`` (the rollover the
-      reference's wall-clock year could not do, SURVEY §7.4);
+    - ``year`` is the year of the first date of the table's first page;
+      a later month smaller than that first month is in ``year + 1``
+      (the rollover the reference's wall-clock year could not do,
+      SURVEY §7.4). A page with its own stamp keeps its table's first
+      month, so a refreshed page issued in December whose hours start
+      on 1/1 lands in ``year + 1``;
     - utc = local + 9 h, fixed offset (no DST);
     - a blank Gust is 0 and any other blank number NULL (P8, reference
       nws_dag.py:94); flags and Wind Dir stay raw strings;
@@ -155,11 +167,18 @@ def pivot_forecast(tables: Iterable[dict[str, Any]], *, year: int) -> list[tuple
     """
     # (location, last_update) -> position -> attribute -> cell
     snaps: dict[tuple, dict[int, dict[str, str]]] = {}
+    # (location, last_update) -> the snapshot holding its first table's
+    # first page, whose first month anchors the year rollover
+    anchors: dict[tuple, tuple] = {}
     for tbl in tables:
         loc, tbl_update = tbl["location"], tbl["last_update"]
         seq_base = 0
+        first = None
         for page in tbl["pages"]:
-            hours = snaps.setdefault((loc, page.get("last_update", tbl_update)), {})
+            snap = (loc, page.get("last_update", tbl_update))
+            first = first or snap
+            anchors.setdefault(snap, first)
+            hours = snaps.setdefault(snap, {})
             width = 0
             for attr, *cells in page["rows"]:
                 if attr not in _ATTRS:
@@ -174,7 +193,8 @@ def pivot_forecast(tables: Iterable[dict[str, Any]], *, year: int) -> list[tuple
         if not hours:
             continue
         issued = None if stamp is None else _timestamp(stamp)
-        date = first_month = None
+        date = None
+        first_month = _first_month(snaps[anchors[loc, stamp]])
         for seq in sorted(hours):
             cells = hours[seq]
             date = (cells.get("Date") or "").strip(" ") or date
@@ -213,7 +233,7 @@ def forecast_long_df(spark, rows: list[tuple]) -> DataFrame:
 
     The name is the earlier long-row builder's: perfbench's layer hooks
     patch ``pipelines.forecast_long_df`` and ``pipelines.pivot_forecast``
-    by attribute, until spans move into the program (ROADMAP item 4).
+    by attribute, until spans move into the program (ROADMAP item 6).
     """
     columns = list(zip(*rows)) or [[] for _ in FORECAST_SCHEMA]
     table = pa.Table.from_arrays(columns, schema=_ARROW_SCHEMA)

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pathlib
 import re
 
-from alaska_etl_spark.cache import release_tracked, released_after, tracked_persist
+from alaska_etl_spark.cache import release_tracked, tracked_persist
 
 
 def test_tracked_persist_and_release(spark):
@@ -18,19 +18,6 @@ def test_tracked_persist_and_release(spark):
     assert not df.is_cached
     # idempotent: nothing left to release
     assert release_tracked() == 0
-
-
-def test_released_after_scopes_inner_caches_only(spark):
-    outer = tracked_persist(spark.range(10).selectExpr("id AS a"))
-    outer.count()
-    with released_after():
-        inner = tracked_persist(spark.range(20).selectExpr("id AS b"))
-        inner.count()
-        assert inner.is_cached and outer.is_cached
-    assert not inner.is_cached
-    assert outer.is_cached  # pre-block caches untouched
-    release_tracked()
-    assert not outer.is_cached
 
 
 def test_no_bare_persist_outside_cache_module():
@@ -50,22 +37,9 @@ def test_no_bare_persist_outside_cache_module():
     assert not offenders, "bare .persist() outside cache.py:\n" + "\n".join(offenders)
 
 
-def test_released_after_is_exception_safe(spark):
-    df = None
-    try:
-        with released_after():
-            df = tracked_persist(spark.range(5))
-            df.count()
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert df is not None and not df.is_cached
-
-
 def test_tracked_registry_is_thread_safe(spark):
     """Concurrent tracked_persist/release_tracked from driver threads
-    never corrupt the registry (ADVICE r5: lock added; exact scoping is
-    still a single-threaded contract, documented in the module)."""
+    never corrupt the registry (ADVICE r5: lock added)."""
     import threading
 
     errors = []

@@ -10,7 +10,7 @@ from alaska_etl_spark.operators.dedup import (
     dedup_keep_first,
     duplicate_report,
     embedding_near_dup_pairs,
-    hashed_shingles,
+    gram_rows,
     minhash_near_dup_pairs,
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
@@ -144,11 +144,11 @@ def test_ngram_jaccard_exact(spark):
 
 
 def test_hashed_shingles_short_doc(spark):
-    """Docs shorter than n tokens still emit exactly one shingle."""
+    """Docs shorter than n tokens still emit exactly one hashed shingle."""
     docs = spark.createDataFrame([(0, "hi there"), (1, "hi there")], "doc_id bigint, text string")
-    out = hashed_shingles(docs, "doc_id", "text", n=3).collect()
-    assert all(len(r._sh) == 1 for r in out)
-    assert out[0]._sh == out[1]._sh  # identical short docs hash identically
+    out = sorted(gram_rows(docs, "doc_id", "text", n=3).collect())
+    assert [r._id for r in out] == [0, 1]
+    assert out[0]._g == out[1]._g  # identical short docs hash identically
 
 
 def test_connected_components_groups(spark):
@@ -381,69 +381,6 @@ def _dup_corpus(spark):
     ]
     mk = lambda rows: spark.createDataFrame(rows, "doc_id bigint, text string")  # noqa: E731
     return mk(day1), mk(day2)
-
-
-def test_lsh_index_probe_equals_full_corpus_cross_pairs(spark, tmp_path):
-    from alaska_etl_spark.operators.dedup import (
-        minhash_near_dup_pairs,
-        probe_lsh_index,
-        write_lsh_index,
-    )
-
-    day1, day2 = _dup_corpus(spark)
-    path = str(tmp_path / "lsh")
-    write_lsh_index(day1, "doc_id", "text", path)
-    probed = {
-        (r.new_id, r.corpus_id, round(r.jaccard, 6))
-        for r in probe_lsh_index(day2, "doc_id", "text", path).collect()
-    }
-    # ground truth: run the one-shot corpus-wide op on the union and keep
-    # only cross pairs (one id per day)
-    full = minhash_near_dup_pairs(day1.union(day2), "doc_id", "text")
-    cross = {
-        (r.id_b, r.id_a, round(r.jaccard, 6))
-        for r in full.collect()
-        if (r.id_a < 100) != (r.id_b < 100)
-    }
-    assert probed == cross and len(probed) >= 10  # every re-crawl found
-
-
-def test_lsh_index_append_then_probe_sees_both_generations(spark, tmp_path):
-    from alaska_etl_spark.operators.dedup import probe_lsh_index, write_lsh_index
-
-    day1, day2 = _dup_corpus(spark)
-    path = str(tmp_path / "lsh")
-    write_lsh_index(day1, "doc_id", "text", path)
-    write_lsh_index(day2, "doc_id", "text", path, mode="append")
-    # day-3 re-crawls one day-1 page and one day-2-only page
-    day3 = spark.createDataFrame(
-        [
-            (200, day1.collect()[3].text),
-            (201, [r for r in day2.collect() if r.doc_id == 115][0].text),
-        ],
-        "doc_id bigint, text string",
-    )
-    got = {
-        (r.new_id, r.corpus_id)
-        for r in probe_lsh_index(day3, "doc_id", "text", path).collect()
-    }
-    assert (200, 3) in got  # found in generation 1
-    assert (201, 115) in got  # found in generation 2
-    # the day-1 page was re-crawled into day 2 as id 103 — also caught
-    assert (200, 103) in got
-
-
-def test_lsh_probe_never_rescans_corpus_text(spark, tmp_path):
-    from alaska_etl_spark.operators.dedup import probe_lsh_index, write_lsh_index
-
-    day1, day2 = _dup_corpus(spark)
-    path = str(tmp_path / "lsh")
-    write_lsh_index(day1, "doc_id", "text", path)
-    out = probe_lsh_index(day2, "doc_id", "text", path)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the only file scans are the index's parquet (bands + docs)
-    scans = [l for l in plan.split("== Initial Plan ==")[0].splitlines() if "FileScan" in l]
-    assert scans and all("lsh" in l for l in scans)
 
 
 def test_novelty_rate(spark):

@@ -1,5 +1,5 @@
-"""Embedding preprocessing: normalization, int8 quantization round-trip
-error bound, matryoshka truncation."""
+"""Embedding preprocessing: int8 quantization round-trip error bound,
+matryoshka truncation."""
 
 from __future__ import annotations
 
@@ -7,11 +7,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from alaska_etl_spark.operators.embeddings import (
-    l2_normalize,
-    quantize_int8,
-    truncate_dims,
-)
+from alaska_etl_spark.operators.embeddings import quantize_int8, truncate_dims
 
 
 def _df(spark):
@@ -22,14 +18,6 @@ def _df(spark):
         (4, None),
     ]
     return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-
-
-def test_l2_normalize(spark):
-    got = {r.vec_id: r.n for r in _df(spark).select("vec_id", l2_normalize(F.col("embedding")).alias("n")).collect()}
-    assert got[1] == [0.6, 0.8]
-    assert got[2] == [0.0, 0.0]  # zero vector passes through
-    assert got[4] is None
-    assert math.isclose(sum(x * x for x in got[3]), 1.0, rel_tol=1e-12)
 
 
 def test_quantize_int8_roundtrip_bound(spark):

@@ -124,7 +124,6 @@ def test_apply_changelog_empty_base(spark):
 
 
 def test_round4d_ops_empty_inputs(spark):
-    from alaska_etl_spark.operators.bpe import train_bpe
     from alaska_etl_spark.operators.embeddings import label_consistency
     from alaska_etl_spark.operators.lm import perplexity_gate
     from alaska_etl_spark.operators.similarity import hard_negative_topk
@@ -155,20 +154,6 @@ def test_round4d_ops_empty_inputs(spark):
     assert hard_negative_topk(emb, some_emb).count() == 0
     assert hard_negative_topk(some_emb, emb).count() == 0
 
-    assert train_bpe(docs, "text", num_merges=5).count() == 0
-    # no pair reaches count >= 2 -> no merges
-    uniq = spark.createDataFrame([("ab cd",)], "text string")
-    assert train_bpe(uniq, "text", num_merges=5).count() == 0
-
-
-def test_bpe_segment_no_merges_yields_chars(spark):
-    from alaska_etl_spark.operators.bpe import bpe_segment
-
-    df = spark.createDataFrame([(1, "ab c")], "doc_id bigint, text string")
-    out = bpe_segment(df, "doc_id", "text", []).collect()
-    assert len(out) == 1
-    assert list(out[0].tokens) == ["a", "b", "c"] and out[0].n_tokens == 3
-
 
 def test_containment_join_empty(spark):
     from alaska_etl_spark.operators.simjoin import containment_join
@@ -198,14 +183,9 @@ def test_margin_bitext_empty_sides(spark):
 
 
 def test_round6_ops_empty_inputs(spark):
-    from alaska_etl_spark.operators.dedup import (
-        dedup_savings,
-        doc_grams,
-        novelty_vs_grams,
-    )
-    from alaska_etl_spark.operators.text import token_counts, vocab_divergence
+    from alaska_etl_spark.operators.dedup import dedup_savings
+    from alaska_etl_spark.operators.text import vocab_divergence
 
-    docs = _empty_docs(spark)
     src_docs = spark.createDataFrame([], "doc_id bigint, text string, source string")
     pairs = spark.createDataFrame([], "id_a bigint, id_b bigint")
 
@@ -220,32 +200,13 @@ def test_round6_ops_empty_inputs(spark):
 
     # divergence over an empty corpus: no groups -> no pairs
     assert vocab_divergence(src_docs, "source", "text").count() == 0
-    assert token_counts(docs, "text").count() == 0
-
-    # gram helpers
-    assert doc_grams(docs, "doc_id", "text").count() == 0
-    empty_grams = spark.createDataFrame([], "gram bigint")
-    assert novelty_vs_grams(docs, empty_grams, "doc_id", "text").count() == 0
-    # docs vs an EMPTY reference: everything fully novel
-    got = novelty_vs_grams(
-        spark.createDataFrame([(1, "x y z w")], "doc_id bigint, text string"),
-        empty_grams,
-        "doc_id",
-        "text",
-    ).collect()
-    assert got[0].novelty == 1.0 and got[0].n_seen == 0
 
 
 def test_kmeans_empty_corpus(spark):
-    from alaska_etl_spark.operators.similarity import (
-        kmeans_replicable,
-        kmeans_summary,
-    )
+    from alaska_etl_spark.operators.similarity import _lloyd_cents, kmeans_summary
 
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
-    cents = kmeans_replicable(empty, k=4, iters=2)
-    assert cents.count() == 0
-    assert cents.columns == ["centroid_id", "centroid"]
+    assert _lloyd_cents(empty, k=4, iters=2) == {}
     rep = kmeans_summary(empty, k=4, iters=2)
     assert rep.count() == 0
     assert rep.columns == ["centroid_id", "n_members", "avg_cosine"]

@@ -8,7 +8,7 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
-from alaska_etl_spark.operators.layout import zorder_key, zorder_sql, zorder_write
+from alaska_etl_spark.operators.layout import zorder_key, zorder_sql
 
 
 def _morton_ref(vals: list[int], bits: int) -> int:
@@ -60,6 +60,18 @@ def test_zorder_rejects_overflow_and_single_column():
         zorder_sql(["a", "b", "c", "d"], bits=16)
 
 
+def _write_zordered(df, path: str, by: list, *, bits: int, num_files: int) -> None:
+    """A clustered write on the Morton key: range-partition on it and
+    sort within files, so each file holds one contiguous curve segment."""
+    (
+        df.withColumn("_zkey", zorder_key(by, bits=bits))
+        .repartitionByRange(num_files, "_zkey")
+        .sortWithinPartitions("_zkey")
+        .drop("_zkey")
+        .write.parquet(path)
+    )
+
+
 def _per_file_spread(spark, path: str, col: str) -> float:
     """Mean (max-min) of ``col`` per parquet file, as a fraction of the
     global range — the quantity parquet min/max pruning depends on."""
@@ -75,13 +87,14 @@ def _per_file_spread(spark, path: str, col: str) -> float:
 
 
 def test_zorder_write_clusters_both_dimensions(spark, tmp_path):
-    """Z-ordered files are tight in BOTH dimensions; a linear sort by x
-    is tight in x but each of its files spans ~the full y range."""
+    """Files clustered on the Morton key are tight in BOTH dimensions;
+    a linear sort by x is tight in x but each of its files spans ~the
+    full y range."""
     rows = [(i % 256, (i * 7919) % 256) for i in range(20000)]
     df = spark.createDataFrame(rows, "x bigint, y bigint")
 
     zpath = str(tmp_path / "z")
-    zorder_write(df, zpath, ["x", "y"], bits=8, num_files=16)
+    _write_zordered(df, zpath, ["x", "y"], bits=8, num_files=16)
     lpath = str(tmp_path / "linear")
     df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(lpath)
 
@@ -99,7 +112,7 @@ def test_zorder_pruning_touches_fewer_files(spark, tmp_path):
     rows = [(i % 256, (i * 7919) % 256) for i in range(20000)]
     df = spark.createDataFrame(rows, "x bigint, y bigint")
     zpath = str(tmp_path / "z")
-    zorder_write(df, zpath, ["x", "y"], bits=8, num_files=16)
+    _write_zordered(df, zpath, ["x", "y"], bits=8, num_files=16)
 
     back = spark.read.parquet(zpath)
     for col in ("x", "y"):

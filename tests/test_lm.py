@@ -8,11 +8,7 @@ import math
 
 import pytest
 
-from alaska_etl_spark.operators.lm import (
-    bigram_lm_scores,
-    score_bigram_lm,
-    train_bigram_lm,
-)
+from alaska_etl_spark.operators.lm import bigram_lm_scores, domain_relevance_weights
 
 
 def _docs(spark, rows):
@@ -55,13 +51,13 @@ def test_repetitive_doc_scores_lower_nll_than_novel(spark):
 
 
 def test_cross_corpus_oov_smoothing(spark):
+    # scored under a target model trained on another corpus
     train = _docs(spark, [("t", "a b a b")])
-    lm = train_bigram_lm(train, "doc_id", "text")
-    score = score_bigram_lm(_docs(spark, [("s", "z q")]), "doc_id", "text", lm)
+    score = domain_relevance_weights(_docs(spark, [("s", "z q")]), train, "doc_id", "text")
     r = score.collect()[0]
     # unseen context and bigram: P = (0+1)/(0+V), V=2 -> nll = ln(2)
     assert r.n_bigrams == 1
-    assert r.avg_nll == round(math.log(2), 6)
+    assert r.target_nll == round(math.log(2), 6)
 
 
 def test_plan_is_jvm_side(spark):
@@ -73,8 +69,6 @@ def test_plan_is_jvm_side(spark):
 
 
 def test_domain_relevance_weights_separate_domains(spark):
-    from alaska_etl_spark.operators.lm import domain_relevance_weights
-
     rows = [(i, "alpha beta gamma delta epsilon zeta") for i in range(5)] + [
         (10 + i, "uno dos tres cuatro cinco seis") for i in range(5)
     ] + [(99, "alpha beta gamma delta epsilon zeta")]

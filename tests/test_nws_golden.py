@@ -6,11 +6,17 @@ tables: long ``(location, last_update, seq, attr, value)`` rows, a
 ``groupBy``/``pivot``, window forward fill and first month, ANSI casts
 and a ``row_number`` dedup. The driver-side pass must give the same
 rows (order-insensitive, exact values) and raise wherever that plan
-raised. CHANGES.md records how the file was generated. One case is
-re-recorded from the pass: that plan let a row with an unknown
-attribute widen a page, so ``unknown_attr_row_longer`` raised there;
-the pass skips such rows, and the case gives ``unknown_attr_row``'s
-rows.
+raised. CHANGES.md records how the file was generated. Three cases
+are re-recorded from the pass:
+
+- that plan let a row with an unknown attribute widen a page, so
+  ``unknown_attr_row_longer`` raised there; the pass skips such rows,
+  and the case gives ``unknown_attr_row``'s rows;
+- that plan restarted the year rollover for a page with its own
+  ``Last Update:`` stamp, so ``page_stamp_restarts_fill`` and
+  ``html_fixture_refresh`` landed a refreshed page's January hours a
+  year early; the pass anchors the rollover on the first month of the
+  table's first page, and those hours land in ``year + 1``.
 
 A duplicated attribute row within one page is not a golden case: the
 Spark pivot's ``first`` picked either copy. The pass keeps the first,
@@ -97,8 +103,8 @@ def golden_cases() -> dict[str, tuple[list[dict], int]]:
         hours.append((date, str(h)))
     cases["rollover_blank_dates"] = ([_table(hours=hours)], 2023)
 
-    # a second page with its own stamp restarts the fill and the first
-    # month: its January hours stay in ``year``
+    # a second page with its own stamp restarts the fill but keeps the
+    # table's first month: its January hours land in ``year + 1``
     tbl = _table(hours=[("12/31", "22"), ("", "23")])
     page2 = _table(hours=[("1/1", "0"), ("", "1")])["pages"][0]
     page2["last_update"] = "12/30/2023 16:00"

@@ -149,6 +149,10 @@ def test_mid_grid_refresh_stamps_pages_individually(spark):
     snap = forecast_long_df(spark, pivot_forecast(tables, year=2023))
     stamps = {r.last_update_nws for r in snap.select("last_update_nws").distinct().collect()}
     assert stamps == {datetime(2023, 12, 30, 15, 3), datetime(2023, 12, 30, 16, 7)}
+    # the refreshed page's January hours keep the table's Dec→Jan
+    # rollover: they land in 2024, after the page was issued
+    refreshed = snap.filter(snap.last_update_nws == datetime(2023, 12, 30, 16, 7)).collect()
+    assert refreshed and all(r.lst_datetime.year == 2024 for r in refreshed)
 
 
 def test_digital_url_carries_all_attribute_params():

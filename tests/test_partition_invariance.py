@@ -53,7 +53,7 @@ CASES = [
     # aggregate, the DSIR quantized-ln sums, and the robots
     # longest-prefix max-struct verdicts
     "q42_repeat_runs",
-    "q25_line_dedup",
+    "qs1_line_dedup",
     "q48_dsir_selection",
     "q14_robots_gate",
 ]

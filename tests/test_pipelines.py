@@ -10,7 +10,6 @@ import sys
 from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
 
 from alaska_etl_spark.pipelines import run_forecast_report, run_nws, run_uscrn, run_wind
 from alaska_etl_spark.plans.warehouse import Warehouse
@@ -96,48 +95,6 @@ def test_full_star_to_report(spark, wh, locations):
     assert r.mae_temp_f == 1.5
     assert r.bias_temp_f == 1.5
     assert r.lead_bucket == 0  # 17-18h lead → 0-24h bucket
-
-
-def test_prepare_training_data_end_to_end(spark):
-    """The whole training-data pipeline on a constructed corpus: quality
-    filter, exact dedup, near-dup family survivor, decontamination,
-    group-safe split, per-split packing — each stage's effect asserted,
-    and the result deterministic under repartitioning."""
-    from alaska_etl_spark.pipelines import prepare_training_data
-
-    long_a = " ".join(f"w{i}" for i in range(40))
-    near_a = " ".join(f"w{i}" for i in range(39)) + " zz"       # near-dup of long_a
-    long_b = " ".join(f"v{i}" for i in range(40))
-    bench_text = " ".join(f"bench{i}" for i in range(30))
-    contaminated = "intro " + " ".join(f"bench{i}" for i in range(10)) + " outro " + " ".join(f"u{i}" for i in range(25))
-    docs = [
-        (1, long_a),
-        (2, near_a),                 # dropped: near-dup family survivor is 1
-        (3, long_a),                 # dropped: exact dup of 1
-        (4, long_b),
-        (5, "too short"),            # dropped: under token floor
-        (6, ("rep " * 50).strip()),  # dropped: dup_token_ratio ~ 0.98
-        (7, contaminated),           # dropped: shares an 8-gram with benchmark
-        (8, " ".join(f"x{i}" for i in range(25))),
-    ]
-    ddf = spark.createDataFrame(docs, "doc_id bigint, text string")
-    bench = spark.createDataFrame([(100, bench_text)], "doc_id bigint, text string")
-
-    out = prepare_training_data(ddf, benchmark=bench, min_tokens=20)
-    rows = {r.doc_id: r for r in out.collect()}
-    assert set(rows) == {1, 4, 8}
-    assert all(r.split in ("train", "val", "test") for r in rows.values())
-    # packing is per split: within (split, shard), offsets prefix-sum
-    for r in rows.values():
-        assert r.seq_idx == r.start_offset // 4096
-
-    again = {
-        (r.doc_id, r.split, r.shard, r.start_offset)
-        for r in prepare_training_data(
-            ddf.repartition(5), benchmark=bench, min_tokens=20
-        ).collect()
-    }
-    assert again == {(r.doc_id, r.split, r.shard, r.start_offset) for r in rows.values()}
 
 
 def test_pipelines_import_loads_only_its_operators():

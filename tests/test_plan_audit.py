@@ -20,9 +20,9 @@ from alaska_etl_spark.plans.queries import QUERIES
 SF_DIR = "/root/testdata/sf0.001"
 
 #: queries whose construction runs real side-effect jobs (rollup
-#: refresh loops, pipeline checkpoints) — planned AND executed cheaply
+#: refresh loops) — planned AND executed cheaply
 #: at sf0.001, but worth listing so a hang is attributable.
-_HEAVY_BUILD = {"q73_training_pipeline", "q87_continuous_rollup"}
+_HEAVY_BUILD = {"q87_continuous_rollup"}
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

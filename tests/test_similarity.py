@@ -63,36 +63,6 @@ def test_ivf_never_returns_self(spark):
     assert all(r.neighbor_id != 0 for r in out)
 
 
-def test_persisted_ivf_index_prunes_partitions(spark, tmp_path):
-    """The serving path: build once, persist partitioned by cell, and a
-    search's scan carries a centroid_id partition filter — only probed
-    cell directories are read."""
-    from alaska_etl_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_search,
-        write_ivf_index,
-    )
-
-    c = _corpus(spark)
-    cents, assigned = build_ivf_index(c, ncells=4)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(assigned, path)
-    assert len(list((tmp_path / "ivf").glob("centroid_id=*"))) == 4
-
-    q = c.filter("vec_id = 0")
-    out = ivf_search(spark, cents, path, q, k=3, nprobe=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "centroid_id" in plan.split("PartitionFilters")[1][:200]  # pruned scan
-    rows = out.collect()
-    assert len(rows) == 3
-    assert all(r.neighbor_id < 100 for r in rows)  # cluster-A neighbors
-
-    # parity with the inline ivf_topk at same params
-    inline = {(r.rank, r.neighbor_id) for r in ivf_topk(c, q, k=3, ncells=4, nprobe=2).collect()}
-    persisted = {(r.rank, r.neighbor_id) for r in rows}
-    assert persisted == inline
-
-
 def test_ivf_build_is_shuffle_free(spark):
     """Scale pin (VERDICT r2 #3): the IVF build must not shuffle.
     Centroid picking plans as TakeOrderedAndProject (per-partition
@@ -175,163 +145,6 @@ def test_cosine_sim_null_for_zero_norm(spark):
     assert rows[1] is None and rows[2] is None
 
 
-def test_kmeans_refine_moves_centroids_to_cluster_means(spark):
-    """Two tight planted clusters, seed centroids off-center: one Lloyd
-    round lands each centroid on its cluster mean and assignment recall
-    becomes perfect."""
-    import numpy as np
-
-    from alaska_etl_spark.operators.similarity import assign_buckets, kmeans_refine
-
-    a = [[10.0 + dx, 0.0] for dx in range(5)]          # cluster around (12, 0)
-    b = [[0.0, 20.0 + dy] for dy in range(5)]          # cluster around (0, 22)
-    rows = [(i, v) for i, v in enumerate(a + b)]
-    corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    seeds = spark.createDataFrame(
-        [(0, [1.0, 0.1]), (1, [0.1, 1.0])], "centroid_id bigint, centroid array<double>"
-    )
-    refined = kmeans_refine(corpus, seeds, iters=2)
-    got = {r.centroid_id: r.centroid for r in refined.collect()}
-    assert np.allclose(got[0], [12.0, 0.0])
-    assert np.allclose(got[1], [0.0, 22.0])
-    assigned = assign_buckets(corpus, refined)
-    labels = {r.vec_id: r.centroid_id for r in assigned.collect()}
-    assert all(labels[i] == 0 for i in range(5))
-    assert all(labels[i] == 1 for i in range(5, 10))
-
-
-def test_kmeans_refine_keeps_empty_cells(spark):
-    from alaska_etl_spark.operators.similarity import kmeans_refine
-
-    corpus = spark.createDataFrame(
-        [(i, [1.0, 0.0]) for i in range(6)], "vec_id bigint, embedding array<double>"
-    )
-    seeds = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (7, [-5.0, -5.0])], "centroid_id bigint, centroid array<double>"
-    )
-    refined = {r.centroid_id: r.centroid for r in kmeans_refine(corpus, seeds, iters=1).collect()}
-    assert refined[0] == [1.0, 0.0]
-    assert refined[7] == [-5.0, -5.0]  # empty cell unchanged
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (ADC search over the compressed corpus)
-# ---------------------------------------------------------------------------
-
-
-def _pq_corpus(spark):
-    """Two well-separated 4-dim clusters (around e1 and e3) sized so
-    every subspace has structure for the m=2 codebooks to learn."""
-    rows = []
-    for i in range(20):
-        eps = (i % 5) * 0.01
-        rows.append((i, [1.0, eps, 0.0, 0.0]))          # cluster A
-        rows.append((100 + i, [0.0, 0.0, 1.0, eps]))    # cluster B
-    return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-
-
-def test_pq_train_requires_dim(spark):
-    import pytest as _pytest
-
-    from alaska_etl_spark.operators.similarity import pq_train
-
-    c = _pq_corpus(spark)
-    with _pytest.raises(ValueError, match="dim"):
-        pq_train(c, m=2, k=4)
-
-
-def test_pq_train_codebook_shape_and_determinism(spark):
-    import numpy as np
-
-    from alaska_etl_spark.operators.similarity import pq_train
-
-    c = _pq_corpus(spark)
-    b1 = pq_train(c, m=2, k=4, dim=4, iters=2)
-    b2 = pq_train(c, m=2, k=4, dim=4, iters=2)
-    assert b1.shape == (2, 4, 2)
-    assert np.array_equal(b1, b2)  # seeded from smallest ids → reproducible
-
-
-def test_pq_train_lloyd_reduces_quantization_error(spark):
-    """Trained codebooks must reconstruct the corpus at least as well as
-    the raw id-ordered seeds (Lloyd never increases total distortion)."""
-    import numpy as np
-
-    from alaska_etl_spark.operators.similarity import pq_train
-
-    c = _pq_corpus(spark)
-    vecs = np.stack(
-        [np.asarray(r.embedding) for r in c.orderBy("vec_id").collect()]
-    )
-
-    def distortion(books):
-        m, k, dsub = books.shape
-        xs = vecs.reshape(len(vecs), m, dsub)
-        total = 0.0
-        for j in range(m):
-            d2 = ((xs[:, j, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            total += d2.min(axis=1).sum()
-        return total
-
-    seed_books = pq_train(c, m=2, k=4, dim=4, iters=0)
-    trained = pq_train(c, m=2, k=4, dim=4, iters=2)
-    assert distortion(trained) <= distortion(seed_books) + 1e-12
-
-
-def test_pq_encode_codes_and_narrow_plan(spark):
-    """Codes are m ints in [0, k); encoding is a zero-shuffle narrow
-    projection (scan → ArrowEvalPython, no Exchange/Join/Window) — the
-    same scale pin as the IVF build."""
-    from alaska_etl_spark.operators.similarity import pq_encode, pq_train
-
-    c = _pq_corpus(spark)
-    books = pq_train(c, m=2, k=4, dim=4, iters=1)
-    coded = pq_encode(c, books)
-    plan = coded._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "ArrowEvalPython" in plan
-    assert "Join" not in plan and "Window" not in plan
-    rows = coded.collect()
-    assert len(rows) == 40
-    assert all(len(r.pq_code) == 2 for r in rows)
-    assert all(0 <= code < 4 for r in rows for code in r.pq_code)
-    # identical vectors quantize to identical code words
-    by_vec = {}
-    for r in c.collect():
-        by_vec.setdefault(tuple(r.embedding), set())
-    coded_by_id = {r.vec_id: tuple(r.pq_code) for r in rows}
-    for r in c.collect():
-        by_vec[tuple(r.embedding)].add(coded_by_id[r.vec_id])
-    assert all(len(codes) == 1 for codes in by_vec.values())
-
-
-def test_pq_topk_cluster_recall_and_shape(spark):
-    """ADC search from the compressed corpus keeps cluster structure:
-    every top-3 neighbor of a cluster-A query is a cluster-A member,
-    self is excluded, ranks are 1..k ascending by adist."""
-    from alaska_etl_spark.operators.similarity import pq_encode, pq_topk, pq_train
-
-    c = _pq_corpus(spark)
-    books = pq_train(c, m=2, k=4, dim=4, iters=2)
-    codes = pq_encode(c, books)
-    q = c.filter("vec_id in (0, 100)")
-    out = pq_topk(codes, q, books, k=3).collect()
-    assert len(out) == 6
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.query_id, []).append(r)
-    for qid, rows in by_q.items():
-        rows.sort(key=lambda r: r.rank)
-        assert [r.rank for r in rows] == [1, 2, 3]
-        assert all(r.neighbor_id != qid for r in rows)
-        adists = [r.adist for r in rows]
-        assert adists == sorted(adists)
-        if qid == 0:
-            assert all(r.neighbor_id < 100 for r in rows)
-        else:
-            assert all(r.neighbor_id >= 100 for r in rows)
-
-
 def test_ivf_topk_single_pass_plan(spark):
     """Scale pin for the ad-hoc IVF path: ONE narrow MapInPandas over
     the corpus and ONE Exchange (the candidate top-k window) — no join,
@@ -344,36 +157,6 @@ def test_ivf_topk_single_pass_plan(spark):
     assert plan.count("ArrowEvalPython") == 0
     assert "Join" not in plan
     assert plan.count("Exchange") == 1
-    assert "WindowGroupLimit" in plan  # partial top-k stays map-side
-
-
-def test_ivfpq_cluster_recall_shape_and_plan(spark):
-    """IVF-PQ composition: probed-cell candidates only, ADC order kept
-    within clusters (same purity contract as pq_topk — positional
-    parity with the exact path is not promised under residual
-    quantization), one Exchange for the top-k window."""
-    from alaska_etl_spark.operators.similarity import ivfpq_topk
-
-    c = _pq_corpus(spark)
-    q = c.filter("vec_id in (0, 100)")
-    out_df = ivfpq_topk(c, q, ncells=4, nprobe=2, m=2, kcode=4, dim=4, iters=1, k=3)
-    out = out_df.collect()
-    assert len(out) == 6
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.query_id, []).append(r)
-    for qid, rows in by_q.items():
-        rows.sort(key=lambda r: r.rank)
-        assert [r.rank for r in rows] == [1, 2, 3]
-        assert all(r.neighbor_id != qid for r in rows)
-        adists = [r.adist for r in rows]
-        assert adists == sorted(adists)
-        if qid == 0:
-            assert all(r.neighbor_id < 100 for r in rows)
-        else:
-            assert all(r.neighbor_id >= 100 for r in rows)
-    plan = out_df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
     assert "WindowGroupLimit" in plan  # partial top-k stays map-side
 
 
@@ -434,79 +217,6 @@ def test_margin_bitext_pairs(spark):
     assert 0 in strict and 2 not in strict
 
 
-def test_cosine_topk_arrow_matches_window_form(spark):
-    """cosine_topk_arrow (per-batch matmul + candidate window) is
-    bit-identical to cosine_topk (broadcast join + full window) — the
-    per-batch top-k prune is exact under the shared total order."""
-    import random
-
-    from alaska_etl_spark.operators.similarity import cosine_topk, cosine_topk_arrow
-
-    rng = random.Random(7)
-    rows = [
-        (i, [round(rng.uniform(-1, 1), 3) for _ in range(16)]) for i in range(200)
-    ]
-    corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    queries = corpus.filter("vec_id % 10 = 0")
-    for include_self in (False, True):
-        a = {
-            (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-            for r in cosine_topk_arrow(
-                corpus, queries, k=5, include_self=include_self
-            ).collect()
-        }
-        b = {
-            (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-            for r in cosine_topk(
-                corpus, queries, k=5, include_self=include_self
-            ).collect()
-        }
-        assert a == b, include_self
-
-
-# --- cosine_topk_arrow edge contracts (ADVICE r5) ---------------------------
-
-
-def test_cosine_topk_arrow_query_side_guards(spark):
-    import pytest
-
-    from alaska_etl_spark.operators.similarity import cosine_topk_arrow
-
-    corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id bigint, embedding array<double>"
-    )
-    # empty query side: typed empty result, no jobs
-    empty_q = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
-    out = cosine_topk_arrow(corpus, empty_q)
-    assert out.count() == 0
-    assert out.schema.simpleString() == (
-        "struct<query_id:bigint,neighbor_id:bigint,cosine:double,rank:int>"
-    )
-    # mixed null query: zero-vector substitution -> cosine 0.0 everywhere
-    q = spark.createDataFrame(
-        [(8, [1.0, 0.0]), (9, None)], "vec_id bigint, embedding array<double>"
-    )
-    rows = {
-        (r.query_id, r.rank): r for r in cosine_topk_arrow(corpus, q, k=2).collect()
-    }
-    assert rows[(9, 1)].cosine == 0.0 and rows[(9, 2)].cosine == 0.0
-    assert rows[(8, 1)].neighbor_id == 1 and rows[(8, 1)].cosine == 1.0
-    # int32 ids preserved in the output schema
-    c32 = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id int, embedding array<double>")
-    q32 = spark.createDataFrame([(2, [1.0, 0.0])], "vec_id int, embedding array<double>")
-    out32 = cosine_topk_arrow(c32, q32, k=1)
-    assert "query_id:int,neighbor_id:int" in out32.schema.simpleString()
-    # ragged query dims / non-integral ids raise
-    ragged = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0])], "vec_id bigint, embedding array<double>"
-    )
-    with pytest.raises(ValueError, match="ragged"):
-        cosine_topk_arrow(corpus, ragged)
-    sid = spark.createDataFrame([("a", [1.0, 0.0])], "vec_id string, embedding array<double>")
-    with pytest.raises(ValueError, match="integral"):
-        cosine_topk_arrow(corpus, sid)
-
-
 def test_arrow_paths_enforce_driver_collect_cap(spark):
     """The driver-collect contract is enforced (VERDICT r6 #2): a
     query/x side past max_query_rows raises pointing at ivf_topk
@@ -516,61 +226,30 @@ def test_arrow_paths_enforce_driver_collect_cap(spark):
 
     from alaska_etl_spark.operators.similarity import (
         bitext_topk_pair,
-        cosine_topk_arrow,
         margin_bitext_pairs,
     )
 
     rows = [(i, [1.0 * (i % 3), 1.0]) for i in range(12)]
     corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     with pytest.raises(ValueError, match="ivf_topk"):
-        cosine_topk_arrow(corpus, corpus, max_query_rows=5)
-    with pytest.raises(ValueError, match="ivf_topk"):
         bitext_topk_pair(corpus, corpus, max_query_rows=5)
     with pytest.raises(ValueError, match="ivf_topk"):
         margin_bitext_pairs(corpus, corpus, max_query_rows=5).collect()
     # at-the-cap passes and is identical to the unguarded default
-    q = corpus.limit(5)
+    x = corpus.limit(5)
     base = {
         (r.query_id, r.rank): r.neighbor_id
-        for r in cosine_topk_arrow(corpus, q, k=3).collect()
+        for r in bitext_topk_pair(x, corpus, k=3)[0].collect()
     }
     capped = {
         (r.query_id, r.rank): r.neighbor_id
-        for r in cosine_topk_arrow(corpus, q, k=3, max_query_rows=5).collect()
+        for r in bitext_topk_pair(x, corpus, k=3, max_query_rows=5)[0].collect()
     }
     assert base == capped and len(base) > 0
 
 
-def test_cosine_topk_arrow_matches_cosine_topk_exactly(spark):
-    """The Arrow-matmul form and the broadcast-join form share one
-    rounding protocol (half-away-from-zero at 4dp, ADVICE r5): on a
-    deterministic varied fixture the two return IDENTICAL
-    (query, rank) -> (neighbor, cosine) maps."""
-    from alaska_etl_spark.operators.similarity import cosine_topk, cosine_topk_arrow
-
-    rows = []
-    state = 7
-    for i in range(40):
-        vec = []
-        for _ in range(8):
-            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-            vec.append(((state >> 20) % 2001) / 1000.0 - 1.0)
-        rows.append((i, vec))
-    corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    queries = corpus.limit(6)
-    a = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk(corpus, queries, k=5).collect()
-    }
-    b = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk_arrow(corpus, queries, k=5).collect()
-    }
-    assert a == b
-
-
 def test_kmeans_replicable_empty_cell_keeps_previous_centroid(spark):
-    from alaska_etl_spark.operators.similarity import kmeans_replicable
+    from alaska_etl_spark.operators.similarity import _lloyd_cents
 
     # v1 duplicates v0: assigning v1 ties between c0 (=v0) and c1 (=v1)
     # at rounded cosine 1.0 and breaks to the SMALLEST centroid_id, so
@@ -579,10 +258,7 @@ def test_kmeans_replicable_empty_cell_keeps_previous_centroid(spark):
         [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])],
         "vec_id bigint, embedding array<double>",
     )
-    cents = {
-        r.centroid_id: list(r.centroid)
-        for r in kmeans_replicable(corpus, k=2, iters=2).collect()
-    }
+    cents = _lloyd_cents(corpus, k=2, iters=2)
     # iteration 1: ALL vectors tie-break into cell 0 (v2's cosine is 0
     # to both centroids), so cell 1 goes EMPTY and must keep its init
     # centroid [1,0] — which is exactly what lets iteration 2 win v0/v1

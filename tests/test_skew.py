@@ -1,11 +1,11 @@
-"""Salted skew mitigation: two-phase aggregates and replicated joins
-must be value-identical to their plain equivalents on skewed data."""
+"""Salted skew mitigation: two-phase aggregates must be value-identical
+to their plain equivalents on skewed data."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from alaska_etl_spark.operators.skew import salted_aggregate, salted_broadcast_join
+from alaska_etl_spark.operators.skew import salted_aggregate
 
 
 def _skewed(spark):
@@ -42,20 +42,6 @@ def test_salted_aggregate_rejects_nondecomposable(spark):
 
     with pytest.raises(ValueError, match="not decomposable"):
         salted_aggregate(_skewed(spark), ["k"], {"m": ("median", "v")})
-
-
-def test_salted_broadcast_join_matches_plain(spark):
-    big = _skewed(spark)
-    dim = spark.createDataFrame(
-        [("hot", 1), ("cold0", 2), ("cold3", 3)], "k string, tag bigint"
-    )
-    got = salted_broadcast_join(big, dim, ["k"], n_salts=4)
-    want = big.join(dim, ["k"])
-    assert got.count() == want.count()
-    g = got.groupBy("k", "tag").count().collect()
-    w = want.groupBy("k", "tag").count().collect()
-    assert sorted(map(str, g)) == sorted(map(str, w))
-    assert "_salt" not in got.columns
 
 
 def test_key_skew_report_uniform_and_concentrated(spark):

@@ -70,15 +70,6 @@ def test_winnowing_short_doc_empty(spark):
     assert T.winnowing_fingerprints(df, "doc_id", "text", k=4, w=5).count() == 0
 
 
-def test_text_profile_columns(spark):
-    df = spark.createDataFrame([(1, "some text here")], "doc_id bigint, text string")
-    out = T.text_profile(df)
-    for col in ["n_tokens", "n_tokens_bpe", "stopword_ratio", "punct_ratio",
-                "mean_word_len", "quality", "lang_pred", "fingerprint"]:
-        assert col in out.columns
-    assert out.count() == 1
-
-
 def test_repetition_signals_exact(spark):
     from alaska_etl_spark.operators.text import repetition_signals
 

@@ -61,7 +61,7 @@ def test_q45_distribution_accounts_for_every_customer(spark):
 
 @pytest.mark.parametrize(
     "name",
-    ["qe5_priority_shipping", "q62_promo_revenue", "qt5_volume_shipping", "qe7_idle_customers"],
+    ["qe5_priority_shipping", "q62_promo_revenue", "q48_volume_shipping", "qe7_idle_customers"],
 )
 def test_smoke_runs_and_returns(spark, name):
     rows = QUERIES[name](spark, SF).collect()

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 from alaska_etl_spark.operators.urls import (
     blocklist_audit,
-    blocklist_filter,
     canonical_url,
     domain_rollup,
     host_suffix_chain,
@@ -178,7 +177,7 @@ def test_blocklist_audit_and_filter(spark):
             (3, "https://cdn.site4.com/r"),
             (4, "https://www.site4.com/s"),    # NOT under cdn.site4.com
             (5, "https://other.net/t"),
-            (6, "junk"),                        # kept by filter, invisible to audit
+            (6, "junk"),                        # invisible to audit
         ],
     )
     rules = spark.createDataFrame(
@@ -194,8 +193,6 @@ def test_blocklist_audit_and_filter(spark):
     # ordered output: _total leads (underscore sorts first)
     first = blocklist_audit(df, "id", "url", rules).collect()[0]
     assert first["rule"] == "_total"
-    kept = sorted(r["id"] for r in blocklist_filter(df, "id", "url", rules).collect())
-    assert kept == [4, 5, 6]
 
 
 def test_path_prefix_chain_and_mixed_kind_audit(spark):
@@ -228,8 +225,6 @@ def test_path_prefix_chain_and_mixed_kind_audit(spark):
     assert audit["p1"]["n_pages"] == 1          # only doc 1
     assert audit["d1"]["n_pages"] == 1          # doc 5
     assert audit["_total"]["n_pages"] == 2
-    kept = sorted(r["id"] for r in blocklist_filter(docs, "id", "url", rules).collect())
-    assert kept == [2, 3, 4]
 
 
 def test_parse_robots_groups_and_agent_resolution(spark):

@@ -1,5 +1,5 @@
-"""Time the DuckDB oracle SQL for every ORACLED bench-headline query at
-the same sf — the honest single-node comparison point the reference
+"""Time the DuckDB oracle SQL for every bench-headline query at the
+same sf — the honest single-node comparison point the reference
 repo never published (BASELINE.md: no numbers).
 
 Interpretation notes, so nobody over-reads the table:
@@ -10,9 +10,6 @@ Interpretation notes, so nobody over-reads the table:
   plans shuffle/broadcast exactly so they still work when the same
   query runs on 100 TB across 1000 executors; DuckDB's stop at one
   node).
-- Rows-only queries (the few engine-defined approximations without
-  exact SQL twins) are skipped — no oracle to time; q29/q30/q31/q53
-  all carry exact oracles now and ARE timed.
 - Timing is end-to-end per statement (parse + plan + execute + fetch),
   matching bench.py's collect-inclusive timing.
 
@@ -55,14 +52,9 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
-    skipped = []
     for name in HEADLINE:
-        sql = ORACLES.get(name)
-        if sql is None:
-            skipped.append(name)
-            continue
         t0 = time.perf_counter()
-        rows[name] = len(con.execute(sql).fetchall())
+        rows[name] = len(con.execute(ORACLES[name]).fetchall())
         timings[name] = round(time.perf_counter() - t0, 3)
 
     # The heavy lane gets the SAME oracle pairing as the headline
@@ -71,12 +63,8 @@ def main() -> None:
     # prose) — one cold DuckDB run each, recorded under "heavy".
     heavy_t: dict[str, float] = {}
     for name in HEAVY:
-        sql = ORACLES.get(name)
-        if sql is None:
-            skipped.append(name)
-            continue
         t0 = time.perf_counter()
-        rows[name] = len(con.execute(sql).fetchall())
+        rows[name] = len(con.execute(ORACLES[name]).fetchall())
         heavy_t[name] = round(time.perf_counter() - t0, 3)
 
     line = {
@@ -86,7 +74,6 @@ def main() -> None:
         "queries": timings,
         "heavy": heavy_t,
         "rows": rows,
-        "skipped_no_oracle": skipped,
         "sf_dir": sf_dir,
         "loadavg": loadavg,
     }

@@ -154,7 +154,7 @@ QUERIES_UNDER_TEST = [
     # copy offsets are multiples of 4 so each copy injects the same
     # doc_id%4 repeat shapes — true run set exactly 10x, diagonal
     # windows at document grain.
-    "q25_line_dedup",
+    "qs1_line_dedup",
     "q42_repeat_runs",
 ]
 
